@@ -9,7 +9,10 @@ import org.apache.spark.sql.SparkSession
   * projections that the engine is supposed to be computing).
   *
   * Args (optional): query names to run — default all of
-  * SparkEntry.queries. Env: SPARK_GRAFT_SF_DIR (data dir),
+  * SparkEntry.queries; the complete record lands in [[recordFile]], so
+  * only a full-registry run replaces BENCH_LOCAL.json. A query that
+  * throws is listed under `failed`, left out of the total, and fails
+  * the gate. Env: SPARK_GRAFT_SF_DIR (data dir),
   * SPARK_GRAFT_CPUS (local[N] + shuffle partitions, default 32),
   * SPARK_GRAFT_EXPLAIN=1 (print the formatted plan per query to stderr),
   * SPARK_GRAFT_RESTART_EVERY (stop + rebuild the SparkSession every N
@@ -19,13 +22,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   private def makeSession(cpus: String, sfDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // untimed warmup: session/executor init, the noop-sink classload, AND
     // first-execution JIT of the codepaths the query set leans on (regex,
     // split/explode, hash aggregate, window, sort) land here instead of
@@ -191,18 +188,31 @@ object Bench {
       .map(_.group(1).toDouble)
   }
 
-  /** Run one query through the noop sink; returns wall seconds. Drops
-    * per-query persisted intermediates (shingle indexes, SCD2 deltas) so
-    * queries are measured independently: clearCache only covers
-    * catalog-cached plans; localCheckpoint blocks register as persistent
-    * RDDs and otherwise accumulate until the ContextCleaner's next
-    * GC-driven sweep — measured: they inflate later queries ~4× across an
-    * 87-query run. The explicit GC lets the cleaner reap everything the
-    * dropped plans still pin. */
-  private def runOne(spark: SparkSession, name: String, sfDir: String,
-                     explain: Boolean,
-                     setupFailed: scala.collection.mutable.Set[String] = null)
-      : Double = {
+  /** Where a run's complete record goes: a subset run (query-name args)
+    * must not overwrite the full-registry record. */
+  private[graft] def recordFile(args: Seq[String]): String =
+    if (args.isEmpty) "BENCH_LOCAL.json" else "BENCH_SUBSET.json"
+
+  /** The run's final verdict: a query that threw fails the run
+    * outright — no contention, draw or missing-baseline label applies
+    * to a crash. */
+  private[graft] def stamp(gate: String, failed: Iterable[String]): String =
+    if (failed.nonEmpty) "fail" else gate
+
+  /** Run one query through the noop sink; returns wall seconds, or None
+    * if the query threw — a crash is not a sample (a query that dies in
+    * 0.2 s must not read as a speed-up). Drops per-query persisted
+    * intermediates (shingle indexes, SCD2 deltas) so queries are
+    * measured independently: clearCache only covers catalog-cached
+    * plans; localCheckpoint blocks register as persistent RDDs and
+    * otherwise accumulate until the ContextCleaner's next GC-driven
+    * sweep — measured: they inflate later queries ~4× across an 87-query
+    * run. The explicit GC lets the cleaner reap everything the dropped
+    * plans still pin. */
+  private[graft] def runOne(spark: SparkSession, name: String,
+      sfDir: String, explain: Boolean,
+      setupFailed: scala.collection.mutable.Set[String] = null)
+      : Option[Double] = {
     // untimed setup (VERDICT r12 #3): indexed-search queries build their
     // persisted index here so the timed sample below is search-only on
     // cold and warm scratch alike
@@ -216,7 +226,7 @@ object Bench {
       if (setupFailed != null) setupFailed += name
     }
     val t0 = System.nanoTime()
-    try {
+    val ok = try {
       val df = SparkEntry.queries(name)(spark, sfDir)
       if (explain) {
         System.err.println(s"===== $name =====")
@@ -224,27 +234,31 @@ object Bench {
           org.apache.spark.sql.execution.FormattedMode))
       }
       df.write.format("noop").mode("overwrite").save()
+      true
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      false
     }
     val elapsed = (System.nanoTime() - t0) / 1e9
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
     System.gc()
-    elapsed
+    if (ok) Some(elapsed) else None
   }
 
   /** The long artifact line. `rerun` (ADVICE r9: don't silently mix
     * sampling policies) records the adjudication's SECOND sample for every
     * re-run query, so a published per-query value can be told apart as
     * min(first, second) vs single-sample — and a future baseline recorded
-    * from such a line can account for it. */
-  private def longLine(results: Seq[(String, Double)], sfDir: String,
+    * from such a line can account for it. `results` holds the queries
+    * that completed; those that threw are listed in `failed` only, so
+    * they count neither in `queries` nor in `total`. */
+  private[graft] def longLine(results: Seq[(String, Double)], sfDir: String,
       rerun: Map[String, Double] = Map.empty,
       probe: Double = -1.0, env: String = "unknown",
       diag: String = "{}", nPairs: Map[String, Long] = Map.empty,
-      setupFailed: Seq[String] = Nil): String = {
+      setupFailed: Seq[String] = Nil, failed: Seq[String] = Nil): String = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val rr = rerun.toSeq.sortBy(_._1)
@@ -257,9 +271,9 @@ object Bench {
       .filter { case (q, c) => results.exists(_._1 == q) && nPairs.contains(c) }
       .map { case (q, c) => "\"" + q + "\":\"" + c + "\"" }
       .mkString("{", ",", "}")
-    val sfj = setupFailed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jsonList(ns: Seq[String]) = ns.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rerun":$rr,"n_pairs":$np,"pair_bounded":$pb,"setup_failed":$sfj,"probe":$probe,"env":"$env","diag":$diag,"verify":${verifyDigest()},"sf":"$sfDir"}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rerun":$rr,"n_pairs":$np,"pair_bounded":$pb,"setup_failed":${jsonList(setupFailed)},"failed":${jsonList(failed)},"probe":$probe,"env":"$env","diag":$diag,"verify":${verifyDigest()},"sf":"$sfDir"}"""
   }
 
   /** Feed a bench line to tools/benchgate.py; returns (verdict, names that
@@ -350,12 +364,18 @@ object Bench {
             "proceeding; the artifact stamps contended)" else ""))
     }
     val setupFailed = scala.collection.mutable.Set.empty[String]
-    var results = names.zipWithIndex.map { case (name, i) =>
+    val failed = scala.collection.mutable.Set.empty[String]
+    def timed(name: String): Option[(String, Double)] = {
+      val t = runOne(spark, name, sfDir, explain, setupFailed)
+      if (t.isEmpty) failed += name
+      t.map(name -> _)
+    }
+    var results = names.zipWithIndex.flatMap { case (name, i) =>
       if (i > 0 && restartEvery > 0 && i % restartEvery == 0) {
         restart()
         probeMax = math.max(probeMax, calibrationProbe(spark))
       }
-      name -> runOne(spark, name, sfDir, explain, setupFailed)
+      timed(name)
     }
     // untimed draw-volume counters (VERDICT r13 #1b): one value per
     // counter referenced by a pair-bounded query in this run; the gate
@@ -383,20 +403,19 @@ object Bench {
     // the gate; a contention artifact does not.
     var (gate, breached) =
       runGate(longLine(results, sfDir, nPairs = nPairs,
-        setupFailed = setupFailed.toSeq))
+        setupFailed = setupFailed.toSeq, failed = failed.toSeq))
     var second = Map.empty[String, Double]
     if (gate == "fail" && breached.nonEmpty && !noRerun) {
       println(s"[benchgate] re-running ${breached.size} breaching " +
         "queries on a fresh session for a second sample")
       restart()
       probeMax = math.max(probeMax, calibrationProbe(spark))
-      second = breached.map(n =>
-        n -> runOne(spark, n, sfDir, explain, setupFailed)).toMap
-      results = results.map { case (n, t) =>
+      second = breached.flatMap(timed).toMap
+      results = results.filterNot(r => failed(r._1)).map { case (n, t) =>
         n -> math.min(t, second.getOrElse(n, t))
       }
       val g2 = runGate(longLine(results, sfDir, second, nPairs = nPairs,
-        setupFailed = setupFailed.toSeq))
+        setupFailed = setupFailed.toSeq, failed = failed.toSeq))
       gate = g2._1
       breached = g2._2
     }
@@ -421,19 +440,18 @@ object Bench {
         f"${probeEnvelope().getOrElse(-1.0)}%.2fs -> ${envOf(p2)}")
       if (envOf(p2) == "ok") {
         quietAdjudicated = true
-        val third = breached.sorted
-          .map(n => n -> runOne(spark, n, sfDir, explain, setupFailed)).toMap
+        val third = breached.sorted.flatMap(timed).toMap
         // fold into the adjudication-sample map (best sample wins) so
         // the artifact records that these values are multi-sample
         second = (second.keySet ++ third.keySet).map { n =>
           n -> math.min(second.getOrElse(n, Double.MaxValue),
             third.getOrElse(n, Double.MaxValue))
         }.toMap
-        results = results.map { case (n, t) =>
+        results = results.filterNot(r => failed(r._1)).map { case (n, t) =>
           n -> math.min(t, third.getOrElse(n, t))
         }
         val g3 = runGate(longLine(results, sfDir, second, nPairs = nPairs,
-          setupFailed = setupFailed.toSeq))
+          setupFailed = setupFailed.toSeq, failed = failed.toSeq))
         gate = g3._1
         breached = g3._2
         if (gate == "fail")
@@ -460,6 +478,7 @@ object Bench {
         restart()
         val diagnosed = breached.sorted.map { n =>
           val tSmall = runOne(spark, n, smallDir, explain = false)
+            .getOrElse(Double.NaN)
           val tBig = results.toMap.getOrElse(n, Double.NaN)
           val ratio = if (tSmall > 0) tBig / tSmall else Double.NaN
           // 10x data and up to 1.5x superlinearity allowance; small-sf
@@ -469,7 +488,8 @@ object Bench {
             f" = $ratio%.1fx -> ${if (drawShift) "draw_shift" else "scale-shaped regression"}")
           // Locale.ROOT: the f-interpolator is default-locale-sensitive
           // and a comma-decimal locale would corrupt the artifact line
-          val frag = "\"" + n + "\":{\"sf001\":" + tSmall + ",\"ratio\":" +
+          val frag = "\"" + n + "\":{\"sf001\":" +
+            (if (tSmall.isNaN) "null" else tSmall) + ",\"ratio\":" +
             (if (ratio.isNaN) "null"
              else String.format(java.util.Locale.ROOT, "%.2f",
                Double.box(ratio))) +
@@ -503,8 +523,12 @@ object Bench {
         "fail-draw: heavier data, not a plan regression")
       gate = "fail-draw"
     }
+    if (failed.nonEmpty)
+      println("[bench] FAILED (left out of total): " +
+        failed.toSeq.sorted.mkString(", "))
+    gate = stamp(gate, failed)
     val fullLine = longLine(results, sfDir, second, probeMax, env, diag,
-      nPairs, setupFailed.toSeq)
+      nPairs, setupFailed.toSeq, failed.toSeq)
     println(fullLine)
     // the driver's BENCH_r*.json keeps only a truncated tail of the long
     // line (~60 of 227 queries survive), so ALSO persist the complete
@@ -515,13 +539,14 @@ object Bench {
     // (ADVICE r14: a string-compare against "fail" must not silently
     // read an adjudicated failure as a pass)
     val gateFail = gate.startsWith("fail")
+    val record = recordFile(args.toSeq)
     try {
       val rec = fullLine.dropRight(1) +
         s""","gate":"$gate","gate_fail":$gateFail}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
+      java.nio.file.Files.write(java.nio.file.Paths.get(record),
         (rec + "\n").getBytes("UTF-8"))
     } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] BENCH_LOCAL.json write failed: $e")
+      System.err.println(s"[bench] $record write failed: $e")
     }
     // the per-query line above has outgrown the driver's tail window (the
     // sbt [success] footer truncates it from the front → BENCH_r1-r4 all
@@ -530,7 +555,7 @@ object Bench {
     // carrying the gate verdict so it reaches the round artifact even if
     // the [benchgate] lines scroll out of the window
     val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"gate":"$gate","gate_fail":$gateFail,"probe":$probeMax,"env":"$env","verify":${verifyDigest()},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":${failed.size},"gate":"$gate","gate_fail":$gateFail,"probe":$probeMax,"env":"$env","verify":${verifyDigest()},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.PlanExpression
 import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, SortExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExecBase
+
+import graft.queries.{QuerySpec, Smell}
 
 /** Whole-registry physical-plan sweep — the standing form of the audit
   * the per-round verdicts run by hand ("whole-registry explain sweep
@@ -91,79 +93,51 @@ object PlanSweep {
     Smells(cartesian, globalWindows, unlimitedSorts(plan, underLimit = false))
   }
 
-  /** Smell kinds, used as the second half of the adjudication key. */
-  val KindWindow = "global-window"
-  val KindSort = "global-sort-no-limit"
-
-  /** Warnings already adjudicated bounded ((query, smell-kind) → why).
-    * A smell NOT in this map prints as NEW — the sweep is a regression
-    * detector for plan funnels, and a fresh unreviewed global window
-    * must not blend into a known list. Keyed by KIND as well as query
-    * (ADVICE r16): a query adjudicated for a bounded window must not
-    * also silently mask a fresh unlimited sort on the same query.
-    * Adjudications live here (next to the detector, reviewed with it)
-    * and are mirrored in SCALE.md's r16 plan-sweep note. */
-  val adjudicated: Map[(String, String), String] = Map(
-    ("q_corpus_report_kmv", KindWindow) ->
-      "rollup windows over kept KMV states (sources×k rows)",
-    ("q_eval_auc", KindWindow) ->
-      "cumulative window over the ≤10⁴+1-value quality-score lattice",
-    ("q_eval_roc", KindWindow) ->
-      "cumulative window over the ≤10⁴+1-value quality-score lattice",
-    ("q_sample_weighted", KindWindow) ->
-      "window over ≤1024 per-bucket totals; the corpus prefix sum is bucket-partitioned",
-    ("q_stats_gini", KindWindow) -> "window over per-source totals (facet-sized)",
-    ("q_sql_q11", KindSort) -> "TPC-H presentation ORDER BY over the value-filtered group frame",
-    ("q_sql_q20", KindSort) -> "TPC-H presentation ORDER BY over the supplier-bounded result",
-    ("q_sql_q21", KindSort) -> "TPC-H presentation ORDER BY over the supplier-bounded result")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     spark.sparkContext.setLogLevel("ERROR")
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
+    val specs = SparkEntry.registry.sortBy(_.name)
+      .filter(q => only.isEmpty || only(q.name))
     var products = List.empty[String]
-    var globalWindows = List.empty[String]
-    var sorts = List.empty[String]
+    var globalWindows = List.empty[QuerySpec]
+    var sorts = List.empty[QuerySpec]
     var failed = List.empty[String]
-    names.foreach { n =>
+    specs.foreach { q =>
       try {
-        val s = smellsOf(SparkEntry.queries(n)(spark, sfDir))
-        if (s.cartesian > 0) products ::= n
-        if (s.globalWindows > 0) globalWindows ::= n
-        if (s.unlimitedSorts > 0) sorts ::= n
+        val s = smellsOf(q.build(spark, sfDir))
+        if (s.cartesian > 0) products ::= q.name
+        if (s.globalWindows > 0) globalWindows ::= q
+        if (s.unlimitedSorts > 0) sorts ::= q
       } catch {
         case e: Throwable =>
-          failed ::= s"$n: ${e.getClass.getSimpleName} ${e.getMessage}"
+          failed ::= s"${q.name}: ${e.getClass.getSimpleName} ${e.getMessage}"
       }
     }
-    println(s"swept ${names.size} queries at $sfDir")
+    println(s"swept ${specs.size} queries at $sfDir")
     if (products.nonEmpty)
       println(s"CARTESIAN PRODUCT (fail): ${products.sorted.mkString(", ")}")
-    def report(kind: String, hint: String, hits: List[String]): List[String] = {
-      // only THIS kind's adjudications apply — a query adjudicated for a
-      // bounded window still reports a fresh sort as NEW (ADVICE r16)
-      val (known, fresh) = hits.sorted.partition(n => adjudicated.contains((n, kind)))
+    // a warning the query's spec adjudicates bounded (QuerySpec.planOk)
+    // prints with its reason; any other prints as NEW — the sweep is a
+    // regression detector for plan funnels, and a fresh unreviewed global
+    // window must not blend into a known list. Only THIS kind's
+    // adjudications apply (ADVICE r16): a query adjudicated for a
+    // bounded window still reports a fresh sort.
+    def report(kind: Smell, hint: String, hits: List[QuerySpec]): List[String] = {
+      val (known, fresh) = hits.sortBy(_.name).partition(_.planOk.contains(kind))
       if (known.nonEmpty)
-        println(s"$kind (adjudicated bounded): " + known.map(n =>
-          s"$n [${adjudicated((n, kind))}]").mkString("; "))
+        println(s"${kind.label} (adjudicated bounded): " + known.map(q =>
+          s"${q.name} [${q.planOk(kind)}]").mkString("; "))
       if (fresh.nonEmpty)
-        println(s"$kind NEW ($hint): ${fresh.mkString(", ")} — adjudicate " +
-          "and add to PlanSweep.adjudicated, or fix the funnel")
-      fresh
+        println(s"${kind.label} NEW ($hint): ${fresh.map(_.name).mkString(", ")}" +
+          " — adjudicate in the query's QuerySpec.planOk, or fix the funnel")
+      fresh.map(_.name)
     }
-    val newWindows = report(KindWindow,
+    val newWindows = report(Smell.GlobalWindow,
       "fine only on driver-bounded frames", globalWindows)
-    val newSorts = report(KindSort,
+    val newSorts = report(Smell.UnlimitedSort,
       "fine when the ordering is the product or the frame is bounded", sorts)
     failed.sorted.foreach(f => println(s"BUILD FAILED: $f"))
     if (products.isEmpty && failed.isEmpty &&

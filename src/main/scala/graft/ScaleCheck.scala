@@ -193,13 +193,7 @@ object ScaleCheck {
   }
 
   private def makeSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Sessions.local(cpus)
     // same untimed warmup as Bench (r13): without it the FIRST query of
     // each pass absorbs session+HOF JIT (measured: q_sample_stratified
     // read 7.7 s at sf0.1 and 1.2 s at sf1 purely from run order)

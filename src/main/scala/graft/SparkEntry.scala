@@ -1,14 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+import graft.queries._
+
+/** The engine's public query contract — see SURVEY.md §7.
   *
-  * `queries` aggregates every operator exposed by the engine; each entry
-  * has (where SQL-expressible) a DuckDB oracle in `oracleSql` with
-  * identical column names/aliases. Query registries live next to the code
-  * they exercise (graft.queries.*, graft.ext.*).
+  * [[registry]] is every operator exposed by the engine, one
+  * [[QuerySpec]] per query; each family object next to the code it
+  * exercises (graft.queries.*) lists its own. The maps below are views of
+  * it under the names Verify, Bench and tools/benchgate.py read.
   */
 object SparkEntry {
 
@@ -16,44 +17,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-    graft.queries.Scd2Queries.queries ++
-    graft.queries.ExtQueries.queries ++
-    graft.queries.ScaleQueries.queries ++
-    graft.queries.PipelineQueries.queries ++
-    graft.queries.PollQueries.queries ++
-    graft.queries.QualityQueries.queries
+  /** All registered queries; a duplicate name fails here. */
+  lazy val registry: Seq[QuerySpec] = QuerySpec.registry(
+    CoreQueries.specs ++ Scd2Queries.specs ++ ExtQueries.specs ++
+      ScaleQueries.specs ++ PipelineQueries.specs ++ PollQueries.specs ++
+      QualityQueries.specs)
 
-  /** Untimed per-query bench setup (VERDICT r12 #3): for queries that
-    * search a persisted index, Bench runs this BEFORE starting the
-    * timer, so the timed sample measures search only regardless of
-    * scratch state (cold scratch used to silently fold an index build
-    * into the "search" time). Verify does NOT call these — the queries
-    * themselves still lazily ensure their index, so correctness runs
-    * are self-contained. */
-  def benchSetup: Map[String, (SparkSession, String) => Unit] =
-    graft.queries.ExtQueries.benchSetup
-
-  /** Pair-bounded queries (query → counter name) and the counters that
-    * measure the current draw's candidate-pair volume. Bench records
-    * the counter values untimed; the gate normalizes the mapped
-    * queries' limits by pair-count ratio (VERDICT r13 #1b). */
-  def pairBounded: Map[String, String] =
-    graft.queries.ExtQueries.pairBounded
-
-  def pairCounters: Map[String, (SparkSession, String) => Long] =
-    graft.queries.ExtQueries.pairCounters
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracleSql ++
-    graft.queries.Scd2Queries.oracleSql ++
-    graft.queries.ExtQueries.oracleSql ++
-    graft.queries.ScaleQueries.oracleSql ++
-    graft.queries.PipelineQueries.oracleSql ++
-    graft.queries.PollQueries.oracleSql ++
-    graft.queries.QualityQueries.oracleSql
+    * the same parquet tables, with identical column names/aliases. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
+
+  /** Untimed per-query bench setups (see [[QuerySpec]]). */
+  lazy val benchSetup: Map[String, (SparkSession, String) => Unit] =
+    registry.flatMap(q => q.setup.map(q.name -> _)).toMap
+
+  /** Draw-bounded queries (query → counter name) and the counters that
+    * measure the current draw (see [[Counter]]). */
+  lazy val pairBounded: Map[String, String] =
+    registry.flatMap(q => q.counter.map(q.name -> _.name)).toMap
+
+  lazy val pairCounters: Map[String, (SparkSession, String) => Long] =
+    registry.flatMap(_.counter).map(c => c.name -> c.count).toMap
 }

@@ -26,19 +26,7 @@ object Verify {
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val workers = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // normally set per-session inside Tables.load, but parquet schema
-      // conversion resolves conf via the thread-local active session and
-      // worker threads can race past it (observed: events.ts inferred as
-      // TIMESTAMP_NTZ on one of 4 workers) — setting it in the builder
-      // makes every newSession() inherit it deterministically
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

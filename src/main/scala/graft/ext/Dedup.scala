@@ -406,7 +406,7 @@ object Dedup {
     // stores each shingle string once instead of df times (and then
     // drops it — only id lists survive), and candidate pairs unfold
     // inline from the sorted list with no further join. Same-window
-    // warm A/B (Decompose truth_ab, sf0.1): 2.05–2.47 s → 1.19–1.57 s,
+    // warm A/B (OPTIMIZATION_r19.md, sf0.1): 2.05–2.47 s → 1.19–1.57 s,
     // row-identical output. Exactness: pairs (x, y) with x < y from a
     // group's value-sorted id list, once per shared kept shingle, is
     // precisely the old self-join's id_a < id_b row multiset; sizes

@@ -111,11 +111,6 @@ case class Scd2Config(
     colsToExcludeFromLoad: Seq[String] = Seq("load_key"),
     colsToExcludeFromDelta: Seq[String] = Seq("timezone"),
     loadKey: Long = 0L,
-    /** Surrogate minting path: false = distributed nk-ordered gapless
-      * index (deterministic, value-identical to the reference's
-      * row_number); true = skip the batch sort too (arbitrary-but-gapless
-      * order, for huge backfill batches — SURVEY §7.5 #3). */
-    scalableSurrogates: Boolean = false,
     /** Natural-key hash buckets the SCD2 target is partitioned into.
       * A batch rewrites only the buckets its delta touches. Sized so one
       * bucket ≈ one executor-friendly rewrite unit; at 100 TB raise it

@@ -24,8 +24,6 @@ import org.apache.spark.sql.functions._
   * handles skew and post-shuffle coalescing.
   */
 object CoreQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
 
@@ -1480,100 +1478,8 @@ object CoreQueries {
   }
 
   // ------------------------------------------------------------------ maps
-  def queries: Map[String, Q] = Map(
-    "q_s3_users" -> (qS3Users _),
-    "q_s4_scan" -> (qS4Scan _),
-    "q_jdbc_roundtrip" -> (qJdbcRoundtrip _),
-    "q_csv_roundtrip" -> (qSCsvRoundtrip _),
-    "q_orc_roundtrip" -> (qSOrcRoundtrip _),
-    "q_s6_stage_copy" -> (qS6StageCopy _),
-    "q_p1_threshold" -> (qP1Threshold _),
-    "q_p2_equality" -> (qP2Equality _),
-    "q_p3_like" -> (qP3Like _),
-    "q_p4_not_in" -> (qP4NotIn _),
-    "q_p5_in_max" -> (qP5InMax _),
-    "q_p7_null_case" -> (qP7NullCase _),
-    "q_j1_full_outer" -> (qJ1FullOuter _),
-    "q_j2_inner" -> (qJ2Inner _),
-    "q_j3_cross_agg" -> (qJ3CrossAgg _),
-    "q_j4_src_temp" -> (qJ4SrcTemp _),
-    "q_j5_semi" -> (qJ5Semi _),
-    "q_j5_anti" -> (qJ5Anti _),
-    "q_a2_max_scalar" -> (qA2MaxScalar _),
-    "q1_agg" -> (q1Agg _),
-    "q_agg_join" -> (qAggJoin _),
-    "q_agg_distinct" -> (qAggDistinct _),
-    "q_w1_row_number" -> (qW1RowNumber _),
-    "q_w2_running" -> (qW2Running _),
-    "q_o3_topk" -> (qO3TopK _),
-    "q_set_union" -> (qSetUnion _),
-    "q_set_intersect" -> (qSetIntersect _),
-    "q_set_except" -> (qSetExcept _),
-    "q_set_except_all" -> (qSetExceptAll _),
-    "q_set_intersect_all" -> (qSetIntersectAll _),
-    "q_agg_grouping_sets" -> (qAggGroupingSets _),
-    "q_w6_rank_battery" -> (qW6RankBattery _),
-    "q_f_scalars" -> (qFScalars _),
-    "q_st_window_agg" -> (qStWindowAgg _),
-    "q_sessionize" -> (qSessionize _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_w3_moving_range" -> (qW3MovingRange _),
-    "q_w4_lag_ntile" -> (qW4LagNtile _),
-    "q_w5_first_last" -> (qW5FirstLast _),
-    "q_f_dates" -> (qFDates _),
-    "q_sql_exists" -> (qSqlExists _),
-    "q_agg_mode" -> (qAggMode _),
-    "q_a4_median" -> (qA4Median _),
-    "q_a5_histogram" -> (qA5Histogram _),
-    "q_agg_rollup" -> (qAggRollup _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_sql_q3" -> (qSqlQ3 _),
-    "q_sql_q4" -> (qSqlQ4 _),
-    "q_sql_q5" -> (qSqlQ5 _),
-    "q_sql_q6" -> (qSqlQ6 _),
-    "q_sql_q10" -> (qSqlQ10 _),
-    "q_sql_q12" -> (qSqlQ12 _),
-    "q_sql_q14" -> (qSqlQ14 _),
-    "q_sql_q7" -> (qSqlQ7 _),
-    "q_sql_q13" -> (qSqlQ13 _),
-    "q_sql_q15" -> (qSqlQ15 _),
-    "q_sql_q18" -> (qSqlQ18 _),
-    "q_sql_q19" -> (qSqlQ19 _),
-    "q_sql_q22" -> (qSqlQ22 _),
-    "q_sql_q2" -> (qSqlQ2 _),
-    "q_sql_q8" -> (qSqlQ8 _),
-    "q_sql_q9" -> (qSqlQ9 _),
-    "q_sql_q11" -> (qSqlQ11 _),
-    "q_sql_q16" -> (qSqlQ16 _),
-    "q_sql_q17" -> (qSqlQ17 _),
-    "q_sql_q20" -> (qSqlQ20 _),
-    "q_sql_q21" -> (qSqlQ21 _),
-    "q_j_nullsafe" -> (qJNullsafe _),
-    "q_agg_filter" -> (qAggFilter _),
-    "q_agg_stats" -> (qAggStats _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_posexplode" -> (qPosexplode _),
-    "q_agg_listagg" -> (qAggListagg _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_sql_recursive" -> (qSqlRecursive _),
-    "q_sql_lateral" -> (qSqlLateral _),
-    "q_w_fill_forward" -> (qWFillForward _),
-    "q_try_funcs" -> (qTryFuncs _),
-    "q_funnel_steps" -> (qFunnelSteps _),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_a6_quantiles" -> (qA6Quantiles _),
-    "q_regexp_funcs" -> (qRegexpFuncs _),
-    "q_w_distinct_running" -> (qWDistinctRunning _),
-    "q_sql_scalar_sub" -> (qSqlScalarSub _),
-    "q_agg_cube" -> (qAggCube _),
-    "q_pivot" -> (qPivot _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_array_agg" -> (qArrayAgg _),
-    "q_string_funcs" -> (qStringFuncs _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_s3_users" ->
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_s3_users", qS3Users,
       """SELECT CAST(c_custkey AS VARCHAR) AS uid,
         |  c_name AS full_name,
         |  CASE WHEN c_custkey % 7 <> 0
@@ -1588,70 +1494,70 @@ object CoreQueries {
         |  CAST(NULL AS VARCHAR) AS gender,
         |  CAST(NULL AS VARCHAR) AS password,
         |  CAST(NULL AS VARCHAR) AS "profile_URL"
-        |FROM customer""".stripMargin,
-    "q_s4_scan" -> "SELECT p_partkey, p_name FROM part",
-    "q_jdbc_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation WHERE n_regionkey < 3",
-    "q_csv_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "q_orc_roundtrip" ->
+        |FROM customer""".stripMargin),
+    QuerySpec("q_s4_scan", qS4Scan, "SELECT p_partkey, p_name FROM part"),
+    QuerySpec("q_jdbc_roundtrip", qJdbcRoundtrip,
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation WHERE n_regionkey < 3"),
+    QuerySpec("q_csv_roundtrip", qSCsvRoundtrip,
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation"),
+    QuerySpec("q_orc_roundtrip", qSOrcRoundtrip,
       """SELECT s_suppkey, s_name, s_nationkey, round(s_acctbal, 2) AS acctbal
-        |FROM supplier WHERE s_acctbal > 0.0""".stripMargin,
-    "q_s6_stage_copy" ->
+        |FROM supplier WHERE s_acctbal > 0.0""".stripMargin),
+    QuerySpec("q_s6_stage_copy", qS6StageCopy,
       """SELECT event_id, user_id, CAST(42 AS BIGINT) AS load_key
-        |FROM events WHERE event_type = 'click'""".stripMargin,
-    "q_p1_threshold" ->
+        |FROM events WHERE event_type = 'click'""".stripMargin),
+    QuerySpec("q_p1_threshold", qP1Threshold,
       """SELECT event_id, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS ts_sec, event_type
-        |FROM events WHERE ts >= TIMESTAMP '2024-01-04 00:00:00'""".stripMargin,
-    "q_p2_equality" ->
+        |FROM events WHERE ts >= TIMESTAMP '2024-01-04 00:00:00'""".stripMargin),
+    QuerySpec("q_p2_equality", qP2Equality,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderstatus = 'F' AND o_orderpriority = '1-URGENT'""".stripMargin,
-    "q_p3_like" ->
+        |WHERE o_orderstatus = 'F' AND o_orderpriority = '1-URGENT'""".stripMargin),
+    QuerySpec("q_p3_like", qP3Like,
       """SELECT p_partkey, p_name, p_type FROM part
-        |WHERE p_type LIKE 'M%' AND p_name NOT LIKE 'small%'""".stripMargin,
-    "q_p4_not_in" ->
+        |WHERE p_type LIKE 'M%' AND p_name NOT LIKE 'small%'""".stripMargin),
+    QuerySpec("q_p4_not_in", qP4NotIn,
       """SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem
-        |WHERE l_returnflag NOT IN ('A','R') AND l_linenumber <= 2""".stripMargin,
-    "q_p5_in_max" ->
+        |WHERE l_returnflag NOT IN ('A','R') AND l_linenumber <= 2""".stripMargin),
+    QuerySpec("q_p5_in_max", qP5InMax,
       """SELECT event_id, user_id, event_type FROM events
-        |WHERE event_id IN (SELECT MAX(event_id) FROM events)""".stripMargin,
-    "q_p7_null_case" ->
+        |WHERE event_id IN (SELECT MAX(event_id) FROM events)""".stripMargin),
+    QuerySpec("q_p7_null_case", qP7NullCase,
       """SELECT o_orderkey,
         |  CASE WHEN nullif(o_orderstatus,'O') IS NULL THEN 'open'
         |       WHEN o_totalprice > 200000.0 THEN 'big'
         |       ELSE 'other' END AS class
-        |FROM orders""".stripMargin,
-    "q_j1_full_outer" ->
+        |FROM orders""".stripMargin),
+    QuerySpec("q_j1_full_outer", qJ1FullOuter,
       """WITH c AS (SELECT c_custkey AS k, c_acctbal AS bal FROM customer WHERE c_custkey % 3 = 0),
         |o AS (SELECT o_custkey AS k, count(*) AS n_orders FROM orders WHERE o_orderkey % 2 = 0 GROUP BY 1)
         |SELECT coalesce(c.k, o.k) AS k,
         |  CASE WHEN c.bal IS NULL THEN 'right_only'
         |       WHEN o.n_orders IS NULL THEN 'left_only'
         |       ELSE 'both' END AS side
-        |FROM c FULL OUTER JOIN o ON c.k = o.k""".stripMargin,
-    "q_j2_inner" ->
+        |FROM c FULL OUTER JOIN o ON c.k = o.k""".stripMargin),
+    QuerySpec("q_j2_inner", qJ2Inner,
       """SELECT c_custkey, n_name, r_name
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey""".stripMargin,
-    "q_j3_cross_agg" ->
+        |JOIN region ON n_regionkey = r_regionkey""".stripMargin),
+    QuerySpec("q_j3_cross_agg", qJ3CrossAgg,
       """SELECT o_orderkey, round(max_price - o_totalprice, 2) AS below_max
         |FROM orders CROSS JOIN
-        |  (SELECT round(MAX(o_totalprice), 2) AS max_price FROM orders) mv""".stripMargin,
-    "q_j4_src_temp" ->
+        |  (SELECT round(MAX(o_totalprice), 2) AS max_price FROM orders) mv""".stripMargin),
+    QuerySpec("q_j4_src_temp", qJ4SrcTemp,
       """SELECT l_orderkey, l_linenumber, l_returnflag, o_orderpriority
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_returnflag IN ('A','R') AND o_orderstatus = 'F'""".stripMargin,
-    "q_j5_semi" ->
+        |WHERE l_returnflag IN ('A','R') AND o_orderstatus = 'F'""".stripMargin),
+    QuerySpec("q_j5_semi", qJ5Semi,
       """SELECT o_orderkey, o_orderstatus FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_quantity >= 49.0)""".stripMargin,
-    "q_j5_anti" ->
+        |  WHERE l_orderkey = o_orderkey AND l_quantity >= 49.0)""".stripMargin),
+    QuerySpec("q_j5_anti", qJ5Anti,
       """SELECT o_orderkey, o_orderstatus FROM orders
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)""".stripMargin,
-    "q_a2_max_scalar" ->
+        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)""".stripMargin),
+    QuerySpec("q_a2_max_scalar", qA2MaxScalar,
       """SELECT MAX(l_orderkey) AS max_key, MAX(l_partkey) AS max_part,
-        |  count(*) AS cnt FROM lineitem""".stripMargin,
-    "q1_agg" ->
+        |  count(*) AS cnt FROM lineitem""".stripMargin),
+    QuerySpec("q1_agg", q1Agg,
       s"""SELECT l_returnflag, l_linestatus,
         |  ${centsSumSql("l_quantity")} AS sum_qty,
         |  ${centsSumSql("l_extendedprice")} AS sum_base_price,
@@ -1659,57 +1565,57 @@ object CoreQueries {
         |  count(*) AS count_order
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_join" ->
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    QuerySpec("q_agg_join", qAggJoin,
       s"""SELECT n_name,
         |  $revenueSumSql AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin,
-    "q_agg_distinct" ->
+        |GROUP BY n_name""".stripMargin),
+    QuerySpec("q_agg_distinct", qAggDistinct,
       """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp,
         |  count(DISTINCT l_partkey) AS n_part
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q_w1_row_number" ->
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("q_w1_row_number", qW1RowNumber,
       """SELECT o_custkey, o_orderkey, rn FROM (
         |  SELECT o_custkey, o_orderkey,
         |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "q_w2_running" ->
+        |  FROM orders) WHERE rn <= 3""".stripMargin),
+    QuerySpec("q_w2_running", qW2Running,
       """SELECT user_id, event_id,
         |  LAG(event_type, 1) OVER w AS prev_type,
         |  round(SUM(value) OVER (PARTITION BY user_id ORDER BY event_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_value
         |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)""".stripMargin,
-    "q_o3_topk" ->
+        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)""".stripMargin),
+    QuerySpec("q_o3_topk", qO3TopK,
       """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin,
-    "q_set_union" ->
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""".stripMargin),
+    QuerySpec("q_set_union", qSetUnion,
       """SELECT o_custkey AS custkey FROM orders WHERE o_totalprice > 400000.0
         |UNION
-        |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal < 0.0""".stripMargin,
-    "q_set_intersect" ->
+        |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal < 0.0""".stripMargin),
+    QuerySpec("q_set_intersect", qSetIntersect,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
         |INTERSECT
-        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'""".stripMargin,
-    "q_set_except" ->
+        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'""".stripMargin),
+    QuerySpec("q_set_except", qSetExcept,
       """SELECT c_custkey AS custkey FROM customer
         |EXCEPT
-        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'""".stripMargin,
-    "q_set_except_all" ->
+        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'""".stripMargin),
+    QuerySpec("q_set_except_all", qSetExceptAll,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
         |EXCEPT ALL
-        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'""".stripMargin,
-    "q_set_intersect_all" ->
+        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O'""".stripMargin),
+    QuerySpec("q_set_intersect_all", qSetIntersectAll,
       """SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
         |INTERSECT ALL
-        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'P'""".stripMargin,
-    "q_agg_grouping_sets" -> sqlGroupingSetsText,
-    "q_w6_rank_battery" -> sqlW6Text,
-    "q_f_scalars" ->
+        |SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'P'""".stripMargin),
+    QuerySpec("q_agg_grouping_sets", qAggGroupingSets, sqlGroupingSetsText),
+    QuerySpec("q_w6_rank_battery", qW6RankBattery, sqlW6Text),
+    QuerySpec("q_f_scalars", qFScalars,
       """SELECT o_orderkey,
         |  sha256(coalesce(o_orderstatus,'') || coalesce(o_orderpriority,'')) AS row_hash,
         |  CASE WHEN o_orderstatus = 'O' THEN 'I'
@@ -1718,12 +1624,12 @@ object CoreQueries {
         |  strftime(o_orderdate, '%Y-%m-%d') AS order_day,
         |  coalesce(nullif(o_orderstatus,'P'), 'N/A') AS status_or_na,
         |  CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS order_year
-        |FROM orders""".stripMargin,
-    "q_st_window_agg" ->
+        |FROM orders""".stripMargin),
+    QuerySpec("q_st_window_agg", qStWindowAgg,
       s"""SELECT strftime(date_trunc('day', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
         |  event_type, count(*) AS n, ${centsSumSql("value")} AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_sessionize" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    QuerySpec("q_sessionize", qSessionize,
       """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
         |g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
         |    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_sess
@@ -1734,45 +1640,45 @@ object CoreQueries {
         |  strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
         |  count(*) AS n_events, round(SUM(value), 2) AS sum_value
-        |FROM s GROUP BY user_id, sess_id""".stripMargin,
-    "q_a5_histogram" ->
-      """SELECT CAST(floor(value / 10.0) AS BIGINT) AS bucket, count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "q_a4_median" ->
-      """WITH r AS (SELECT event_type, value,
-        |  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-        |  COUNT(*) OVER (PARTITION BY event_type) AS n FROM events)
-        |SELECT event_type, value AS median_value FROM r WHERE rn = (n + 1) // 2""".stripMargin,
-    "q_w3_moving_range" ->
+        |FROM s GROUP BY user_id, sess_id""".stripMargin),
+    QuerySpec("q_stream_join", qStreamJoin,
+      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
+        |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts FROM e WHERE event_type = 'click'),
+        |p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts, value FROM e WHERE event_type = 'purchase')
+        |SELECT c.user_id, click_id, purchase_id,
+        |  epoch_us(purchase_ts) - epoch_us(click_ts) AS lag_us, value
+        |FROM c JOIN p ON c.user_id = p.user_id
+        | AND epoch_us(purchase_ts) - epoch_us(click_ts) BETWEEN 0 AND 1800000000""".stripMargin),
+    QuerySpec("q_w3_moving_range", qW3MovingRange,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tus, value FROM events)
         |SELECT user_id, event_id,
         |  round(SUM(value) OVER (PARTITION BY user_id ORDER BY tus
         |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 2) AS sum_1h,
         |  CAST(COUNT(*) OVER (PARTITION BY user_id ORDER BY tus
         |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_1h
-        |FROM e""".stripMargin,
-    "q_w4_lag_ntile" ->
+        |FROM e""".stripMargin),
+    QuerySpec("q_w4_lag_ntile", qW4LagNtile,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tus FROM events)
         |SELECT user_id, event_id,
         |  CAST((tus - lag(tus, 1) OVER w) // 1000000 AS BIGINT) AS gap_sec,
         |  CAST(ntile(4) OVER w AS BIGINT) AS quartile
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)""".stripMargin,
-    "q_w5_first_last" ->
+        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)""".stripMargin),
+    QuerySpec("q_w5_first_last", qW5FirstLast,
       """WITH e AS (SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS tus FROM events)
         |SELECT user_id, event_id,
         |  first_value(event_id) OVER w AS first_event,
         |  last_value(event_id) OVER w AS last_event
         |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin,
-    "q_f_dates" ->
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)""".stripMargin),
+    QuerySpec("q_f_dates", qFDates,
       """SELECT event_id,
         |  strftime(date_trunc('month', CAST(ts AS TIMESTAMP)), '%Y-%m-%d') AS month_start,
         |  CAST(quarter(CAST(ts AS TIMESTAMP)) AS BIGINT) AS qtr,
         |  CAST(year(CAST(ts AS TIMESTAMP)) AS BIGINT) AS yr,
         |  CAST(dayofweek(CAST(ts AS TIMESTAMP)) + 1 AS BIGINT) AS dow1,
         |  CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS days_since
-        |FROM events""".stripMargin,
-    "q_sql_exists" ->
+        |FROM events""".stripMargin),
+    QuerySpec("q_sql_exists", qSqlExists,
       """SELECT c_custkey, c_name
         |FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
@@ -1780,35 +1686,35 @@ object CoreQueries {
         |                AND o.o_orderpriority = '1-URGENT')
         |  AND NOT EXISTS (SELECT 1 FROM orders o2
         |                  WHERE o2.o_custkey = c.c_custkey
-        |                    AND o2.o_orderstatus = 'C')""".stripMargin,
-    "q_agg_mode" ->
+        |                    AND o2.o_orderstatus = 'C')""".stripMargin),
+    QuerySpec("q_agg_mode", qAggMode,
       """WITH c AS (SELECT user_id, event_type, count(*) AS n
         |  FROM events GROUP BY 1, 2),
         |r AS (SELECT user_id, event_type, n, ROW_NUMBER() OVER (
         |  PARTITION BY user_id ORDER BY n DESC, event_type) AS rn FROM c)
         |SELECT user_id, event_type AS mode_type, CAST(n AS BIGINT) AS n
-        |FROM r WHERE rn = 1""".stripMargin,
-    "q_stream_join" ->
-      """WITH e AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
-        |c AS (SELECT event_id AS click_id, user_id, ts AS click_ts FROM e WHERE event_type = 'click'),
-        |p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts, value FROM e WHERE event_type = 'purchase')
-        |SELECT c.user_id, click_id, purchase_id,
-        |  epoch_us(purchase_ts) - epoch_us(click_ts) AS lag_us, value
-        |FROM c JOIN p ON c.user_id = p.user_id
-        | AND epoch_us(purchase_ts) - epoch_us(click_ts) BETWEEN 0 AND 1800000000""".stripMargin,
-    "q_agg_rollup" ->
+        |FROM r WHERE rn = 1""".stripMargin),
+    QuerySpec("q_a4_median", qA4Median,
+      """WITH r AS (SELECT event_type, value,
+        |  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
+        |  COUNT(*) OVER (PARTITION BY event_type) AS n FROM events)
+        |SELECT event_type, value AS median_value FROM r WHERE rn = (n + 1) // 2""".stripMargin),
+    QuerySpec("q_a5_histogram", qA5Histogram,
+      """SELECT CAST(floor(value / 10.0) AS BIGINT) AS bucket, count(*) AS n
+        |FROM events GROUP BY 1""".stripMargin),
+    QuerySpec("q_agg_rollup", qAggRollup,
       s"""SELECT l_returnflag, l_linestatus,
         |  ${centsSumSql("l_quantity")} AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q_asof_join" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    QuerySpec("q_asof_join", qAsofJoin,
       """WITH c AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
         |  FROM events WHERE event_type = 'click'),
         |p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, max(event_id) AS purchase_id
         |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
         |SELECT c.user_id, c.event_id,
         |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts_sec, p.purchase_id
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin,
-    "q_range_join" ->
+        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin),
+    QuerySpec("q_range_join", qRangeJoin,
       """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
         |g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
         |    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_sess
@@ -1821,8 +1727,8 @@ object CoreQueries {
         |  strftime(sess.session_start, '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(sess.session_end, '%Y-%m-%d %H:%M:%S') AS session_end
         |FROM e JOIN sess ON e.user_id = sess.user_id
-        |  AND e.ts >= sess.session_start AND e.ts <= sess.session_end""".stripMargin,
-    "q_sql_q3" ->
+        |  AND e.ts >= sess.session_start AND e.ts <= sess.session_end""".stripMargin),
+    QuerySpec("q_sql_q3", qSqlQ3,
       s"""SELECT o_orderkey,
         |  $revenueSumSql AS revenue,
         |  strftime(o_orderdate, '%Y-%m-%d') AS order_date
@@ -1831,82 +1737,15 @@ object CoreQueries {
         |WHERE c_mktsegment = 'BUILDING'
         |  AND o_orderdate < DATE '1997-03-15' AND l_shipdate > DATE '1997-03-15'
         |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q_sql_q4" ->
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin),
+    QuerySpec("q_sql_q4", qSqlQ4,
       """SELECT o_orderpriority, count(*) AS n
         |FROM orders
         |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-07-01'
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_sql_q6" ->
-      s"""SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS DECIMAL(18,0))
-        |    * CAST(round(l_discount * 100) AS DECIMAL(18,0))) AS DOUBLE) / 10000.0 AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q_sql_q10" ->
-      s"""SELECT c_custkey, c_name, n_name,
-        |  $revenueSumSql AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
-        |  AND l_returnflag = 'R'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    // batch-2 SQL: ONE text serves both engines (lattice-exact aggregates)
-    "q_sql_q7" -> sqlQ7Text,
-    "q_sql_q13" -> sqlQ13Text,
-    "q_sql_q15" -> sqlQ15Text,
-    "q_sql_q18" -> sqlQ18Text,
-    "q_sql_q19" -> sqlQ19Text,
-    "q_sql_q22" -> sqlQ22Text,
-    "q_sql_q2" -> sqlQ2Text,
-    "q_sql_q8" -> sqlQ8Text,
-    "q_sql_q9" -> sqlQ9Text,
-    "q_sql_q11" -> sqlQ11Text,
-    "q_sql_q16" -> sqlQ16Text,
-    "q_sql_q17" -> sqlQ17Text,
-    "q_sql_q20" -> sqlQ20Text,
-    "q_sql_q21" -> sqlQ21Text,
-    "q_j_nullsafe" -> sqlJNullsafeText,
-    "q_agg_filter" -> sqlAggFilterText,
-    "q_agg_stats" -> sqlAggStatsText,
-    "q_unpivot" -> sqlUnpivotText,
-    "q_posexplode" -> posexplodeOracle,
-    "q_agg_listagg" -> listaggOracle,
-    "q_json_extract" -> jsonExtractOracle,
-    "q_sql_recursive" -> sqlRecursiveText,
-    "q_sql_lateral" -> sqlLateralText,
-    "q_w_fill_forward" -> fillForwardOracle,
-    "q_try_funcs" -> tryFuncsOracle,
-    "q_funnel_steps" -> sqlFunnelStepsText,
-    "q_cohort_retention" -> cohortRetentionOracle,
-    "q_a6_quantiles" -> sqlQuantilesText,
-    "q_regexp_funcs" -> regexpFuncsOracle,
-    "q_w_distinct_running" -> wDistinctRunningOracle,
-    "q_sql_q12" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |           THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= o_orderdate AND l_shipdate < DATE '1997-01-01'
-        |GROUP BY l_returnflag""".stripMargin,
-    "q_sql_q14" ->
-      s"""WITH s AS (SELECT
-        |    sum(CASE WHEN p_type = 'PROMO' THEN $revenueUnitsSql
-        |        ELSE CAST(0 AS DECIMAL(18,0)) END) AS promo_u,
-        |    sum($revenueUnitsSql) AS total_u
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= DATE '1996-09-01'
-        |    AND l_shipdate < DATE '1996-12-01')
-        |SELECT CAST((CAST(promo_u AS HUGEINT) * 1000000)
-        |    // CAST(total_u AS HUGEINT) AS DOUBLE) / 10000.0 AS promo_revenue_pct
-        |FROM s""".stripMargin,
-    "q_sql_q5" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QuerySpec("q_sql_q5", qSqlQ5,
       s"""SELECT n_name,
         |  $revenueSumSql AS revenue
         |FROM customer
@@ -1916,25 +1755,98 @@ object CoreQueries {
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
         |  AND o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'
-        |GROUP BY n_name""".stripMargin,
-    "q_sql_scalar_sub" ->
+        |GROUP BY n_name""".stripMargin),
+    QuerySpec("q_sql_q6", qSqlQ6,
+      s"""SELECT CAST(sum(CAST(round(l_extendedprice * 100) AS DECIMAL(18,0))
+        |    * CAST(round(l_discount * 100) AS DECIMAL(18,0))) AS DOUBLE) / 10000.0 AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1997-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
+    QuerySpec("q_sql_q10", qSqlQ10,
+      s"""SELECT c_custkey, c_name, n_name,
+        |  $revenueSumSql AS revenue
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1996-04-01'
+        |  AND l_returnflag = 'R'
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
+    QuerySpec("q_sql_q12", qSqlQ12,
+      """SELECT l_returnflag,
+        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |           THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+        |           THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE l_shipdate >= o_orderdate AND l_shipdate < DATE '1997-01-01'
+        |GROUP BY l_returnflag""".stripMargin),
+    QuerySpec("q_sql_q14", qSqlQ14,
+      s"""WITH s AS (SELECT
+        |    sum(CASE WHEN p_type = 'PROMO' THEN $revenueUnitsSql
+        |        ELSE CAST(0 AS DECIMAL(18,0)) END) AS promo_u,
+        |    sum($revenueUnitsSql) AS total_u
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE l_shipdate >= DATE '1996-09-01'
+        |    AND l_shipdate < DATE '1996-12-01')
+        |SELECT CAST((CAST(promo_u AS HUGEINT) * 1000000)
+        |    // CAST(total_u AS HUGEINT) AS DOUBLE) / 10000.0 AS promo_revenue_pct
+        |FROM s""".stripMargin),
+    // batch-2 SQL: ONE text serves both engines (lattice-exact aggregates)
+    QuerySpec("q_sql_q7", qSqlQ7, sqlQ7Text),
+    QuerySpec("q_sql_q13", qSqlQ13, sqlQ13Text),
+    QuerySpec("q_sql_q15", qSqlQ15, sqlQ15Text),
+    QuerySpec("q_sql_q18", qSqlQ18, sqlQ18Text),
+    QuerySpec("q_sql_q19", qSqlQ19, sqlQ19Text),
+    QuerySpec("q_sql_q22", qSqlQ22, sqlQ22Text),
+    QuerySpec("q_sql_q2", qSqlQ2, sqlQ2Text),
+    QuerySpec("q_sql_q8", qSqlQ8, sqlQ8Text),
+    QuerySpec("q_sql_q9", qSqlQ9, sqlQ9Text),
+    QuerySpec("q_sql_q11", qSqlQ11, sqlQ11Text,
+      planOk = Map(Smell.UnlimitedSort ->
+        "TPC-H presentation ORDER BY over the value-filtered group frame")),
+    QuerySpec("q_sql_q16", qSqlQ16, sqlQ16Text),
+    QuerySpec("q_sql_q17", qSqlQ17, sqlQ17Text),
+    QuerySpec("q_sql_q20", qSqlQ20, sqlQ20Text,
+      planOk = Map(Smell.UnlimitedSort ->
+        "TPC-H presentation ORDER BY over the supplier-bounded result")),
+    QuerySpec("q_sql_q21", qSqlQ21, sqlQ21Text,
+      planOk = Map(Smell.UnlimitedSort ->
+        "TPC-H presentation ORDER BY over the supplier-bounded result")),
+    QuerySpec("q_j_nullsafe", qJNullsafe, sqlJNullsafeText),
+    QuerySpec("q_agg_filter", qAggFilter, sqlAggFilterText),
+    QuerySpec("q_agg_stats", qAggStats, sqlAggStatsText),
+    QuerySpec("q_unpivot", qUnpivot, sqlUnpivotText),
+    QuerySpec("q_posexplode", qPosexplode, posexplodeOracle),
+    QuerySpec("q_agg_listagg", qAggListagg, listaggOracle),
+    QuerySpec("q_json_extract", qJsonExtract, jsonExtractOracle),
+    QuerySpec("q_sql_recursive", qSqlRecursive, sqlRecursiveText),
+    QuerySpec("q_sql_lateral", qSqlLateral, sqlLateralText),
+    QuerySpec("q_w_fill_forward", qWFillForward, fillForwardOracle),
+    QuerySpec("q_try_funcs", qTryFuncs, tryFuncsOracle),
+    QuerySpec("q_funnel_steps", qFunnelSteps, sqlFunnelStepsText),
+    QuerySpec("q_cohort_retention", qCohortRetention, cohortRetentionOracle),
+    QuerySpec("q_a6_quantiles", qA6Quantiles, sqlQuantilesText),
+    QuerySpec("q_regexp_funcs", qRegexpFuncs, regexpFuncsOracle),
+    QuerySpec("q_w_distinct_running", qWDistinctRunning, wDistinctRunningOracle),
+    QuerySpec("q_sql_scalar_sub", qSqlScalarSub,
       """SELECT c_custkey, c_acctbal
         |FROM customer c
         |WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
-        |                   WHERE c2.c_nationkey = c.c_nationkey)""".stripMargin,
-    "q_agg_cube" ->
+        |                   WHERE c2.c_nationkey = c.c_nationkey)""".stripMargin),
+    QuerySpec("q_agg_cube", qAggCube,
       s"""SELECT o_orderstatus, o_orderpriority, count(*) AS n,
         |  ${centsSumSql("o_totalprice")} AS sum_price
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_pivot" ->
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin),
+    QuerySpec("q_pivot", qPivot,
       """SELECT user_id,
         |  count(*) FILTER (event_type = 'click') AS click,
         |  count(*) FILTER (event_type = 'view') AS view,
         |  count(*) FILTER (event_type = 'purchase') AS purchase,
         |  count(*) FILTER (event_type = 'signup') AS signup,
         |  count(*) FILTER (event_type = 'error') AS error
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q_session_window" ->
+        |FROM events GROUP BY user_id""".stripMargin),
+    QuerySpec("q_session_window", qSessionWindow,
       """WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
         |g AS (SELECT *, CASE WHEN lag(ts) OVER w IS NULL
         |    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS new_sess
@@ -1945,14 +1857,14 @@ object CoreQueries {
         |  strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(MAX(ts) + INTERVAL 30 MINUTE, '%Y-%m-%d %H:%M:%S') AS session_end,
         |  count(*) AS n_events, round(SUM(value), 2) AS sum_value
-        |FROM s GROUP BY user_id, sess_id""".stripMargin,
-    "q_array_agg" ->
+        |FROM s GROUP BY user_id, sess_id""".stripMargin),
+    QuerySpec("q_array_agg", qArrayAgg,
       """SELECT l_orderkey,
         |  array_to_string(list(CAST(l_quantity AS BIGINT) ORDER BY CAST(l_quantity AS BIGINT)), ',') AS quantities,
         |  count(*) AS n_items,
         |  array_to_string(list(CAST(l_quantity AS BIGINT) * 2 ORDER BY CAST(l_quantity AS BIGINT)), ',') AS doubled
-        |FROM lineitem GROUP BY l_orderkey""".stripMargin,
-    "q_string_funcs" ->
+        |FROM lineitem GROUP BY l_orderkey""".stripMargin),
+    QuerySpec("q_string_funcs", qStringFuncs,
       """SELECT p_partkey,
         |  upper(p_type) AS type_upper,
         |  lower(p_brand) AS brand_lower,
@@ -1962,5 +1874,5 @@ object CoreQueries {
         |  string_split(p_type, ' ')[1] AS type_first,
         |  length(p_name) AS name_len,
         |  reverse(p_brand) AS brand_rev
-        |FROM part""".stripMargin)
+        |FROM part""".stripMargin))
 }

@@ -36,8 +36,6 @@ import graft.scd2.Historizer
   * genuinely absent from the registry.
   */
 object PipelineQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
 
@@ -195,9 +193,7 @@ object PipelineQueries {
       |  FROM res JOIN st USING (user_id))
       |SELECT user_id, bucket, hour_v, z FROM z WHERE abs(z) > 3.0""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "q_pipeline_analytics" -> (qPipelineAnalytics _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_pipeline_analytics" -> pipelineAnalyticsOracle)
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_pipeline_analytics", qPipelineAnalytics,
+      pipelineAnalyticsOracle))
 }

@@ -32,8 +32,6 @@ import graft.streaming.{ScriptedSnapshot, TreeFetchers}
   * events, ~1k rows at sf0.1. The 100 TB ingest path is TreeIngest.
   */
 object PollQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private def sliceRows(s: SparkSession, dir: String) =
     graft.Tables.load(s, dir, "events")
       .filter(col("event_id") % 97 === 0)
@@ -104,15 +102,13 @@ object PollQueries {
     } finally TreeFetchers.unregister(transport)
   }
 
-  def queries: Map[String, Q] = Map("q_poll_ingest" -> (qPollIngest _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_poll_ingest" ->
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_poll_ingest", qPollIngest,
       """SELECT strftime(ts, '%Y-%m-%d') AS date_key,
         |       strftime(ts, '%H:%M:%S') || '_' || CAST(event_id AS VARCHAR) AS time_key,
         |       event_type AS timezone,
         |       CAST(user_id AS VARCHAR) AS humidity,
         |       CAST(CAST(round(value*100, 0) AS BIGINT) AS VARCHAR) AS temperature,
         |       strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str
-        |FROM events WHERE event_id % 97 = 0""".stripMargin)
+        |FROM events WHERE event_id % 97 = 0""".stripMargin))
 }

@@ -13,8 +13,6 @@ import graft.ext.DataQuality._
   * verifies the checks themselves, not just row counts.
   */
 object QualityQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)
 
@@ -51,11 +49,6 @@ object QualityQueries {
       t(s, dir, "orders").filter(col("o_orderkey") % 2 === 0),
       t(s, dir, "orders").filter(col("o_orderkey") % 2 === 1),
       Seq("o_orderkey", "o_orderstatus", "o_orderpriority"))
-
-  def queries: Map[String, Q] = Map(
-    "q_dq_report" -> (qDqReport _),
-    "q_profile_columns" -> (qProfileColumns _),
-    "q_profile_drift" -> (qProfileDrift _))
 
   // =================================================== DuckDB oracles
 
@@ -140,8 +133,8 @@ object QualityQueries {
        |FROM a FULL OUTER JOIN b
        |  ON a.col_name = b.col_name AND a.metric = b.metric""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q_dq_report" -> dqReportSql,
-    "q_profile_columns" -> profileColumnsSql,
-    "q_profile_drift" -> profileDriftSql)
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_dq_report", qDqReport, dqReportSql),
+    QuerySpec("q_profile_columns", qProfileColumns, profileColumnsSql),
+    QuerySpec("q_profile_drift", qProfileDrift, profileDriftSql))
 }

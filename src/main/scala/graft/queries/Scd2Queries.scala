@@ -19,8 +19,6 @@ import graft.scd2.Historizer
   *  - orderkey%10∈{3,4} → target only          → 'NC' (null-hash fallthrough)
   */
 object Scd2Queries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val conf = Scd2Config(
     naturalKeys = Seq("nk"),
     colsToExcludeFromLoad = Seq("load_key"),
@@ -138,12 +136,6 @@ object Scd2Queries {
       |  "09:05:00": {"TimeZone": "IST", "Humidity": "63.1", "Temperature": "29.6", "Timestamp": "2024-03-01 09:05:00"},
       |  "09:10:00": {"TimeZone": "IST", "Humidity": "61.8", "Temperature": "29.2", "Timestamp": "2024-03-01 09:10:00"}
       |}}""".stripMargin
-
-  def queries: Map[String, Q] = Map(
-    "q_scd2_delta" -> (qScd2Delta _),
-    "q_scd2_apply" -> (qScd2Apply _),
-    "q_scd2_asof" -> (qScd2Asof _),
-    "q_pipeline_e2e" -> (qPipelineE2E _))
 
   /** DuckDB equivalents. The hash is only compared within-engine (hash
     * equality ⇔ payload equality), so double→string rendering differences
@@ -290,9 +282,9 @@ object Scd2Queries {
        |       humidity, temperature, 'Y' AS da_current_flag
        |FROM ins""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q_scd2_delta" -> deltaSql,
-    "q_scd2_apply" -> applySql,
-    "q_scd2_asof" -> asofSql,
-    "q_pipeline_e2e" -> e2eSql)
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q_scd2_delta", qScd2Delta, deltaSql),
+    QuerySpec("q_scd2_apply", qScd2Apply, applySql),
+    QuerySpec("q_scd2_asof", qScd2Asof, asofSql),
+    QuerySpec("q_pipeline_e2e", qPipelineE2E, e2eSql))
 }

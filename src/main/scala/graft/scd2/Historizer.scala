@@ -148,9 +148,9 @@ object Historizer {
     * Surrogate minting: the reference's `ROW_NUMBER() OVER (ORDER BY 'JP')`
     * (:266-270) funnels to one task; its constant sort key makes the
     * assignment ARBITRARY-but-gapless, so any total order is equally
-    * faithful. Default path orders by the natural keys (deterministic for
-    * tests and oracle checks); `conf.scalableSurrogates` switches to the
-    * distributed gapless index (SURVEY §7.5 #3) for huge backfill batches.
+    * faithful. Minting orders by the natural keys (deterministic for
+    * tests and oracle checks) through the distributed gapless index
+    * (SURVEY §7.5 #3).
     */
   def insertRows(src: DataFrame, delta: DataFrame, tgtCols: Seq[String],
       conf: Scd2Config, now: Timestamp): DataFrame = {
@@ -174,17 +174,10 @@ object Historizer {
       if (tgtCols.map(_.toLowerCase).contains("delta_hash"))
         Seq(deltaHash(dCols).as("delta_hash"))
       else Seq.empty
-    // Surrogate index: BOTH paths are distributed (no single-task window
-    // — the faithful `ROW_NUMBER() OVER (ORDER BY ...)` form funnels the
-    // whole batch through one task at scale). Default: distributed sort
-    // by the natural keys + gapless zipWithIndex — value-identical to
-    // row_number ordered by nk (deterministic for tests and oracles).
-    // `scalableSurrogates` additionally skips the sort: arbitrary-but-
-    // gapless, for backfills where even the batch sort is unwanted.
-    val indexed =
-      if (conf.scalableSurrogates) withGaplessIndex(joined, "__rn")
-      else withGaplessIndex(joined.orderBy(nk.map(col): _*), "__rn")
-    indexed
+    // distributed sort + gapless zipWithIndex, value-identical to
+    // row_number ordered by nk — the faithful `ROW_NUMBER() OVER (ORDER
+    // BY ...)` form funnels the whole batch through one task at scale
+    withGaplessIndex(joined.orderBy(nk.map(col): _*), "__rn")
       .select(
         Seq(
           // AK: keep durable key for U rows, mint for I (:250-270)

@@ -53,19 +53,6 @@ class PlanSweepSpec extends SparkSpec {
     assert(s.globalWindows === 0)
   }
 
-  test("every adjudicated warning names a registered query") {
-    // a renamed/retired query must not leave a stale adjudication that
-    // would silently swallow a NEW smell under the old name
-    val reg = SparkEntry.queries.keySet
-    val stale = PlanSweep.adjudicated.keySet.filterNot { case (q, _) => reg(q) }
-    assert(stale.isEmpty, s"stale adjudications: $stale")
-    // and every adjudication names a real smell kind — a typo'd kind
-    // would silently never match its report partition
-    val kinds = Set(PlanSweep.KindWindow, PlanSweep.KindSort)
-    val badKind = PlanSweep.adjudicated.keySet.filterNot { case (_, k) => kinds(k) }
-    assert(badKind.isEmpty, s"unknown smell kinds: $badKind")
-  }
-
   test("trigram_positions counter equals the volume trigramTypicality explodes") {
     // the counter prices q_eval_rankcorr/q_text_typicality's gate limit;
     // it must track the actual exploded row count, not an approximation

@@ -107,26 +107,6 @@ class HistorizerSpec extends SparkSpec {
     assert(t1row.select("da_current_flag").first().getString(0) == "Y")
   }
 
-  test("scalable surrogate minting: gapless from max+1, same invariants as the window path") {
-    val sconf = conf.copy(scalableSurrogates = true)
-    val batch1 = intRows(
-      ("IST", "62.0", "29.4", t0, "DEV01", 1L),
-      ("IST", "63.1", "29.6", t1, "DEV01", 1L),
-      ("IST", "64.0", "30.0", Timestamp.valueOf("2024-03-01 09:10:00"), "DEV01", 1L))
-    val tgt1 = Historizer.applyScd2(batch1, emptyTarget, sconf, now)
-    // gapless mint 1..3 regardless of (arbitrary) assignment order
-    assert(tgt1.select("dht11_key").as[Long].collect().sorted.sameElements(Array(1L, 2L, 3L)))
-    assert(tgt1.select("dht11_ak").as[Long].collect().sorted.sameElements(Array(1L, 2L, 3L)))
-    // change one row: new version continues from the high-water mark
-    val batch2 = intRows(("IST", "99.9", "29.4", t0, "DEV01", 2L))
-    val tgt2 = Historizer.applyScd2(batch2, tgt1, sconf.copy(loadKey = 2L), now)
-    assert(tgt2.count() == 4)
-    assert(tgt2.select("dht11_key").as[Long].collect().sorted.sameElements(Array(1L, 2L, 3L, 4L)))
-    val cur = tgt2.filter($"da_current_flag" === "Y")
-      .groupBy("deviceid", "timestamp").count()
-    assert(cur.filter($"count" =!= 1).count() == 0)
-  }
-
   test("pointInTime resolves exactly the version valid at each probe instant") {
     val now2 = Timestamp.valueOf("2024-03-10 00:00:00")
     // version 1 of (DEV01, t0) at `now`, superseded by version 2 at now2

@@ -21,12 +21,13 @@ already ran noisy from flagging inside their own observed variance band
 (the gate false-failed whole rounds in r7/r8 under machine contention);
 genuinely slow queries are held to the 2x contract. New queries (no
 baseline) and retired queries are reported but never fail; refresh the
-baseline when the set changes.
+baseline when the set changes. A query the run lists under "failed"
+(it threw, so it has no sample) always fails the gate.
 
 Exit codes (ADVICE r7 #2 — the caller must be able to tell a crashed
 gate from a missing baseline):
   0  pass
-  1  fail (at least one reproducible per-query breach)
+  1  fail (at least one reproducible per-query breach, or a failed query)
   2  usage / unparseable input
   3  baseline file missing
   4  unexpected crash (traceback printed)
@@ -116,6 +117,7 @@ def gate() -> int:
                   "the counter's own producer could be hiding in it)")
         return min(max(1.0, ratio), PAIR_SCALE_CAP)
 
+    crashed = sorted(cur_doc.get("failed", []))
     failed, new, gone = [], [], []
     for name, sec in sorted(cur.items()):
         base = baseline.get(name)
@@ -133,19 +135,21 @@ def gate() -> int:
     for name, base, sec, limit in failed:
         print(f"FAIL {name}: {sec:.2f}s vs baseline {base:.2f}s "
               f"(limit {limit:.2f}s, {sec / base:.1f}x)")
+    for name in crashed:
+        print(f"FAILED {name}: query threw (no sample)")
     if new:
         print(f"new (no baseline, not gated): {', '.join(new)}")
     if gone:
         print(f"in baseline but not run: {', '.join(gone)}")
     n_ok = len([n for n in cur if n in baseline]) - len(failed)
     print(f"{n_ok} within limits, {len(failed)} regressed, "
-          f"{len(new)} new, {len(gone)} missing")
+          f"{len(crashed)} failed, {len(new)} new, {len(gone)} missing")
     # machine-health stamp (VERDICT r10 #8): a FAIL on a contended window
     # must be distinguishable from a regression in the artifact itself
     if failed and cur_doc.get("env"):
         print(f"env: {cur_doc['env']} (probe {cur_doc.get('probe')}s vs "
               f"envelope {base_doc.get('probe')}s)")
-    return 1 if failed else 0
+    return 1 if failed or crashed else 0
 
 
 def main() -> int:

@@ -47,6 +47,9 @@ def one_run(i, sf_dir=None) -> tuple:
     if qs is None:
         sys.stderr.write(p.stdout[-2000:] + "\n" + p.stderr[-2000:] + "\n")
         raise SystemExit(f"run {i}: no bench line found")
+    if doc.get("failed"):
+        raise SystemExit(f"run {i}: queries failed, no baseline sample: "
+                         f"{', '.join(doc['failed'])}")
     print(f"run {i}: {sum(qs.values()):.1f} s over {len(qs)} queries "
           f"(probe {probe}, {time.time() - t0:.0f} s wall)")
     return qs, probe, n_pairs, pair_bounded
