@@ -84,7 +84,10 @@ class ControlTable(spark: SparkSession, store: TableStore) {
         lit(status == "Success"), lit(now))
         .otherwise($"load_complete_dt_tm").as("load_complete_dt_tm"),
       $"load_key")
-    store.overwrite(controlName, updated)
+    // one output file: the table is rewritten on every stamp, and one
+    // input split per appended file would otherwise grow its file count
+    // (and the stamp's task count) by one per run
+    store.overwrite(controlName, updated.coalesce(1))
   }
 
   /** HIST_LOAD_CONTROL entry (STG_to_INT.py:23-34). */
@@ -96,7 +99,8 @@ class ControlTable(spark: SparkSession, store: TableStore) {
   /** Mark hist-load rows processed (Airflow-DAG.py:389-402). */
   def markHistLoadProcessed(loadKey: Long, subjectArea: String): Unit = {
     val df = store.read(histLoadName)
-    store.overwrite(histLoadName, df.select(
+    // one output file, as in updateStatus
+    store.overwrite(histLoadName, df.coalesce(1).select(
       $"load_key", $"subject_area",
       when($"load_key" === loadKey && $"subject_area" === subjectArea, "processed")
         .otherwise($"status").as("status"),

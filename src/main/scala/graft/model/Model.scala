@@ -84,10 +84,12 @@ object Schemas {
     StructField("da_current_flag", StringType)))
 
   /** On-disk layout of the SCD2 target: [[scd2Target]] plus the
-    * natural-key hash bucket the table is hive-partitioned by. Writes go
-    * through dynamic partition overwrite, so a batch rewrites ONLY the
-    * buckets its delta touches — the 100 TB answer to MERGE without a
-    * transactional table format. */
+    * natural-key hash bucket the table is hive-partitioned by
+    * (`graft.scd2.Historizer.nkBucket`: deviceid and the UTC day of
+    * timestamp, so one device-day is one bucket). Writes go through
+    * dynamic partition overwrite, so a batch rewrites ONLY the buckets
+    * its delta touches — one per device-day of a nightly run, the 100 TB
+    * answer to MERGE without a transactional table format. */
   val scd2TargetStored: StructType =
     scd2Target.add(StructField("nk_bucket", IntegerType))
 
@@ -111,8 +113,10 @@ case class Scd2Config(
     colsToExcludeFromLoad: Seq[String] = Seq("load_key"),
     colsToExcludeFromDelta: Seq[String] = Seq("timezone"),
     loadKey: Long = 0L,
-    /** Natural-key hash buckets the SCD2 target is partitioned into.
-      * A batch rewrites only the buckets its delta touches. Sized so one
-      * bucket ≈ one executor-friendly rewrite unit; at 100 TB raise it
-      * (buckets scale the rewrite granularity, not correctness). */
+    /** Natural-key hash buckets the SCD2 target is partitioned into
+      * (`Historizer.nkBucket`: timestamp keys hash by UTC day). A batch
+      * rewrites only the buckets its delta touches: one per (other keys,
+      * day) it changes, never more than this. Sized so one bucket ≈ one
+      * executor-friendly rewrite unit; at 100 TB raise it (buckets scale
+      * the rewrite granularity, not correctness). */
     targetBuckets: Int = 32)

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.control.ControlTable
@@ -33,10 +33,15 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * DAG task chain (Airflow-DAG.py:574-577) incl. the empty-delta branch
     * (D2) and the prev-run Success gate. `now` is injected for
     * deterministic tests (reference uses statement-time SYSDATE, F11). */
-  def run(treePath: String, deviceId: String, now: Timestamp): RunResult = {
-    // CHECK_FOR_INTERFACE_EXISTENCE + GET_ETL_PREV_RUN_DATE_TIME — one
-    // metadata lookup serves both the Success gate and the watermark
-    val prev = ctl.prevRunDetails(interfaceCd)
+  def run(treePath: String, deviceId: String, now: Timestamp): RunResult =
+    runFrom(ctl.prevRunDetails(interfaceCd), treePath, deviceId, now)
+
+  /** [[run]] given the previous run's (status, start, load key):
+    * CHECK_FOR_INTERFACE_EXISTENCE + GET_ETL_PREV_RUN_DATE_TIME — one
+    * metadata lookup serves the Success gate, the watermark and, in
+    * [[runWithRetry]], the rollback snapshot. */
+  private def runFrom(prev: Option[(String, Timestamp, Long)], treePath: String,
+      deviceId: String, now: Timestamp): RunResult = {
     require(prev.forall(_._1 == "Success"),
       s"previous run for $interfaceCd did not finish with status Success")
     val prevStart = prev.map(_._2).getOrElse(Schemas.epoch)
@@ -77,23 +82,23 @@ class Pipeline(spark: SparkSession, store: TableStore,
 
     // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call).
     // Partition-scoped MERGE: only the natural-key buckets this batch
-    // touches are rewritten (dynamic partition overwrite); `inserted`
-    // counts the cached touched-bucket content — no full-target re-scan.
+    // touches are rewritten (dynamic partition overwrite), exactly as in
+    // StreamingIngest.scd2Sink. The new bucket content streams straight
+    // into the write, which lazily reads the old files of those buckets:
+    // safe, because dynamic partition overwrite replaces partitions only
+    // at job commit, after every task has finished reading. `inserted` is
+    // counted by an Observation on that same write — no extra job, no
+    // re-scan of the target.
     val src = store.readOrEmpty(intName, Schemas.intermediate)
     val tgtStored = store.readOrEmpty(targetName, Schemas.scd2TargetStored)
-    // localCheckpoint (eager) PINS the new bucket content before the
-    // dynamic overwrite deletes the old files its plan lazily reads —
-    // a plain persist() recomputes from the mutated target on cache
-    // eviction (FileNotFound or a silently wrong count). The count runs
-    // before the write for the same reason, and the checkpointed blocks
-    // are GC-reclaimed after the run (no cache-registry leak).
+    val observed = Observation()
     val touched = Historizer.applyScd2Partitioned(
         src, tgtStored, conf.copy(loadKey = loadKey), now)
-      .localCheckpoint(true)
-    val inserted = touched
-      .filter(col("da_inserted_datetime") === lit(now) && col("da_current_flag") === "Y")
-      .count()
+      .observe(observed, count(when(
+        col("da_inserted_datetime") === lit(now) && col("da_current_flag") === "Y",
+        1)).as("inserted"))
     store.overwritePartitionsDynamic(targetName, touched, Seq("nk_bucket"))
+    val inserted = observed.get("inserted").asInstanceOf[Long]
 
     // UPDATE_STATUS_AND_FINISH_WORKFLOW
     ctl.markHistLoadProcessed(loadKey, interfaceName)
@@ -132,8 +137,9 @@ class Pipeline(spark: SparkSession, store: TableStore,
       // pre-existing Failed entry from an earlier exhausted run must keep
       // blocking the gate until a human intervenes, and a gate refusal
       // creates nothing to roll back
-      val before = ctl.prevRunDetails(interfaceCd).map(_._3)
-      try return run(treePath, deviceId, now)
+      val prev = ctl.prevRunDetails(interfaceCd)
+      val before = prev.map(_._3)
+      try return runFrom(prev, treePath, deviceId, now)
       catch {
         case scala.util.control.NonFatal(e) =>
           val minted = ctl.prevRunDetails(interfaceCd)

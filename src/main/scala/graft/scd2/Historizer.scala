@@ -3,6 +3,7 @@ package graft.scd2
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 import graft.model.{Scd2Config, Schemas}
 
@@ -255,18 +256,33 @@ object Historizer {
     probes.join(tgt, cond, "left")
   }
 
-  /** Natural-key hash bucket — the SCD2 target's partition key. Engine-
-    * internal (never oracle-compared), so the fast builtin xxhash64 is
-    * fine; deterministic across runs and executors. */
-  def nkBucket(naturalKeys: Seq[String], buckets: Int): Column =
-    pmod(xxhash64(naturalKeys.map(col): _*), lit(buckets.toLong)).cast("int")
+  /** Natural-key hash bucket — the SCD2 target's partition key. A
+    * `TimestampType` key hashes by its UTC day number, every other key
+    * column by its value, so all readings of one device-day share a
+    * bucket: a nightly batch (one date subtree of the export) rewrites
+    * one bucket per device-day instead of every bucket. Equal keys still
+    * map to one bucket. The day comes from `unix_micros`, not `to_date`,
+    * so the layout does not depend on `spark.sql.session.timeZone`.
+    * Engine-internal (never oracle-compared), so the fast builtin
+    * xxhash64 is fine; deterministic across runs and executors.
+    * `schema` supplies the key columns' types. */
+  def nkBucket(naturalKeys: Seq[String], buckets: Int, schema: StructType): Column = {
+    val hashed = naturalKeys.map { k =>
+      if (schema.fields.exists(f => f.name.equalsIgnoreCase(k) && f.dataType == TimestampType))
+        floor(unix_micros(col(k)) / lit(86400L * 1000000L)) // UTC day number
+      else col(k)
+    }
+    pmod(xxhash64(hashed: _*), lit(buckets.toLong)).cast("int")
+  }
 
   /** Partition-scoped SCD2 apply: the MERGE semantics of [[applyScd2]],
     * but returning ONLY the new content of the natural-key-hash buckets
     * this batch's delta touches (with the `nk_bucket` partition column
     * attached). Written via dynamic partition overwrite, untouched
     * buckets' files are never rewritten — per-batch write cost is
-    * O(touched buckets), not O(target) (VERDICT r1 #6).
+    * O(touched buckets), not O(target) (VERDICT r1 #6); with
+    * [[nkBucket]]'s day hashing that is one bucket per device-day the
+    * batch changes.
     *
     * `tgtStored` is the stored layout (Schemas.scd2TargetStored): payload
     * columns + nk_bucket. High-water marks and delta classification still
@@ -276,7 +292,7 @@ object Historizer {
   def applyScd2Partitioned(src: DataFrame, tgtStored: DataFrame,
       conf: Scd2Config, now: Timestamp): DataFrame = {
     val tgt = tgtStored.drop("nk_bucket")
-    val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets)
+    val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, tgt.schema)
     // Prune the delta-detect JOIN side to the buckets the batch's natural
     // keys hash into (equal keys hash to equal buckets, so no match is
     // lost; target-only rows classify NC, which nothing downstream

@@ -130,4 +130,20 @@ class PipelineSpec extends SparkSpec {
     assert(tgt.count() == 5)
     assert(tgt.filter($"da_current_flag" === "Y").count() == 5)
   }
+
+  test("control-table stamps keep each control table at one parquet file") {
+    val store = freshStore()
+    val pipe = new Pipeline(spark, store)
+    // epoch threshold: every run re-ingests the fixture, so all three runs
+    // take the full path (landing, INT, SCD2, every stamp)
+    (0 until 3).foreach { i =>
+      val r = pipe.run(fixture, dev, new Timestamp(Schemas.epoch.getTime + i * 1000L))
+      assert(!r.skipped)
+    }
+    def parquetFiles(table: String): Long =
+      Files.list(java.nio.file.Paths.get(store.path(table)))
+        .filter(_.getFileName.toString.endsWith(".parquet")).count()
+    assert(parquetFiles(pipe.ctl.controlName) == 1)
+    assert(parquetFiles(pipe.ctl.histLoadName) == 1)
+  }
 }

@@ -1,7 +1,9 @@
 package graft.scd2
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import java.time.Instant
+import java.time.temporal.ChronoUnit
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
@@ -12,8 +14,9 @@ import graft.model.{Scd2Config, Schemas}
 import graft.store.TableStore
 
 /** Partition-scoped SCD2 rewrite (VERDICT r1 #6): a batch touching one
-  * natural key must rewrite ONLY that key's hash-bucket partition —
-  * every other partition's parquet files stay byte-identical on disk. */
+  * natural key, or one device-day, must rewrite ONLY its hash-bucket
+  * partition — every other partition's parquet files stay byte-identical
+  * on disk. */
 class Scd2PartitionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,6 +30,35 @@ class Scd2PartitionSpec extends SparkSpec {
         Timestamp.valueOf(f"2024-03-01 09:${i % 60}%02d:00"), s"DEV$i", loadKey)
     }.toDF("timezone", "humidity", "temperature", "timestamp", "deviceid", "load_key")
 
+  private val bucketOf =
+    Historizer.nkBucket(conf.naturalKeys, conf.targetBuckets, Schemas.scd2Target)
+
+  private val name = "hist"
+
+  private def freshStore(): TableStore =
+    new TableStore(spark, Files.createTempDirectory("graft-scd2-part").toString)
+
+  /** One partition-scoped SCD2 apply + dynamic overwrite into `name`. */
+  private def applyTo(store: TableStore, src: DataFrame, now: Timestamp,
+      loadKey: Long): Unit = {
+    val tgtStored = store.readOrEmpty(name, Schemas.scd2TargetStored)
+    val touched = Historizer.applyScd2Partitioned(
+      src, tgtStored, conf.copy(loadKey = loadKey), now)
+    store.overwritePartitionsDynamic(name, touched, Seq("nk_bucket"))
+  }
+
+  /** A day of `dev`'s readings (every 20 minutes) from UTC midnight of
+    * `day` — one device-day, the shape of one date subtree of an export. */
+  private def deviceDay(dev: String, day: String, loadKey: Long): DataFrame = {
+    val midnight = Instant.parse(s"${day}T00:00:00Z")
+    (0 until 72).map { i =>
+      ("IST", "60.0", "29.4", Timestamp.from(midnight.plusSeconds(i * 1200L)), dev, loadKey)
+    }.toDF("timezone", "humidity", "temperature", "timestamp", "deviceid", "load_key")
+  }
+
+  /** The `nk_bucket=<b>` directory of a target-relative file path. */
+  private def bucketDir(rel: String): String = rel.takeWhile(_ != '/')
+
   /** All parquet data files under the target, relative path → bytes. */
   private def dataFiles(root: Path): Map[String, Array[Byte]] =
     Files.walk(root).iterator().asScala
@@ -35,19 +67,10 @@ class Scd2PartitionSpec extends SparkSpec {
       .toMap
 
   test("second batch rewrites only the touched bucket; untouched partition files are byte-identical") {
-    val dir = Files.createTempDirectory("graft-scd2-part")
-    val store = new TableStore(spark, dir.toString)
-    val name = "hist"
-    val root = java.nio.file.Paths.get(store.path(name))
+    val store = freshStore()
+    val root = Paths.get(store.path(name))
 
-    def apply(src: DataFrame, now: Timestamp, loadKey: Long): Unit = {
-      val tgtStored = store.readOrEmpty(name, Schemas.scd2TargetStored)
-      val touched = Historizer.applyScd2Partitioned(
-        src, tgtStored, conf.copy(loadKey = loadKey), now)
-      store.overwritePartitionsDynamic(name, touched, Seq("nk_bucket"))
-    }
-
-    apply(batch(1L, _ => "60.0"), now1, 1L)
+    applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
     // eager snapshot: the second apply rewrites files underneath a lazy
     // reader, so pin batch-1's target content now
     val tgt1 = store.read(name).localCheckpoint(true)
@@ -58,11 +81,11 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(before.nonEmpty)
 
     // batch 2: ONE changed reading (DEV7) → exactly one 'U' natural key
-    apply(batch(2L, i => if (i == 7) "99.9" else "60.0"), now2, 2L)
+    applyTo(store, batch(2L, i => if (i == 7) "99.9" else "60.0"), now2, 2L)
 
     val changedBucket = batch(2L, _ => "")
       .filter($"deviceid" === "DEV7")
-      .select(Historizer.nkBucket(conf.naturalKeys, conf.targetBuckets))
+      .select(bucketOf)
       .first().getInt(0)
     val after = dataFiles(root)
 
@@ -92,19 +115,67 @@ class Scd2PartitionSpec extends SparkSpec {
     val full = Historizer.applyScd2(
         batch(2L, i => if (i == 7) "99.9" else "60.0"),
         tgt1.drop("nk_bucket"), conf.copy(loadKey = 2L), now2)
-      .withColumn("nk_bucket", Historizer.nkBucket(conf.naturalKeys, conf.targetBuckets))
+      .withColumn("nk_bucket", bucketOf)
       .filter($"nk_bucket" === changedBucket)
     val partitioned = tgt2.filter($"nk_bucket" === changedBucket)
     assert(full.collect().map(_.toString).sorted
       .sameElements(partitioned.collect().map(_.toString).sorted))
 
     // NC-only batch: nothing touched, every file byte-identical
-    apply(batch(3L, i => if (i == 7) "99.9" else "60.0"),
+    applyTo(store, batch(3L, i => if (i == 7) "99.9" else "60.0"),
       Timestamp.valueOf("2024-03-05 00:00:00"), 3L)
     val after3 = dataFiles(root)
     assert(after3.keySet === after.keySet)
     after.foreach { case (rel, bytes) =>
       assert(java.util.Arrays.equals(after3(rel), bytes), s"NC batch rewrote $rel")
     }
+  }
+
+  test("a one device-day batch into a multi-day target rewrites exactly one bucket") {
+    val store = freshStore()
+    val root = Paths.get(store.path(name))
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03", "2024-03-04")
+    val history = (for (dev <- Seq("DEVA", "DEVB"); day <- days)
+      yield deviceDay(dev, day, 1L)).reduce(_ union _)
+    applyTo(store, history, now1, 1L)
+    val before = dataFiles(root)
+    assert(before.keySet.map(bucketDir).size > 1, "fixture must spread over multiple buckets")
+
+    // the next night: one new device-day, 72 readings
+    val night = deviceDay("DEVA", "2024-03-05", 2L)
+    applyTo(store, night, now2, 2L)
+    val nightBuckets = night.select(bucketOf).distinct().collect().map(_.getInt(0))
+    assert(nightBuckets.length == 1, "a device-day must hash to one bucket")
+    val nightBucket = s"nk_bucket=${nightBuckets.head}"
+
+    // every file outside the night's bucket is byte-identical, and that
+    // bucket's files were replaced
+    val after = dataFiles(root)
+    def unchanged(rel: String) = before.get(rel).zip(after.get(rel))
+      .exists { case (b, a) => java.util.Arrays.equals(b, a) }
+    val rewritten = (before.keySet ++ after.keySet).filterNot(unchanged)
+    assert(rewritten.map(bucketDir) === Set(nightBucket))
+    val tgt = store.read(name)
+    assert(tgt.count() === 9 * 72)
+    assert(tgt.filter($"da_inserted_datetime" === now2).count() === 72)
+  }
+
+  test("a timestamp key's bucket is its UTC day's, under any session time zone") {
+    // 18:30-24:00 UTC is already the next calendar day in Asia/Kolkata, so
+    // a bucket built on the session-local date would move these keys
+    val instants = Seq("2024-03-01T19:00:00Z", "2024-03-02T21:15:00Z",
+      "2024-03-03T23:59:59Z").map(Instant.parse)
+    def keys(at: Seq[Instant]): DataFrame =
+      at.map(i => ("DEV1", Timestamp.from(i))).toDF("deviceid", "timestamp")
+    val tzKey = "spark.sql.session.timeZone"
+    def buckets(df: DataFrame, tz: String): Seq[Int] = {
+      val prev = spark.conf.get(tzKey)
+      spark.conf.set(tzKey, tz)
+      try df.select(bucketOf).collect().map(_.getInt(0)).toSeq
+      finally spark.conf.set(tzKey, prev)
+    }
+    val utc = buckets(keys(instants), "UTC")
+    assert(buckets(keys(instants), "Asia/Kolkata") === utc)
+    assert(buckets(keys(instants.map(_.truncatedTo(ChronoUnit.DAYS))), "Asia/Kolkata") === utc)
   }
 }

@@ -21,6 +21,11 @@ class Scd2PropertiesSpec extends SparkSpec {
 
   private val conf = Scd2Config(loadKey = 1L)
   private val t0 = Timestamp.valueOf("2024-03-01 09:00:00")
+  /** Natural-key timestamp of key index `k`: the six keys spread over
+    * three days, two per day, so the partitioned property's keys fall in
+    * several day buckets (see Historizer.nkBucket). */
+  private def keyTs(k: Int): Timestamp =
+    new Timestamp(t0.getTime + (k % 3) * 86400000L + k * 300000L)
 
   // a batch = map of natural-key-index → (humidity, temperature)
   private val genBatch: Gen[Map[Int, (Int, Int)]] = for {
@@ -31,7 +36,7 @@ class Scd2PropertiesSpec extends SparkSpec {
   private def toDf(batch: Map[Int, (Int, Int)], loadKey: Long): DataFrame =
     batch.toSeq.map { case (k, (h, t)) =>
       ("IST", s"$h.0", s"$t.0",
-        new Timestamp(t0.getTime + k * 300000L), "DEV01", loadKey)
+        keyTs(k), "DEV01", loadKey)
     }.toDF("timezone", "humidity", "temperature", "timestamp", "deviceid", "load_key")
 
   private def emptyTarget: DataFrame = spark.createDataFrame(
@@ -77,8 +82,7 @@ class Scd2PropertiesSpec extends SparkSpec {
           .flatMap { case (b, i) => b.map { case (k, v) => k -> (i, v) } }
           .groupBy(_._1).view.mapValues(_.maxBy(_._2._1)._2._2).toMap
         val payloadRight = lastWrite.forall { case (k, (h, _)) =>
-          val ts = new Timestamp(t0.getTime + k * 300000L)
-          byKey(ts).find(_.getAs[String]("da_current_flag") == "Y")
+          byKey(keyTs(k)).find(_.getAs[String]("da_current_flag") == "Y")
             .exists(_.getAs[String]("humidity") == s"$h.0")
         }
         // 6: point-in-time resolves the model AS OF any probe instant —
@@ -87,21 +91,21 @@ class Scd2PropertiesSpec extends SparkSpec {
         val probeInstants: List[Timestamp] =
           Timestamp.valueOf("2024-05-01 00:00:00") ::
             snaps.map { case (t, _) => new Timestamp(t.getTime + 43200000L) }
-        val probeRows = for { k <- (0 until 6).toList; at <- probeInstants }
-          yield (new Timestamp(t0.getTime + k * 300000L), "DEV01", at)
-        val probeDf = probeRows.toDF("timestamp", "deviceid", "as_of")
+        val probeKeys = for { k <- (0 until 6).toList; at <- probeInstants }
+          yield (k, at)
+        val probeDf = probeKeys.map { case (k, at) => (keyTs(k), "DEV01", at) }
+          .toDF("timestamp", "deviceid", "as_of")
         val pit = Historizer.pointInTime(tgt, probeDf, conf, "as_of")
         val got = pit.select(probeDf("timestamp"), probeDf("as_of"),
             tgt("humidity")).collect()
-        val atMostOne = got.length == probeRows.length
+        val atMostOne = got.length == probeKeys.length
         val byProbe = got
           .map(r => (r.getTimestamp(0), r.getTimestamp(1)) -> Option(r.getString(2)))
           .toMap
-        val pitRight = atMostOne && probeRows.forall { case (ts, _, at) =>
-          val k = ((ts.getTime - t0.getTime) / 300000L).toInt
+        val pitRight = atMostOne && probeKeys.forall { case (k, at) =>
           val expected = snaps.takeWhile(_._1.getTime <= at.getTime)
             .lastOption.flatMap(_._2.get(k)).map { case (h, _) => s"$h.0" }
-          byProbe((ts, at)) == expected
+          byProbe((keyTs(k), at)) == expected
         }
         val ok = oneCurrent && ordered && gapless && stable &&
           payloadRight && pitRight
@@ -130,10 +134,15 @@ class Scd2PropertiesSpec extends SparkSpec {
     // key index → nk_bucket, via the engine's own hash
     val bucketOfKey: Map[Int, Int] = (0 until 6).map { k =>
       val b = toDf(Map(k -> (50, 20)), 0L)
-        .select(Historizer.nkBucket(conf.naturalKeys, conf.targetBuckets))
+        .select(Historizer.nkBucket(conf.naturalKeys, conf.targetBuckets,
+          Schemas.scd2Target))
         .first().getInt(0)
       k -> b
     }.toMap
+    // the byte-identity check below is vacuous unless the keys span
+    // several buckets: one per day, two keys each
+    assert(bucketOfKey.values.toSet.size == 3)
+    assert((0 until 3).forall(k => bucketOfKey(k) == bucketOfKey(k + 3)))
 
     val prop = Prop.forAll(Gen.listOfN(3, genBatch)) { batches =>
       val nonEmpty = batches.filter(_.nonEmpty)
@@ -177,8 +186,7 @@ class Scd2PropertiesSpec extends SparkSpec {
         ok &&= byKey.values.forall(
           _.count(_.getAs[String]("da_current_flag") == "Y") == 1)
         ok &&= model.forall { case (k, (h, _)) =>
-          val ts = new Timestamp(t0.getTime + k * 300000L)
-          byKey.get(ts).exists(_.find(
+          byKey.get(keyTs(k)).exists(_.find(
             _.getAs[String]("da_current_flag") == "Y")
             .exists(_.getAs[String]("humidity") == s"$h.0"))
         }
