@@ -1,7 +1,7 @@
 package graft.control
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{ControlEntry, HistLoadControlEntry}
@@ -98,7 +98,8 @@ class ControlTable(spark: SparkSession, store: TableStore) {
 
   /** Mark hist-load rows processed (Airflow-DAG.py:389-402). */
   def markHistLoadProcessed(loadKey: Long, subjectArea: String): Unit = {
-    val df = store.read(histLoadName)
+    // schema-pinned: no schema-inference job on every run
+    val df = store.readOrEmpty(histLoadName, Encoders.product[HistLoadControlEntry].schema)
     // one output file, as in updateStatus
     store.overwrite(histLoadName, df.coalesce(1).select(
       $"load_key", $"subject_area",

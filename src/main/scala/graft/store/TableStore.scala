@@ -97,7 +97,7 @@ class TableStore(spark: SparkSession, baseDir: String) {
     * [[deletePartition]] when the predicate is a partition-column
     * equality. */
   def deleteWhere(name: String, schema: StructType, cond: org.apache.spark.sql.Column): Unit =
-    if (exists(name)) overwrite(name, read(name).filter(!cond || cond.isNull))
+    if (exists(name)) overwrite(name, readOrEmpty(name, schema).filter(!cond || cond.isNull))
 
   /** Small-file compaction: rewrite the table into ~`targetBytes` output
     * files (computed from the current on-disk size — a directory listing,

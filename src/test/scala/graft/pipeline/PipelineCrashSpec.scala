@@ -1,0 +1,171 @@
+package graft.pipeline
+
+import java.nio.file.{Files, Paths}
+import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+import graft.SparkSpec
+import graft.store.TableStore
+
+/** Crash injection for the batch pipeline: every fault point of a run, the
+  * order in which the run reaches them, and `runWithRetry` converging to
+  * the crash-free store after a crash at any one of them. */
+class PipelineCrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  val fixture = getClass.getResource("/firebase_tree.json").getPath
+  val dev = "DEV01OMKARVARMA"
+  val now = Timestamp.valueOf("2024-03-02 11:00:00")
+
+  /** Every fault point a full run reaches. The data points and the
+    * terminal stamps come in this order; the other stamps run on the
+    * stamp thread, each after the data point before it in this list. */
+  val points = Seq(
+    "stamp APP SPECIFIC LOADING",
+    "landed",
+    "stamp APP SPECIFIC LOADING COMPLETED",
+    "int appended",
+    "stamp hist-load in progress",
+    "stamp INTEGRATION LOAD COMPLETED",
+    "scd2 written",
+    "stamp hist-load processed",
+    "stamp Success")
+
+  /** A pipeline that throws the first `times` times it reaches `crashAt`,
+    * records every fault point it reaches, and runs `probe` at each. */
+  class Crashing(val store: TableStore, crashAt: String = "", times: Int = 1,
+      probe: (Crashing, String) => Unit = (_, _) => ()) extends Pipeline(spark, store) {
+    val reached = new ConcurrentLinkedQueue[String]
+    private val left = new AtomicInteger(times)
+    override protected def fault(point: String): Unit = {
+      reached.add(point)
+      probe(this, point)
+      if (point == crashAt && left.getAndDecrement() > 0)
+        throw new RuntimeException(s"injected crash at $point")
+    }
+  }
+
+  def freshStore(): TableStore =
+    new TableStore(spark, Files.createTempDirectory("graft-crash").toString)
+
+  def rows(store: TableStore, name: String): Seq[String] =
+    if (!store.exists(name)) Nil
+    else store.read(name).collect().map(_.toString).toSeq.sorted
+
+  /** Target, control, hist-load and INT rows, every column. */
+  def state(p: Crashing): Seq[Seq[String]] =
+    Seq(p.targetName, p.ctl.controlName, p.ctl.histLoadName, p.intName)
+      .map(rows(p.store, _))
+
+  def statusOf(p: Crashing): Option[String] =
+    p.ctl.prevRunDetails("001").filter(_._3 == 1L).map(_._1)
+
+  lazy val crashFree: Seq[Seq[String]] = {
+    val p = new Crashing(freshStore())
+    val r = p.runWithRetry(fixture, dev, now, retries = 0)
+    assert(!r.skipped && r.inserted == 5)
+    state(p)
+  }
+
+  test("a run reaches every fault point; each stamp follows the write it reports and the stamp before it") {
+    val seen = scala.collection.concurrent.TrieMap.empty[String, (Option[String], Boolean)]
+    val p = new Crashing(freshStore(), probe = (p, point) => {
+      // what the stamp can see when it starts: the control status of this
+      // run, and whether the write it reports is on disk
+      val written = point match {
+        case "stamp APP SPECIFIC LOADING COMPLETED" =>
+          Files.exists(Paths.get(p.store.path(p.landingName), s"deviceid=$dev"))
+        case "stamp hist-load in progress" | "stamp INTEGRATION LOAD COMPLETED" =>
+          p.store.exists(p.intName) &&
+            !p.store.read(p.intName).filter($"load_key" === 1L).isEmpty
+        case "stamp hist-load processed" | "stamp Success" =>
+          p.store.exists(p.targetName)
+        case _ => true
+      }
+      if (point.startsWith("stamp")) seen(point) = (statusOf(p), written)
+    })
+    p.run(fixture, dev, now)
+    assert(p.reached.asScala.toSet == points.toSet)
+    assert(p.reached.size == points.size)
+    assert(seen.values.forall(_._2), s"a stamp ran before its write: $seen")
+    assert(seen.map { case (k, v) => k -> v._1 }.toMap == Map(
+      "stamp APP SPECIFIC LOADING" -> None,
+      "stamp APP SPECIFIC LOADING COMPLETED" -> Some("APP SPECIFIC LOADING"),
+      "stamp hist-load in progress" -> Some("APP SPECIFIC LOADING COMPLETED"),
+      "stamp INTEGRATION LOAD COMPLETED" -> Some("APP SPECIFIC LOADING COMPLETED"),
+      "stamp hist-load processed" -> Some("INTEGRATION LOAD COMPLETED"),
+      "stamp Success" -> Some("INTEGRATION LOAD COMPLETED")))
+    assert(statusOf(p).contains("Success"))
+    assert(rows(p.store, p.ctl.histLoadName).map(_.contains("processed")) == Seq(true))
+  }
+
+  points.foreach { point =>
+    test(s"a crash at '$point' then runWithRetry converges to the crash-free store") {
+      val p = new Crashing(freshStore(), crashAt = point)
+      var slept = 0
+      val r = p.runWithRetry(fixture, dev, now, retries = 1, retryDelayMs = 1L,
+        sleep = _ => slept += 1)
+      assert(slept == 1, "the first attempt did not crash")
+      assert(!r.skipped && r.loadKey == 1L && r.ingested == 6)
+      assert(state(p) == crashFree)
+    }
+  }
+
+  test("a failed stamp is rethrown by run, and the stamps after it are skipped") {
+    val p = new Crashing(freshStore(), crashAt = "stamp INTEGRATION LOAD COMPLETED")
+    val e = intercept[RuntimeException](p.run(fixture, dev, now))
+    assert(e.getMessage == "injected crash at stamp INTEGRATION LOAD COMPLETED")
+    // the hist-load entry issued before it landed; the terminal stamps never ran
+    assert(statusOf(p).contains("APP SPECIFIC LOADING COMPLETED"))
+    assert(rows(p.store, p.ctl.histLoadName).map(_.contains("in progress")) == Seq(true))
+    assert(!p.reached.contains("stamp Success"))
+
+    val q = new Crashing(freshStore(), crashAt = "stamp APP SPECIFIC LOADING COMPLETED")
+    intercept[RuntimeException](q.run(fixture, dev, now))
+    assert(statusOf(q).contains("APP SPECIFIC LOADING"))
+    assert(!q.store.exists(q.ctl.histLoadName))
+    assert(!q.reached.contains("stamp hist-load in progress"))
+    assert(!q.reached.contains("stamp INTEGRATION LOAD COMPLETED"))
+    // the data stages still ran in full before the failure surfaced
+    assert(q.reached.contains("scd2 written"))
+  }
+
+  test("a process that dies after any data write leaves a control row that refuses the next run") {
+    Seq("landed", "int appended", "scd2 written").foreach { death =>
+      // A process death: from the crash on, no stamp that has not started
+      // yet lands, and no rollback or Failed stamp runs. The current-run
+      // stamp is held back until the death (or 1 s), so a run that let a
+      // data write overtake it would lose it.
+      val died = new CountDownLatch(1)
+      val p = new Crashing(freshStore(), crashAt = death, probe = (_, point) => {
+        if (point == "stamp APP SPECIFIC LOADING") died.await(1, TimeUnit.SECONDS)
+        if (point == death) died.countDown()
+        else if (died.getCount == 0) throw new RuntimeException(s"dead before $point")
+      })
+      intercept[RuntimeException](p.run(fixture, dev, now))
+      val intRows = rows(p.store, p.intName)
+      val e = intercept[IllegalArgumentException](
+        new Pipeline(spark, p.store).run(fixture, dev, now))
+      assert(e.getMessage.contains("did not finish with status Success"), death)
+      assert(statusOf(p).exists(_ != "Success"), death)
+      assert(rows(p.store, p.intName) == intRows, s"$death: the refused run wrote INT rows")
+    }
+  }
+
+  test("a failed attempt unpersists its delta") {
+    // cached DataFrames only: the SCD2 merge's eager localCheckpoint is a
+    // persistent RDD too, released by the context cleaner, not by the run
+    def cached = spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)
+    val before = cached
+    val p = new Crashing(freshStore(), crashAt = "landed")
+    p.runWithRetry(fixture, dev, now, retries = 1, retryDelayMs = 1L, sleep = _ => ())
+    assert(cached == before)
+    val q = new Crashing(freshStore(), crashAt = "landed", times = 2)
+    intercept[RuntimeException] {
+      q.runWithRetry(fixture, dev, now, retries = 1, retryDelayMs = 1L, sleep = _ => ())
+    }
+    assert(cached == before)
+  }
+}

@@ -146,4 +146,34 @@ class PipelineSpec extends SparkSpec {
     assert(parquetFiles(pipe.ctl.controlName) == 1)
     assert(parquetFiles(pipe.ctl.histLoadName) == 1)
   }
+
+  test("control-table rewrites read with the caller's schema: one Spark job each, no inference") {
+    val store = freshStore()
+    val ctl = new ControlTable(spark, store)
+    val t = Timestamp.valueOf("2024-03-02 11:00:00")
+    ctl.addHistLoadEntry(1L, "S", "in progress", t, t, t)
+    ctl.addCurrentRunEntry("I", "001", 1L, t)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      f
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsOf(ctl.markHistLoadProcessed(1L, "S")) == 1)
+      assert(jobsOf(store.deleteWhere(ctl.controlName,
+        org.apache.spark.sql.Encoders.product[graft.model.ControlEntry].schema,
+        $"load_key" === 1L)) == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(store.read(ctl.histLoadName).select("status").as[String].collect().toSeq ==
+      Seq("processed"))
+    assert(ctl.control.isEmpty)
+  }
 }
