@@ -28,9 +28,6 @@ case class ControlEntry(
     load_complete_dt_tm: Timestamp,
     load_key: Long)
 
-/** interface_config row (CheckInterface_Metadata.py:18-20). */
-case class InterfaceConfig(interface_cd: String, interface_name: String)
-
 /** HIST_LOAD_CONTROL row (STG_to_INT.py:23-29). */
 case class HistLoadControlEntry(
     load_key: Long,

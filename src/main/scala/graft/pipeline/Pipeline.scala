@@ -32,8 +32,7 @@ class Pipeline(spark: SparkSession, store: TableStore,
   /** One run: tree → landing → INT → SCD2 → finalize. Mirrors the parent
     * DAG task chain (Airflow-DAG.py:574-577) incl. the empty-delta branch
     * (D2) and the prev-run Success gate. `now` is injected for
-    * deterministic tests (reference uses statement-time SYSDATE, F11).
-    * Stamp ordering as in [[runWithRetry]]. */
+    * deterministic tests (reference uses statement-time SYSDATE, F11). */
   def run(treePath: String, deviceId: String, now: Timestamp): RunResult =
     runFrom(ctl.prevRunDetails(interfaceCd), treePath, deviceId, now)
 
@@ -42,44 +41,28 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * metadata lookup serves the Success gate, the watermark and, in
     * [[runWithRetry]], the rollback snapshot.
     *
-    * The data stages run strictly in sequence on the calling thread. The
-    * non-terminal control-table stamps (the current-run entry, "APP
-    * SPECIFIC LOADING COMPLETED", the hist-load entry, "INTEGRATION LOAD
-    * COMPLETED") are written on a [[StampChain]] behind them:
-    *  1. a stamp is issued only after the data write it reports returned;
-    *  2. stamps run one at a time in issue order (the control tables are
-    *     read-modify-write); after a stamp fails the later ones are skipped;
-    *  3. the run waits for every issued stamp before its terminal stamps
-    *     (hist-load processed then "Success", or the empty-delta
-    *     "Success") and rethrows the first stamp failure; it also waits
-    *     for the current-run entry before its first data write, since that
-    *     entry is what makes the next run's gate refuse to start should
-    *     this process die mid-run;
-    *  4. on any exception the run waits for the in-flight stamps, without
-    *     masking that exception, before it leaves — so a rollback sees
-    *     every row the attempt wrote. */
+    * Everything runs in sequence on the calling thread. Each control-table
+    * stamp is written right after the data write it reports, and the
+    * current-run entry before the first data write: should the process die
+    * mid-run, that non-Success entry makes the next run's gate refuse. */
   private def runFrom(prev: Option[(String, Timestamp, Long)], treePath: String,
       deviceId: String, now: Timestamp): RunResult = {
     require(prev.forall(_._1 == "Success"),
       s"previous run for $interfaceCd did not finish with status Success")
     val prevStart = prev.map(_._2).getOrElse(Schemas.epoch)
     val loadKey = prev.map(_._3).getOrElse(0L) + 1L  // F14
-    val stamps = new StampChain
-    var delta: DataFrame = null
-    try {
-      // PRINT_VARIABLES_AND_GENERATE_NEW_LOAD_KEY
-      stamps.issue(stamp("APP SPECIFIC LOADING")(
-        ctl.addCurrentRunEntry(interfaceName, interfaceCd, loadKey, now)))
+    // PRINT_VARIABLES_AND_GENERATE_NEW_LOAD_KEY
+    stamp("APP SPECIFIC LOADING")(
+      ctl.addCurrentRunEntry(interfaceName, interfaceCd, loadKey, now))
 
-      // GET_FIREBASE_DELTA_DHT_DATA: distributed read + flatten + threshold.
-      // Cached: the delta feeds the empty-branch check, the landing write
-      // and the ingested count (reference parity: len(data_list),
-      // STG_Firebase2Oracle.py:73) without re-reading the tree.
-      delta = ingestDelta(treePath, deviceId, prevStart)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // GET_FIREBASE_DELTA_DHT_DATA: distributed read + flatten + threshold.
+    // Cached: the delta feeds the empty-branch check, the landing write
+    // and the ingested count (reference parity: len(data_list),
+    // STG_Firebase2Oracle.py:73) without re-reading the tree.
+    val delta = ingestDelta(treePath, deviceId, prevStart)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
       val ingested = delta.count()
-      // no data write before the current-run entry is on disk
-      stamps.await()
 
       // check_data_list_task branch (D2 / ST6)
       if (ingested == 0) {
@@ -93,8 +76,8 @@ class Pipeline(spark: SparkSession, store: TableStore,
       store.deletePartition(landingName, "deviceid", deviceId)
       store.appendPartitioned(landingName, delta, Seq("deviceid"))
       fault("landed")
-      stamps.issue(stamp("APP SPECIFIC LOADING COMPLETED")(
-        ctl.updateStatus(interfaceCd, loadKey, "APP SPECIFIC LOADING COMPLETED", now)))
+      stamp("APP SPECIFIC LOADING COMPLETED")(
+        ctl.updateStatus(interfaceCd, loadKey, "APP SPECIFIC LOADING COMPLETED", now))
 
       // LANDING_TO_INTERMEDIATE_TABLE (S6) + HIST_LOAD_CONTROL entry.
       // Schema-pinned read: keeps deviceid a string even if a future device
@@ -102,10 +85,10 @@ class Pipeline(spark: SparkSession, store: TableStore,
       store.append(intName, StageToInt(
         store.readOrEmpty(landingName, Schemas.landing), loadKey, deviceId))
       fault("int appended")
-      stamps.issue(stamp("hist-load in progress")(
-        ctl.addHistLoadEntry(loadKey, interfaceName, "in progress", now, now, now)))
-      stamps.issue(stamp("INTEGRATION LOAD COMPLETED")(
-        ctl.updateStatus(interfaceCd, loadKey, "INTEGRATION LOAD COMPLETED", now)))
+      stamp("hist-load in progress")(
+        ctl.addHistLoadEntry(loadKey, interfaceName, "in progress", now, now, now))
+      stamp("INTEGRATION LOAD COMPLETED")(
+        ctl.updateStatus(interfaceCd, loadKey, "INTEGRATION LOAD COMPLETED", now))
 
       // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call).
       // Partition-scoped MERGE: only the natural-key buckets this batch
@@ -129,14 +112,10 @@ class Pipeline(spark: SparkSession, store: TableStore,
       fault("scd2 written")
 
       // UPDATE_STATUS_AND_FINISH_WORKFLOW: Success is written last
-      stamps.await()
       stamp("hist-load processed")(ctl.markHistLoadProcessed(loadKey, interfaceName))
       stamp("Success")(ctl.updateStatus(interfaceCd, loadKey, "Success", now))
       RunResult(loadKey, ingested, inserted, skipped = false)
-    } finally {
-      stamps.close()
-      if (delta != null) delta.unpersist()
-    }
+    } finally delta.unpersist()
   }
 
   /** A control-table stamp: its fault point, then its write. */
@@ -156,8 +135,8 @@ class Pipeline(spark: SparkSession, store: TableStore,
   /** Test seam for crash injection at the run's later task boundaries:
     * after the landing write ("landed"), after the INT append ("int
     * appended"), after the SCD2 write ("scd2 written"), and inside each
-    * control-table stamp before its write ("stamp <status or entry>";
-    * the non-terminal ones run on the stamp thread). A no-op here. */
+    * control-table stamp before its write ("stamp <status or entry>").
+    * A no-op here. */
   protected def fault(point: String): Unit = ()
 
   /** D7 retry policy: the reference retries every Airflow task once after
@@ -171,15 +150,9 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * run replays after `retryDelayMs`. On exhaustion the attempt's
     * control entry is marked Failed, which blocks the next run at the
     * Success gate exactly as in the reference (main.py:15-20). `sleep`
-    * is injectable for tests.
-    *
-    * Stamp ordering within an attempt (see `runFrom`): a stamp is issued
-    * only after the data write it reports has returned; stamps run one at
-    * a time in issue order and a failed stamp skips the later ones; the
-    * first data write and the terminal stamps wait for every issued stamp,
-    * and the terminal stamps rethrow the first stamp failure; and an
-    * attempt that throws first waits for its in-flight stamps, so the
-    * rollback sees every row it wrote. */
+    * is injectable for tests. Stamps run synchronously (see `runFrom`), so
+    * when an attempt throws, every row it wrote is on disk for the
+    * rollback. */
   def runWithRetry(treePath: String, deviceId: String, now: Timestamp,
       retries: Int = 1, retryDelayMs: Long = 30000L,
       sleep: Long => Unit = Thread.sleep): RunResult = {
@@ -190,7 +163,7 @@ class Pipeline(spark: SparkSession, store: TableStore,
       // pre-existing Failed entry from an earlier exhausted run must keep
       // blocking the gate until a human intervenes, and a gate refusal
       // creates nothing to roll back. An attempt whose current-run entry
-      // never landed wrote no data either (runFrom waits for that entry
+      // never landed wrote no data either (runFrom writes that entry
       // before its first data write), so it too has nothing to roll back.
       val prev = ctl.prevRunDetails(interfaceCd)
       val before = prev.map(_._3)
@@ -214,58 +187,12 @@ class Pipeline(spark: SparkSession, store: TableStore,
   }
 
   /** Remove a failed attempt's side effects so the retry replays from a
-    * clean slate. Metadata-scale rewrites (control tables hold a handful
-    * of rows); the INT delete uses the load_key the attempt minted. */
+    * clean slate: its control and hist-load entries, and its INT rows by
+    * the load_key it minted. */
   private def rollbackAttempt(loadKey: Long): Unit = {
-    import org.apache.spark.sql.Encoders
-    store.deleteWhere(ctl.controlName, Encoders.product[graft.model.ControlEntry].schema,
-      col("interface_cd") === interfaceCd && col("load_key") === loadKey)
-    store.deleteWhere(ctl.histLoadName,
-      Encoders.product[graft.model.HistLoadControlEntry].schema,
-      col("load_key") === loadKey && col("subject_area") === interfaceName)
+    ctl.deleteRun(interfaceName, interfaceCd, loadKey)
     store.deleteWhere(intName, Schemas.intermediate, col("load_key") === loadKey)
   }
 }
 
 case class RunResult(loadKey: Long, ingested: Long, inserted: Long, skipped: Boolean)
-
-/** One run's non-terminal control-table stamps, written one at a time in
-  * issue order on one background thread, so that each overlaps the data
-  * stage issued after it. After a stamp fails, the later ones are skipped
-  * and [[await]] rethrows that first failure. The thread is created per
-  * run, from the run's thread, so it inherits that thread's Spark local
-  * properties and no SQL execution id of an unrelated query. */
-private final class StampChain {
-  private val thread = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
-    val t = new Thread(r, "pipeline-stamps")
-    t.setDaemon(true)
-    t
-  }
-  @volatile private var failure: Throwable = null
-
-  def issue(stamp: => Unit): Unit =
-    thread.execute(() =>
-      if (failure == null) try stamp catch { case t: Throwable => failure = t })
-
-  /** Wait for every issued stamp (the thread runs them in issue order, so
-    * a no-op submitted now completes after all of them); rethrow the first
-    * stamp failure. */
-  def await(): Unit = {
-    thread.submit[Unit](() => ()).get()
-    if (failure != null) throw failure
-  }
-
-  /** Wait for the in-flight stamps without throwing, and stop the thread.
-    * An interrupt does not cut the wait short (a stamp still writing after
-    * the run left would escape the rollback); it is re-asserted after. */
-  def close(): Unit = {
-    thread.shutdown()
-    var interrupted = false
-    var stopped = false
-    while (!stopped)
-      try stopped = thread.awaitTermination(Long.MaxValue,
-        java.util.concurrent.TimeUnit.NANOSECONDS)
-      catch { case _: InterruptedException => interrupted = true }
-    if (interrupted) Thread.currentThread().interrupt()
-  }
-}

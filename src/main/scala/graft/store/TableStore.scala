@@ -1,10 +1,18 @@
 package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.util.UUID
+import org.apache.parquet.conf.PlainParquetConfiguration
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+import org.apache.spark.sql.{DataFrame, Encoder, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType, TimestampType}
 
 /** Parquet-directory table store with atomic overwrite via
   * write-to-temp-then-swap (SURVEY §7.5 #1: no table format ships in
@@ -29,16 +37,52 @@ class TableStore(spark: SparkSession, baseDir: String) {
 
   /** Atomic overwrite: materialize to `<name>.tmp`, then swap dirs.
     * Readers either see the old or the new table, never a partial one. */
-  def overwrite(name: String, df: DataFrame): Unit = {
-    val tmp = Paths.get(path(s"$name.tmp"))
-    deleteRecursively(tmp)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val live = Paths.get(path(name))
-    val old = Paths.get(path(s"$name.old"))
-    deleteRecursively(old)
-    if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
+  def overwrite(name: String, df: DataFrame): Unit =
+    swapIn(name)(tmp => df.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+
+  /** A metadata-scale table's rows, read with the encoder's schema (no
+    * inference job): one Spark job, none when the table is absent. */
+  def rows[T](name: String)(implicit enc: Encoder[T]): Seq[T] =
+    if (!exists(name)) Nil
+    else spark.read.schema(enc.schema).parquet(path(name)).as[T].collect().toSeq
+
+  /** Atomic overwrite of a metadata-scale table with driver-side rows: one
+    * parquet file written on the driver by parquet-hadoop (no Spark job),
+    * published by the same temp-then-swap as [[overwrite]]. Columns are
+    * strings, longs or timestamps (INT64 microseconds, UTC-adjusted). The
+    * writer gets a plain parquet configuration: a Hadoop `Configuration`
+    * re-parses its XML defaults on every write, which took a 40-row write
+    * from ~2 ms to ~20 ms on a 4-vCPU host. */
+  def overwriteRows(name: String, schema: StructType, rows: Seq[Row]): Unit =
+    swapIn(name) { tmp =>
+      val (types, setters) = schema.fields.toSeq.map(parquetColumn).unzip
+      val message = new MessageType("spark_schema", types: _*)
+      val groups = new SimpleGroupFactory(message)
+      Files.createDirectories(tmp)
+      val writer = ExampleParquetWriter.builder(new LocalOutputFile(
+        tmp.resolve(s"part-00000-${UUID.randomUUID}.parquet"))).withType(message)
+        .withConf(new PlainParquetConfiguration).build()
+      try rows.foreach { r =>
+        val g = groups.newGroup()
+        setters.indices.filterNot(r.isNullAt).foreach(i => setters(i)(g, i, r))
+        writer.write(g)
+      } finally writer.close()
+    }
+
+  /** A column's parquet type and how to add a row's non-null value to a
+    * record; the types are the ones Spark writes and reads back. */
+  private def parquetColumn(f: StructField): (Type, (Group, Int, Row) => Unit) = {
+    val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
+    f.dataType match {
+      case StringType => (Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType())
+        .named(f.name), (g, i, r) => g.add(i, r.getString(i)))
+      case LongType => (Types.primitive(INT64, rep).named(f.name),
+        (g, i, r) => g.add(i, r.getLong(i)))
+      case TimestampType => (Types.primitive(INT64, rep).as(LogicalTypeAnnotation.timestampType(
+          true, LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name),
+        (g, i, r) => g.add(i, DateTimeUtils.fromJavaTimestamp(r.getTimestamp(i))))
+      case t => throw new IllegalArgumentException(s"overwriteRows: unsupported type $t")
+    }
   }
 
   def append(name: String, df: DataFrame): Unit =
@@ -114,20 +158,14 @@ class TableStore(spark: SparkSession, baseDir: String) {
       if (Files.isRegularFile(p)) Files.size(p) else 0L).sum()
     val nFiles = math.max(1, math.ceil(size.toDouble / targetBytes).toInt)
     val df = read(name)
-    val tmp = Paths.get(path(s"$name.tmp"))
-    deleteRecursively(tmp)
-    if (partitionCols.isEmpty)
-      df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    else
-      df.repartition(nFiles, partitionCols.map(df.col): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-        .parquet(tmp.toString)
-    val live = Paths.get(path(name))
-    val old = Paths.get(path(s"$name.old"))
-    deleteRecursively(old)
-    if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
+    swapIn(name) { tmp =>
+      if (partitionCols.isEmpty)
+        df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      else
+        df.repartition(nFiles, partitionCols.map(df.col): _*)
+          .write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+          .parquet(tmp.toString)
+    }
   }
 
   /** Range-clustered rewrite: range-partition on `clusterCols` and sort
@@ -179,6 +217,21 @@ class TableStore(spark: SparkSession, baseDir: String) {
     * have been materialized (e.g. layout demos). Callers must not read
     * through this store afterwards. */
   def destroy(): Unit = deleteRecursively(Paths.get(baseDir))
+
+  /** Temp-then-swap: `write` fills `<name>.tmp`, which then replaces the
+    * live directory by two atomic renames. A failed write leaves the live
+    * table untouched and only temp garbage, cleaned on the next call. */
+  private def swapIn(name: String)(write: Path => Unit): Unit = {
+    val tmp = Paths.get(path(s"$name.tmp"))
+    deleteRecursively(tmp)
+    write(tmp)
+    val live = Paths.get(path(name))
+    val old = Paths.get(path(s"$name.old"))
+    deleteRecursively(old)
+    if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
+    deleteRecursively(old)
+  }
 
   private def deleteRecursively(p: Path): Unit =
     FsUtils.deleteRecursively(p)

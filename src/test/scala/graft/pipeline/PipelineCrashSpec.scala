@@ -19,9 +19,7 @@ class PipelineCrashSpec extends SparkSpec {
   val dev = "DEV01OMKARVARMA"
   val now = Timestamp.valueOf("2024-03-02 11:00:00")
 
-  /** Every fault point a full run reaches. The data points and the
-    * terminal stamps come in this order; the other stamps run on the
-    * stamp thread, each after the data point before it in this list. */
+  /** Every fault point a full run reaches, in the order it reaches them. */
   val points = Seq(
     "stamp APP SPECIFIC LOADING",
     "landed",
@@ -120,16 +118,22 @@ class PipelineCrashSpec extends SparkSpec {
     // the hist-load entry issued before it landed; the terminal stamps never ran
     assert(statusOf(p).contains("APP SPECIFIC LOADING COMPLETED"))
     assert(rows(p.store, p.ctl.histLoadName).map(_.contains("in progress")) == Seq(true))
-    assert(!p.reached.contains("stamp Success"))
+    // the run stops at the failed stamp: no fault point after it is reached
+    def upTo(point: String) = points.take(points.indexOf(point) + 1)
+    assert(p.reached.asScala.toSeq == upTo("stamp INTEGRATION LOAD COMPLETED"))
 
     val q = new Crashing(freshStore(), crashAt = "stamp APP SPECIFIC LOADING COMPLETED")
     intercept[RuntimeException](q.run(fixture, dev, now))
     assert(statusOf(q).contains("APP SPECIFIC LOADING"))
     assert(!q.store.exists(q.ctl.histLoadName))
-    assert(!q.reached.contains("stamp hist-load in progress"))
-    assert(!q.reached.contains("stamp INTEGRATION LOAD COMPLETED"))
-    // the data stages still ran in full before the failure surfaced
-    assert(q.reached.contains("scd2 written"))
+    assert(q.reached.asScala.toSeq == upTo("stamp APP SPECIFIC LOADING COMPLETED"))
+    assert(!q.store.exists(q.intName))
+
+    // the current-run entry is written before the first data write
+    val r = new Crashing(freshStore(), crashAt = "stamp APP SPECIFIC LOADING")
+    intercept[RuntimeException](r.run(fixture, dev, now))
+    assert(r.reached.asScala.toSeq == upTo("stamp APP SPECIFIC LOADING"))
+    assert(!r.store.exists(r.landingName))
   }
 
   test("a process that dies after any data write leaves a control row that refuses the next run") {

@@ -2,12 +2,13 @@ package graft.pipeline
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.control.ControlTable
 import graft.ingest.TreeIngest
-import graft.model.Schemas
+import graft.model.{ControlEntry, HistLoadControlEntry, Schemas}
 import graft.store.TableStore
 
 /** End-to-end pipeline spec — SURVEY §7.4's minimum slice: tree → flatten
@@ -175,5 +176,59 @@ class PipelineSpec extends SparkSpec {
     assert(store.read(ctl.histLoadName).select("status").as[String].collect().toSeq ==
       Seq("processed"))
     assert(ctl.control.isEmpty)
+  }
+
+  test("control-table writes run one Spark job, the read, and write one parquet file on the driver") {
+    val store = freshStore()
+    val ctl = new ControlTable(spark, store)
+    val t1 = Timestamp.valueOf("2024-03-02 11:00:00.123456")
+    val t2 = Timestamp.valueOf("2024-03-03 11:00:00")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      f
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a rollback with nothing to remove writes nothing
+      assert(jobsOf(ctl.deleteRun("I", "001", 1L)) == 0)
+      assert(!store.exists(ctl.controlName) && !store.exists(ctl.histLoadName))
+      // the first write to an absent table reads nothing
+      assert(jobsOf(ctl.addCurrentRunEntry("I", "001", 1L, t1)) == 0)
+      assert(jobsOf(ctl.addHistLoadEntry(1L, "I", "in progress", t1, t1, t1)) == 0)
+      assert(jobsOf(ctl.updateStatus("001", 1L, "Success", t2)) == 1)
+      assert(jobsOf(ctl.markHistLoadProcessed(1L, "I")) == 1)
+      assert(jobsOf(ctl.addCurrentRunEntry("I", "001", 2L, t2)) == 1)
+      assert(jobsOf(ctl.addHistLoadEntry(2L, "I", "in progress", t2, t2, t2)) == 1)
+      assert(jobsOf(ctl.addCurrentRunEntry("I", "001", 3L, t2)) == 1)
+      // one read per table
+      assert(jobsOf(ctl.deleteRun("I", "001", 2L)) == 2)
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    // Spark reads the driver-written files back, with inferred column types
+    // equal to the case classes' and every value (micros, a null timestamp)
+    // intact
+    def types(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
+    val control = store.read(ctl.controlName)
+    assert(types(control.schema) == types(Encoders.product[ControlEntry].schema))
+    assert(control.as[ControlEntry].collect().sortBy(_.load_key).toSeq == Seq(
+      ControlEntry("I", "001", "Success", t1, t2, 1L),
+      ControlEntry("I", "001", "APP SPECIFIC LOADING", t2, null, 3L)))
+    val hist = store.read(ctl.histLoadName)
+    assert(types(hist.schema) == types(Encoders.product[HistLoadControlEntry].schema))
+    assert(hist.as[HistLoadControlEntry].collect().toSeq ==
+      Seq(HistLoadControlEntry(1L, "I", "processed", t1, t1, t1)))
+    assert(ctl.prevRunDetails("001").contains(("APP SPECIFIC LOADING", t2, 3L)))
+    Seq(ctl.controlName, ctl.histLoadName).foreach { table =>
+      val files = Files.list(java.nio.file.Paths.get(store.path(table))).toArray.toSeq
+      assert(files.size == 1 && files.head.toString.endsWith(".parquet"), files)
+    }
   }
 }
