@@ -41,6 +41,11 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * metadata lookup serves the Success gate, the watermark and, in
     * [[runWithRetry]], the rollback snapshot.
     *
+    * The run reads its batch from the tree once, into a cached delta that
+    * feeds landing, INT and the SCD2 merge; it never reads landing or INT
+    * back. The empty branch is a one-row probe, and the merge's touched
+    * buckets are observed on its delta checkpoint, not collected.
+    *
     * Everything runs in sequence on the calling thread. Each control-table
     * stamp is written right after the data write it reports, and the
     * current-run entry before the first data write: should the process die
@@ -56,54 +61,58 @@ class Pipeline(spark: SparkSession, store: TableStore,
       ctl.addCurrentRunEntry(interfaceName, interfaceCd, loadKey, now))
 
     // GET_FIREBASE_DELTA_DHT_DATA: distributed read + flatten + threshold.
-    // Cached: the delta feeds the empty-branch check, the landing write
-    // and the ingested count (reference parity: len(data_list),
-    // STG_Firebase2Oracle.py:73) without re-reading the tree.
+    // The one read of the tree: the cached delta feeds the empty-branch
+    // probe, the landing write, the INT append and the SCD2 merge.
     val delta = ingestDelta(treePath, deviceId, prevStart)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val ingested = delta.count()
-
-      // check_data_list_task branch (D2 / ST6)
-      if (ingested == 0) {
+      // check_data_list_task branch (D2 / ST6): a one-row probe, not a count
+      if (delta.isEmpty) {
         stamp("Success")(ctl.updateStatus(interfaceCd, loadKey, "Success", now))
         return RunResult(loadKey, ingested = 0, inserted = 0, skipped = true)
       }
 
       // TRUNCATE_EXISTING_LANDING_DATA + LANDING load (S7 + S5): landing is
       // partitioned by deviceid, so the device re-land is a partition-level
-      // delete + append — no rewrite of other devices' data
+      // delete + append — no rewrite of other devices' data. `ingested`
+      // (reference parity: len(data_list), STG_Firebase2Oracle.py:73) is
+      // counted by an Observation on that write.
+      val landed = Observation()
       store.deletePartition(landingName, "deviceid", deviceId)
-      store.appendPartitioned(landingName, delta, Seq("deviceid"))
+      store.appendPartitioned(landingName,
+        delta.observe(landed, count(lit(1)).as("ingested")), Seq("deviceid"))
+      val ingested = landed.get("ingested").asInstanceOf[Long]
       fault("landed")
       stamp("APP SPECIFIC LOADING COMPLETED")(
         ctl.updateStatus(interfaceCd, loadKey, "APP SPECIFIC LOADING COMPLETED", now))
 
-      // LANDING_TO_INTERMEDIATE_TABLE (S6) + HIST_LOAD_CONTROL entry.
-      // Schema-pinned read: keeps deviceid a string even if a future device
-      // id looks numeric to partition-column type inference.
-      store.append(intName, StageToInt(
-        store.readOrEmpty(landingName, Schemas.landing), loadKey, deviceId))
+      // LANDING_TO_INTERMEDIATE_TABLE (S6) + HIST_LOAD_CONTROL entry. The
+      // device's landing partition was just re-landed from `delta`, so INT
+      // is staged from the cache, not from a read-back of landing.
+      // StageToInt keeps Schemas.intermediate's column order, which sets
+      // the delta hash's column order.
+      val batch = StageToInt(delta, loadKey, deviceId)
+      store.append(intName, batch)
       fault("int appended")
       stamp("hist-load in progress")(
         ctl.addHistLoadEntry(loadKey, interfaceName, "in progress", now, now, now))
       stamp("INTEGRATION LOAD COMPLETED")(
         ctl.updateStatus(interfaceCd, loadKey, "INTEGRATION LOAD COMPLETED", now))
 
-      // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call).
-      // Partition-scoped MERGE: only the natural-key buckets this batch
-      // touches are rewritten (dynamic partition overwrite), exactly as in
-      // StreamingIngest.scd2Sink. The new bucket content streams straight
+      // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call), fed
+      // the same cached batch. Partition-scoped MERGE: only the natural-key
+      // buckets this batch touches (observed on the merge's delta
+      // checkpoint) are rewritten (dynamic partition overwrite), exactly as
+      // in StreamingIngest.scd2Sink. The new bucket content streams straight
       // into the write, which lazily reads the old files of those buckets:
       // safe, because dynamic partition overwrite replaces partitions only
       // at job commit, after every task has finished reading. `inserted` is
       // counted by an Observation on that same write — no extra job, no
       // re-scan of the target.
-      val src = store.readOrEmpty(intName, Schemas.intermediate)
       val tgtStored = store.readOrEmpty(targetName, Schemas.scd2TargetStored)
       val observed = Observation()
       val touched = Historizer.applyScd2Partitioned(
-          src, tgtStored, conf.copy(loadKey = loadKey), now)
+          batch, tgtStored, conf.copy(loadKey = loadKey), now)
         .observe(observed, count(when(
           col("da_inserted_datetime") === lit(now) && col("da_current_flag") === "Y",
           1)).as("inserted"))
@@ -144,10 +153,10 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * 26-33`). The engine's unit of recovery is the whole run (its "task
     * boundaries" are the control-table status transitions, ST5), so a
     * failed attempt is ROLLED BACK — control rows, hist-load entry and
-    * the INT append for the attempt's load key are removed; the landing
-    * re-land is idempotent (partition delete + append) and the SCD2
-    * target swap is atomic, replaying the same batch as 'NC' — and the
-    * run replays after `retryDelayMs`. On exhaustion the attempt's
+    * the INT append for the attempt's load key and device are removed;
+    * the landing re-land is idempotent (partition delete + append) and the
+    * SCD2 target swap is atomic, replaying the same batch as 'NC' — and
+    * the run replays after `retryDelayMs`. On exhaustion the attempt's
     * control entry is marked Failed, which blocks the next run at the
     * Success gate exactly as in the reference (main.py:15-20). `sleep`
     * is injectable for tests. Stamps run synchronously (see `runFrom`), so
@@ -179,7 +188,7 @@ class Pipeline(spark: SparkSession, store: TableStore,
             throw e
           }
           attempt += 1
-          minted.foreach { case (_, _, key) => rollbackAttempt(key) }
+          minted.foreach { case (_, _, key) => rollbackAttempt(key, deviceId) }
           sleep(retryDelayMs)
       }
     }
@@ -188,10 +197,13 @@ class Pipeline(spark: SparkSession, store: TableStore,
 
   /** Remove a failed attempt's side effects so the retry replays from a
     * clean slate: its control and hist-load entries, and its INT rows by
-    * the load_key it minted. */
-  private def rollbackAttempt(loadKey: Long): Unit = {
+    * the load_key it minted and its device. Load keys are minted per
+    * interface, so another interface sharing the store holds INT rows
+    * under the same key; the device scopes the delete to this attempt's. */
+  private def rollbackAttempt(loadKey: Long, deviceId: String): Unit = {
     ctl.deleteRun(interfaceName, interfaceCd, loadKey)
-    store.deleteWhere(intName, Schemas.intermediate, col("load_key") === loadKey)
+    store.deleteWhere(intName, Schemas.intermediate,
+      col("load_key") === loadKey && col("deviceid") === deviceId)
   }
 }
 

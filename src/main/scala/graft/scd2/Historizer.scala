@@ -1,7 +1,7 @@
 package graft.scd2
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
@@ -288,7 +288,12 @@ object Historizer {
     * columns + nk_bucket. High-water marks and delta classification still
     * see the FULL target (the close-out scan prunes to touched buckets —
     * a 'U' row's current version lives in the same bucket as its natural
-    * key by construction). */
+    * key by construction).
+    *
+    * One collect runs here, of the batch's buckets (to prune the join
+    * side). The touched buckets are observed on the delta's eager
+    * checkpoint, not collected by a second one; an all-'NC' batch touches
+    * none. */
   def applyScd2Partitioned(src: DataFrame, tgtStored: DataFrame,
       conf: Scd2Config, now: Timestamp): DataFrame = {
     val tgt = tgtStored.drop("nk_bucket")
@@ -305,14 +310,16 @@ object Historizer {
     val tgtPruned = tgtStored.filter(col("nk_bucket").isin(srcBuckets: _*))
       .drop("nk_bucket")
     // localCheckpoint for the same reason as applyScd2 — per-micro-batch
-    // calls from StreamingIngest.scd2Sink must not grow the cache registry
+    // calls from StreamingIngest.scd2Sink must not grow the cache registry.
+    // The I/U rows' buckets (≤ targetBuckets values) are observed on that
+    // checkpoint's job; their literal IN list lets the touched-bucket
+    // filter prune partitions at the parquet scan.
+    val observed = Observation()
     val delta = deltaDetect(src, tgtPruned, conf, marksFrom = Some(tgt))
+      .observe(observed, collect_set(
+        when(col("upsert_cd").isin("I", "U"), bucketOf)).as("touched"))
       .localCheckpoint(true)
-    // ≤ targetBuckets distinct values — metadata-scale collect, and the
-    // literal IN list lets the touched-bucket filter prune partitions at
-    // the parquet scan
-    val touched = delta.filter(col("upsert_cd").isin("I", "U"))
-      .select(bucketOf.as("__b")).distinct().collect().map(_.getInt(0)).toSeq
+    val touched = observed.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSeq
     val tgtTouched = tgtStored
       .filter(col("nk_bucket").isin(touched: _*)).drop("nk_bucket")
     val closed = closeOut(tgtTouched, delta, now)

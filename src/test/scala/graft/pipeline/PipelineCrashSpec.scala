@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
@@ -139,14 +139,11 @@ class PipelineCrashSpec extends SparkSpec {
   test("a process that dies after any data write leaves a control row that refuses the next run") {
     Seq("landed", "int appended", "scd2 written").foreach { death =>
       // A process death: from the crash on, no stamp that has not started
-      // yet lands, and no rollback or Failed stamp runs. The current-run
-      // stamp is held back until the death (or 1 s), so a run that let a
-      // data write overtake it would lose it.
-      val died = new CountDownLatch(1)
+      // yet lands, and no rollback or Failed stamp runs.
+      var died = false
       val p = new Crashing(freshStore(), crashAt = death, probe = (_, point) => {
-        if (point == "stamp APP SPECIFIC LOADING") died.await(1, TimeUnit.SECONDS)
-        if (point == death) died.countDown()
-        else if (died.getCount == 0) throw new RuntimeException(s"dead before $point")
+        if (point == death) died = true
+        else if (died) throw new RuntimeException(s"dead before $point")
       })
       intercept[RuntimeException](p.run(fixture, dev, now))
       val intRows = rows(p.store, p.intName)
@@ -156,6 +153,38 @@ class PipelineCrashSpec extends SparkSpec {
       assert(statusOf(p).exists(_ != "Success"), death)
       assert(rows(p.store, p.intName) == intRows, s"$death: the refused run wrote INT rows")
     }
+  }
+
+  test("a retried attempt's rollback leaves another interface's INT rows of the same load key") {
+    // per-device interfaces share one store and each mints load keys 1, 2, …
+    val store = freshStore()
+    def intRows(device: String, loadKey: Long): Seq[String] =
+      store.read("dht11_data_int").filter($"deviceid" === device && $"load_key" === loadKey)
+        .collect().map(_.toString).toSeq.sorted
+    val dht00 = new Pipeline(spark, store, interfaceName = "ESP_DHT11_DATA_DHT00",
+      interfaceCd = "DHT00")
+    assert(dht00.run(fixture, "DHT00", now).loadKey == 1L)
+    val before = intRows("DHT00", 1L)
+    assert(before.size == 6)
+
+    val dht01 = new Pipeline(spark, store, interfaceName = "ESP_DHT11_DATA_DHT01",
+      interfaceCd = "DHT01") {
+      var crashes = 1
+      override protected def fault(point: String): Unit =
+        if (point == "int appended" && crashes > 0) {
+          crashes -= 1
+          throw new RuntimeException(s"injected crash at $point")
+        }
+    }
+    val r = dht01.runWithRetry(fixture, "DHT01", now, retries = 1, retryDelayMs = 1L,
+      sleep = _ => ())
+    assert(dht01.crashes == 0, "the first attempt did not crash")
+    assert(!r.skipped && r.loadKey == 1L && r.ingested == 6)
+    assert(intRows("DHT00", 1L) == before)
+    // the crashed attempt's own rows were rolled back: one copy, not two
+    assert(intRows("DHT01", 1L) == before.map(_.replace("DHT00", "DHT01")))
+    assert(dht00.ctl.prevRunDetails("DHT00").map(_._1).contains("Success"))
+    assert(dht01.ctl.prevRunDetails("DHT01").map(_._1).contains("Success"))
   }
 
   test("a failed attempt unpersists its delta") {

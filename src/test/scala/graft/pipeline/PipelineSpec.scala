@@ -132,6 +132,80 @@ class PipelineSpec extends SparkSpec {
     assert(tgt.filter($"da_current_flag" === "Y").count() == 5)
   }
 
+  test("a run computes its batch once: every stage reads the cached delta") {
+    val store = freshStore()
+    val computed = spark.sparkContext.longAccumulator("delta rows")
+    val pipe = new Pipeline(spark, store) {
+      override protected def ingestDelta(treePath: String, deviceId: String,
+          prevStart: Timestamp) = {
+        val rows = computed  // a local, so the task closure does not capture the pipeline
+        super.ingestDelta(treePath, deviceId, prevStart).filter { _ => rows.add(1); true }
+      }
+    }
+    val r = pipe.run(fixture, dev, Schemas.epoch)
+    assert(!r.skipped && r.ingested == 6)
+    assert(computed.value == r.ingested)
+  }
+
+  test("after the landing write, no plan of the run scans landing or INT") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val store = freshStore()
+    // the table directories each execution's leaf file scans read, once the
+    // current run's landing write has returned
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    @volatile var landed = false
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (landed) collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .flatMap(_.relation.location.rootPaths).foreach(p => scanned.add(p.getName))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val pipe = new Pipeline(spark, store) {
+      override protected def fault(point: String): Unit = if (point == "landed") {
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        landed = true
+      }
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // epoch threshold: the second run re-ingests the fixture into a
+      // non-empty target, so its merge scans the target
+      Seq(0L, 1000L).foreach { ms =>
+        landed = false
+        assert(!pipe.run(fixture, dev, new Timestamp(Schemas.epoch.getTime + ms)).skipped)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val tables = scanned.toArray.toSet
+    assert(tables.contains(pipe.targetName), s"the listener saw no target scan: $tables")
+    assert(!tables.contains(pipe.landingName) && !tables.contains(pipe.intName), tables)
+  }
+
+  test("INT holds the device's landing rows plus the load key (S6), in the intermediate schema") {
+    val store = freshStore()
+    val pipes = Seq("DHT00", "DHT01").map(d =>
+      d -> new Pipeline(spark, store, interfaceName = s"ESP_DHT11_DATA_$d", interfaceCd = d))
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    // both interfaces mint load key 1, then 2 (re-ingest from the epoch)
+    Seq(0L, 1000L).foreach { ms =>
+      pipes.foreach { case (d, p) =>
+        val r = p.run(fixture, d, new Timestamp(Schemas.epoch.getTime + ms))
+        assert(!r.skipped)
+        val landing = store.readOrEmpty(p.landingName, Schemas.landing)
+          .filter($"deviceid" === d).withColumn("load_key", lit(r.loadKey))
+        val int = store.read(p.intName)
+        assert(int.schema.fieldNames.toSeq == Schemas.intermediate.fieldNames.toSeq)
+        val intRows = int.filter($"deviceid" === d && $"load_key" === r.loadKey)
+        assert(intRows.count() == r.ingested)
+        assert(sorted(intRows) == sorted(landing), s"$d load key ${r.loadKey}")
+      }
+    }
+  }
+
   test("control-table stamps keep each control table at one parquet file") {
     val store = freshStore()
     val pipe = new Pipeline(spark, store)

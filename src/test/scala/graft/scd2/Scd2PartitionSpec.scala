@@ -121,9 +121,12 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(full.collect().map(_.toString).sorted
       .sameElements(partitioned.collect().map(_.toString).sorted))
 
-    // NC-only batch: nothing touched, every file byte-identical
-    applyTo(store, batch(3L, i => if (i == 7) "99.9" else "60.0"),
-      Timestamp.valueOf("2024-03-05 00:00:00"), 3L)
+    // NC-only batch: the merge returns no row, so no bucket is touched and
+    // every file stays byte-identical
+    val nc = Historizer.applyScd2Partitioned(batch(3L, i => if (i == 7) "99.9" else "60.0"),
+      store.read(name), conf.copy(loadKey = 3L), Timestamp.valueOf("2024-03-05 00:00:00"))
+    assert(nc.isEmpty)
+    store.overwritePartitionsDynamic(name, nc, Seq("nk_bucket"))
     val after3 = dataFiles(root)
     assert(after3.keySet === after.keySet)
     after.foreach { case (rel, bytes) =>
@@ -158,6 +161,53 @@ class Scd2PartitionSpec extends SparkSpec {
     val tgt = store.read(name)
     assert(tgt.count() === 9 * 72)
     assert(tgt.filter($"da_inserted_datetime" === now2).count() === 72)
+  }
+
+  /** `f`'s result and the names of the SQL executions it starts, in order. */
+  private def executionsOf[T](f: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        names.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        names.add(funcName)
+    }
+    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val result = f
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      (result, names.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the partitioned apply runs one collect, for the batch's buckets, and observes the touched ones") {
+    val store = freshStore()
+    applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
+    val tgtStored = store.read(name)
+    val (merged, names) = executionsOf(Historizer.applyScd2Partitioned(
+      batch(2L, i => if (i == 7) "99.9" else "60.0"), tgtStored, conf.copy(loadKey = 2L), now2))
+    assert(names.count(_ == "collect") == 1, names)
+    assert(names.count(_ == "localCheckpoint") == 1, names)
+    // the one 'U' key's bucket is the only one the merge returns
+    val dev7 = batch(2L, _ => "").filter($"deviceid" === "DEV7").select(bucketOf).first().getInt(0)
+    assert(merged.select("nk_bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(dev7))
+  }
+
+  test("an empty batch into an empty target returns without blocking on its observation") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val store = freshStore()
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.intermediate)
+    val merged = Future {
+      val tgtStored = store.readOrEmpty(name, Schemas.scd2TargetStored)
+      Historizer.applyScd2Partitioned(empty, tgtStored, conf, now1).count()
+    }
+    assert(Await.result(merged, 120.seconds) == 0L)
   }
 
   test("a timestamp key's bucket is its UTC day's, under any session time zone") {
