@@ -1,10 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, Predicate}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, TrueLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.NullType
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Column wrappers over Spark's native Bloom-filter machinery — the same
   * `BloomFilterAggregate`/`BloomFilterMightContain` pair Catalyst injects
@@ -49,6 +55,47 @@ object BloomOps {
     * filter side must be foldable (a literal), which also means it ships
     * to executors once inside the task binary, not per row. */
   def mightContain(bloom: Column, hash: Column): Column =
-    ColumnBridge.column(BloomFilterMightContain(
+    ColumnBridge.column(MightContainLong(
       ColumnBridge.expression(bloom), ColumnBridge.expression(hash)))
+}
+
+/** Spark's `might_contain(bloom, hash)` ([[BloomFilterMightContain]]: same
+  * input checks — the filter must be foldable or an uncorrelated scalar
+  * subquery — and the same answers), with generated code that passes the
+  * hash as a primitive long. Spark's own generated code casts it,
+  * `mightContainLong((Long)<value>)`; when the hash folds to a negative
+  * literal, Janino reads `(Long)-5L` as a subtraction, the class does not
+  * compile, and the whole stage falls back to the interpreter. */
+case class MightContainLong(left: Expression, right: Expression)
+    extends BinaryExpression with Predicate {
+
+  @transient private lazy val builtin = BloomFilterMightContain(left, right)
+  @transient private lazy val bloomFilter: BloomFilter = left.eval() match {
+    case bytes: Array[Byte] => builtin.deserialize(bytes)
+    case _ => null
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = builtin.checkInputDataTypes()
+  override def nullable: Boolean = true
+  override def prettyName: String = "might_contain"
+  override def eval(input: InternalRow): Any = builtin.eval(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (bloomFilter == null || right.dataType == NullType)
+      ev.copy(isNull = TrueLiteral, value = FalseLiteral)
+    else {
+      val bf = ctx.addReferenceObj("bloomFilter", bloomFilter, classOf[BloomFilter].getName)
+      val hash = right.genCode(ctx)
+      ev.copy(code = code"""
+        ${hash.code}
+        boolean ${ev.isNull} = ${hash.isNull};
+        boolean ${ev.value} = false;
+        if (!${ev.isNull}) {
+          ${ev.value} = $bf.mightContainLong(${hash.value});
+        }""")
+    }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): MightContainLong =
+    copy(left = newLeft, right = newRight)
 }

@@ -31,11 +31,8 @@ object GraftExtensions {
       new ExpressionInfo(classOf[SimHash32].getName, "graft_simhash32"),
       (es: Seq[Expression]) => SimHash32(es.head)),
     (FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (es: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1))))
+      new ExpressionInfo(classOf[MightContainLong].getName, "graft_might_contain"),
+      (es: Seq[Expression]) => MightContainLong(es(0), es(1))))
 
   def register(spark: SparkSession): Unit =
     functions.foreach { case (id, info, builder) =>

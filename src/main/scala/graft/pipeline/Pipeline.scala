@@ -43,8 +43,9 @@ class Pipeline(spark: SparkSession, store: TableStore,
     *
     * The run reads its batch from the tree once, into a cached delta that
     * feeds landing, INT and the SCD2 merge; it never reads landing or INT
-    * back. The empty branch is a one-row probe, and the merge's touched
-    * buckets are observed on its delta checkpoint, not collected.
+    * back. The empty branch is a one-row probe. The merge checkpoints the
+    * batch on entry and observes the batch's buckets and its touched ones
+    * on its two checkpoints; nothing is collected.
     *
     * Everything runs in sequence on the calling thread. Each control-table
     * stamp is written right after the data write it reports, and the

@@ -290,14 +290,25 @@ object Historizer {
     * a 'U' row's current version lives in the same bucket as its natural
     * key by construction).
     *
-    * One collect runs here, of the batch's buckets (to prune the join
-    * side). The touched buckets are observed on the delta's eager
-    * checkpoint, not collected by a second one; an all-'NC' batch touches
-    * none. */
+    * `src` is read once: the batch slice is checkpointed on entry, and
+    * delta detection and the insert join both read that checkpoint, so a
+    * lazy source (a `foreachBatch` micro-batch, a file scan) is not
+    * re-parsed per consumer. No collect runs here: the batch's buckets
+    * are observed on the source checkpoint's job, the touched ones on the
+    * delta's; an all-'NC' batch touches none. */
   def applyScd2Partitioned(src: DataFrame, tgtStored: DataFrame,
       conf: Scd2Config, now: Timestamp): DataFrame = {
     val tgt = tgtStored.drop("nk_bucket")
     val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, tgt.schema)
+    // The batch slice, read once: delta detection and the insert join both
+    // consume it. localCheckpoint for the same reason as applyScd2 —
+    // per-micro-batch calls from StreamingIngest.scd2Sink must not grow
+    // the cache registry. The batch's buckets (≤ targetBuckets values) are
+    // observed on that checkpoint's job.
+    val srcObserved = Observation()
+    val batch = src.filter(col("load_key") === lit(conf.loadKey))
+      .observe(srcObserved, collect_set(bucketOf).as("buckets"))
+      .localCheckpoint(true)
     // Prune the delta-detect JOIN side to the buckets the batch's natural
     // keys hash into (equal keys hash to equal buckets, so no match is
     // lost; target-only rows classify NC, which nothing downstream
@@ -305,29 +316,28 @@ object Historizer {
     // O(current target slice) into O(batch-touched bucket slice) — at
     // 100 TB the difference between scanning the table and scanning a
     // few buckets. Marks still aggregate over the FULL target.
-    val srcBuckets = src.filter(col("load_key") === lit(conf.loadKey))
-      .select(bucketOf.as("__b")).distinct().collect().map(_.getInt(0)).toSeq
-    val tgtPruned = tgtStored.filter(col("nk_bucket").isin(srcBuckets: _*))
+    val tgtPruned = tgtStored.filter(col("nk_bucket").isin(buckets(srcObserved): _*))
       .drop("nk_bucket")
-    // localCheckpoint for the same reason as applyScd2 — per-micro-batch
-    // calls from StreamingIngest.scd2Sink must not grow the cache registry.
-    // The I/U rows' buckets (≤ targetBuckets values) are observed on that
-    // checkpoint's job; their literal IN list lets the touched-bucket
-    // filter prune partitions at the parquet scan.
+    // The I/U rows' buckets are observed on the delta checkpoint's job;
+    // their literal IN list lets the touched-bucket filter prune
+    // partitions at the parquet scan.
     val observed = Observation()
-    val delta = deltaDetect(src, tgtPruned, conf, marksFrom = Some(tgt))
+    val delta = deltaDetect(batch, tgtPruned, conf, marksFrom = Some(tgt))
       .observe(observed, collect_set(
-        when(col("upsert_cd").isin("I", "U"), bucketOf)).as("touched"))
+        when(col("upsert_cd").isin("I", "U"), bucketOf)).as("buckets"))
       .localCheckpoint(true)
-    val touched = observed.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSeq
     val tgtTouched = tgtStored
-      .filter(col("nk_bucket").isin(touched: _*)).drop("nk_bucket")
+      .filter(col("nk_bucket").isin(buckets(observed): _*)).drop("nk_bucket")
     val closed = closeOut(tgtTouched, delta, now)
-    val ins = insertRows(src, delta, tgt.columns.toSeq, conf, now)
+    val ins = insertRows(batch, delta, tgt.columns.toSeq, conf, now)
     require(ins.columns.sorted.sameElements(tgt.columns.sorted),
       s"Columns returned by select query and columns in target table are not same: " +
         s"${ins.columns.sorted.mkString(",")} vs ${tgt.columns.sorted.mkString(",")}")
     closed.unionByName(ins.select(tgt.columns.map(col).toSeq: _*))
       .withColumn("nk_bucket", bucketOf)
   }
+
+  /** The bucket set an [[applyScd2Partitioned]] observation recorded. */
+  private def buckets(observed: Observation): Seq[Int] =
+    observed.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSeq
 }

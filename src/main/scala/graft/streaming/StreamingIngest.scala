@@ -71,7 +71,12 @@ object StreamingIngest {
     * Historizer as the batch pipeline, with load_key = batchId + 1
     * (monotone, checkpoint-stable — a replayed batch reuses its id and
     * absorbs as 'NC', giving effectively-once semantics on top of the
-    * file source's exactly-once offsets). */
+    * file source's exactly-once offsets).
+    *
+    * The micro-batch is read once per trigger: `foreachBatch` hands over a
+    * plan that every action re-runs (listing and parsing the batch's
+    * files again), and the merge checkpoints it on entry, before its
+    * consumers read it. */
   def scd2Sink(landing: DataFrame, store: TableStore, targetName: String,
       checkpointDir: String, conf: Scd2Config = Scd2Config(),
       clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),

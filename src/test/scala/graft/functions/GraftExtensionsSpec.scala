@@ -27,10 +27,23 @@ class GraftExtensionsSpec extends SparkSpec {
         .head().getAs[Array[Byte]](0)
     }
     spark.createDataFrame(Seq(Tuple1(bloom))).toDF("bf").createOrReplaceTempView("bf_v")
-    val hit = spark.sql(
-      "SELECT graft_might_contain((SELECT bf FROM bf_v), xxhash64(CAST(7 AS STRING))) AS m")
+    def probe(hash: String): Boolean = spark.sql(
+      s"SELECT graft_might_contain((SELECT bf FROM bf_v), $hash) AS m")
       .collect()(0).getBoolean(0)
-    assert(hit)
+    // both hashes fold to a negative long literal in the probe's generated
+    // code (xxhash64('7') is negative); with the interpreter fallback off,
+    // code that does not compile throws instead of running interpreted
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      assert(probe("xxhash64(CAST(7 AS STRING))"))
+      assert(probe("CAST(-5 AS BIGINT)") ==
+        org.apache.spark.util.sketch.BloomFilter.readFrom(bloom).mightContainLong(-5L))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("integer kernels null out on mismatched lengths; double dot prefix-truncates") {

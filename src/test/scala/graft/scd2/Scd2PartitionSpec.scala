@@ -163,37 +163,57 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(tgt.filter($"da_inserted_datetime" === now2).count() === 72)
   }
 
-  /** `f`'s result and the names of the SQL executions it starts, in order. */
-  private def executionsOf[T](f: => T): (T, Seq[String]) = {
-    import org.apache.spark.sql.execution.QueryExecution
+  /** `f`'s result and the SQL executions it starts, in order: each one's
+    * action name and the table directories its leaf file scans read. */
+  private def executionsOf[T](f: => T): (T, Seq[(String, Seq[String])]) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.util.QueryExecutionListener
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new QueryExecutionListener {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      private def record(funcName: String, qe: QueryExecution): Unit =
+        seen.add(funcName -> collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec => s
+        }.flatMap(_.relation.location.rootPaths).map(_.toUri.getPath.stripSuffix("/")))
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        names.add(funcName)
+        record(funcName, qe)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        names.add(funcName)
+        record(funcName, qe)
     }
     org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val result = f
       org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      (result, names.asScala.toSeq)
+      (result, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("the partitioned apply runs one collect, for the batch's buckets, and observes the touched ones") {
+  test("the partitioned apply runs no collect; both bucket sets are observed") {
     val store = freshStore()
     applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
     val tgtStored = store.read(name)
-    val (merged, names) = executionsOf(Historizer.applyScd2Partitioned(
+    val (merged, executions) = executionsOf(Historizer.applyScd2Partitioned(
       batch(2L, i => if (i == 7) "99.9" else "60.0"), tgtStored, conf.copy(loadKey = 2L), now2))
-    assert(names.count(_ == "collect") == 1, names)
-    assert(names.count(_ == "localCheckpoint") == 1, names)
+    val names = executions.map(_._1)
+    assert(names.count(_ == "collect") == 0, names)
+    // one checkpoint of the source batch, one of the delta
+    assert(names.count(_ == "localCheckpoint") == 2, names)
     // the one 'U' key's bucket is the only one the merge returns
     val dev7 = batch(2L, _ => "").filter($"deviceid" === "DEV7").select(bucketOf).first().getInt(0)
     assert(merged.select("nk_bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(dev7))
+  }
+
+  test("a parquet source is scanned by one execution across the merge and its write") {
+    val store = freshStore()
+    applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
+    val srcDir = Files.createTempDirectory("graft-scd2-src").resolve("batch").toString
+    batch(2L, i => if (i == 7) "99.9" else "60.0").repartition(3).write.parquet(srcDir)
+    val (_, executions) = executionsOf(
+      applyTo(store, spark.read.parquet(srcDir), now2, 2L))
+    val scans = executions.filter(_._2.contains(Paths.get(srcDir).toUri.getPath.stripSuffix("/")))
+    assert(scans.size == 1, executions)
+    assert(store.read(name).count() === 41)
   }
 
   test("an empty batch into an empty target returns without blocking on its observation") {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -748,6 +749,59 @@ class StreamingSpec extends SparkSpec {
     val current = after2.filter(col("da_current_flag") === "Y")
     assert(current.count() === 2) // one current row per natural key
     assert(current.filter(col("humidity") === "70.0").count() === 1)
+  }
+
+  test("the SCD2 sink reads each micro-batch's input file in one execution") {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft-stream-once")
+    val in = dir.resolve("in"); Files.createDirectories(in)
+    val store = new TableStore(spark, dir.resolve("store").toString)
+    Seq("t1.json" -> "62.0", "t2.json" -> "70.0").foreach { case (file, hum) =>
+      Files.writeString(in.resolve(file),
+        s"""{"2024-03-01": {"09:00:00": {"TimeZone": "IST", "Humidity": "$hum",
+           |"Temperature": "29.4", "Timestamp": "2024-03-01 09:00:00"}}}""".stripMargin)
+    }
+    // The files an execution reads: its plan's file scans, and the file
+    // scans in the lineage of the RDDs it scans — foreachBatch hands the
+    // sink its micro-batch as an RDD over the file source's plan, and a
+    // checkpointed RDD's lineage stops at its checkpoint.
+    def lineageFiles(rdd: RDD[_]): Seq[String] = rdd match {
+      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(_.filePath.toString))
+      case r => r.dependencies.flatMap(d => lineageFiles(d.rdd))
+    }
+    val readers = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        readers.add(collectWithSubqueries(qe.executedPlan) {
+          case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+          case r: RDDScanExec => lineageFiles(r.rdd)
+        }.flatten.map(p => p.substring(p.lastIndexOf('/') + 1)).distinct)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before the start: the stream runs in a clone of the
+    // session, which copies the listeners it has at that point
+    spark.listenerManager.register(listener)
+    try {
+      val landing = StreamingIngest.landingStream(
+        StreamingIngest.readTreeStream(spark, in.toString, maxFilesPerTrigger = 1), "DEV01")
+      StreamingIngest.scd2Sink(landing, store, "hist", dir.resolve("ckpt").toString,
+        clock = () => ts("2024-06-01 00:00:00"), trigger = Trigger.AvailableNow())
+        .awaitTermination()
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val reads = readers.asScala.toSeq
+    Seq("t1.json", "t2.json").foreach { file =>
+      assert(reads.count(_.contains(file)) == 1, s"$file: $reads")
+    }
+    // two micro-batches, the second a new version of the first's reading
+    val hist = store.read("hist")
+    assert(hist.count() === 2)
+    assert(hist.filter(col("da_current_flag") === "Y")
+      .select("humidity").collect().map(_.getString(0)).toSeq == Seq("70.0"))
   }
 
   test("streaming classification appends batch-identical verdicts (fit-batch/score-stream)") {
