@@ -14,7 +14,6 @@ import org.apache.spark.sql.SparkSession
   * throws is listed under `failed`, left out of the total, and fails
   * the gate. Env: SPARK_GRAFT_SF_DIR (data dir),
   * SPARK_GRAFT_CPUS (local[N] + shuffle partitions, default 32),
-  * SPARK_GRAFT_EXPLAIN=1 (print the formatted plan per query to stderr),
   * SPARK_GRAFT_RESTART_EVERY (stop + rebuild the SparkSession every N
   * queries, default 25), SPARK_GRAFT_NO_RERUN=1 (skip the gate's
   * adjudication re-run — used when recording baselines).
@@ -209,8 +208,7 @@ object Bench {
     * sweep — measured: they inflate later queries ~4× across an 87-query
     * run. The explicit GC lets the cleaner reap everything the dropped
     * plans still pin. */
-  private[graft] def runOne(spark: SparkSession, name: String,
-      sfDir: String, explain: Boolean,
+  private[graft] def runOne(spark: SparkSession, name: String, sfDir: String,
       setupFailed: scala.collection.mutable.Set[String] = null)
       : Option[Double] = {
     // untimed setup (VERDICT r12 #3): indexed-search queries build their
@@ -227,13 +225,8 @@ object Bench {
     }
     val t0 = System.nanoTime()
     val ok = try {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      if (explain) {
-        System.err.println(s"===== $name =====")
-        System.err.println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      }
-      df.write.format("noop").mode("overwrite").save()
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
       true
     } catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -310,7 +303,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     val noRerun = sys.env.get("SPARK_GRAFT_NO_RERUN").contains("1")
     // at 157+ queries a single JVM's accumulated heap/metaspace (codegen
     // classes, listener state, shuffle bookkeeping) inflates late queries
@@ -366,7 +358,7 @@ object Bench {
     val setupFailed = scala.collection.mutable.Set.empty[String]
     val failed = scala.collection.mutable.Set.empty[String]
     def timed(name: String): Option[(String, Double)] = {
-      val t = runOne(spark, name, sfDir, explain, setupFailed)
+      val t = runOne(spark, name, sfDir, setupFailed)
       if (t.isEmpty) failed += name
       t.map(name -> _)
     }
@@ -477,7 +469,7 @@ object Bench {
           s"breaches at $smallDir for draw-shift vs scale-regression")
         restart()
         val diagnosed = breached.sorted.map { n =>
-          val tSmall = runOne(spark, n, smallDir, explain = false)
+          val tSmall = runOne(spark, n, smallDir)
             .getOrElse(Double.NaN)
           val tBig = results.toMap.getOrElse(n, Double.NaN)
           val ratio = if (tSmall > 0) tBig / tSmall else Double.NaN

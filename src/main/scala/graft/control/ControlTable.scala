@@ -13,6 +13,9 @@ import graft.store.TableStore
   * Status flow per run: APP SPECIFIC LOADING → APP SPECIFIC LOADING
   * COMPLETED → INTEGRATION LOAD COMPLETED → Success; the next run's gate
   * requires the previous status to be exactly "Success" (main.py:15-20).
+  * Every write is idempotent per run: an entry is keyed by its load key
+  * (with the interface, or the subject area), and adding it again replaces
+  * it, so a failed attempt is retried by replaying its key.
   *
   * These tables are metadata — a handful of rows per interface — so every
   * write is a read-modify-write on the driver: the rows are read through
@@ -38,12 +41,15 @@ class ControlTable(spark: SparkSession, store: TableStore) {
       .map(e => (e.load_status, e.load_start_dt_tm, e.load_key))
 
   /** New run entry with incremented load key
-    * (CheckInterface_Metadata.py:68-100, Airflow-DAG.py:123-160). */
+    * (CheckInterface_Metadata.py:68-100, Airflow-DAG.py:123-160). It
+    * replaces an entry of the same (interface, load key): a replayed
+    * attempt restarts its own entry. */
   def addCurrentRunEntry(interfaceName: String, interfaceCd: String,
       loadKey: Long, now: Timestamp,
       status: String = "APP SPECIFIC LOADING"): Unit =
     rewrite[ControlEntry](controlName)(
-      _ :+ ControlEntry(interfaceName, interfaceCd, status, now, null, loadKey))
+      _.filterNot(e => e.interface_cd == interfaceCd && e.load_key == loadKey) :+
+        ControlEntry(interfaceName, interfaceCd, status, now, null, loadKey))
 
   /** Status transition for the current (max-load_key) entry
     * (Airflow-DAG.py:370-402). Completing stamps load_complete_dt_tm. */
@@ -54,26 +60,19 @@ class ControlTable(spark: SparkSession, store: TableStore) {
       else e.copy(load_status = status, load_complete_dt_tm =
         if (status == "Success") now else e.load_complete_dt_tm)))
 
-  /** HIST_LOAD_CONTROL entry (STG_to_INT.py:23-34). */
+  /** HIST_LOAD_CONTROL entry (STG_to_INT.py:23-34), replacing an entry
+    * of the same (load key, subject area). */
   def addHistLoadEntry(loadKey: Long, subjectArea: String, status: String,
       start: Timestamp, end: Timestamp, now: Timestamp): Unit =
     rewrite[HistLoadControlEntry](histLoadName)(
-      _ :+ HistLoadControlEntry(loadKey, subjectArea, status, start, end, now))
+      _.filterNot(e => e.load_key == loadKey && e.subject_area == subjectArea) :+
+        HistLoadControlEntry(loadKey, subjectArea, status, start, end, now))
 
   /** Mark hist-load rows processed (Airflow-DAG.py:389-402). */
   def markHistLoadProcessed(loadKey: Long, subjectArea: String): Unit =
     rewrite[HistLoadControlEntry](histLoadName)(_.map(e =>
       if (e.load_key == loadKey && e.subject_area == subjectArea) e.copy(status = "processed")
       else e))
-
-  /** Remove one run's control entry and hist-load entries — the rollback
-    * of a failed attempt. */
-  def deleteRun(interfaceName: String, interfaceCd: String, loadKey: Long): Unit = {
-    rewrite[ControlEntry](controlName)(
-      _.filterNot(e => e.interface_cd == interfaceCd && e.load_key == loadKey))
-    rewrite[HistLoadControlEntry](histLoadName)(
-      _.filterNot(e => e.load_key == loadKey && e.subject_area == interfaceName))
-  }
 
   /** Read a control table's rows (one Spark job, none while it is absent),
     * apply `f`, and if that changed them, publish the result as one parquet

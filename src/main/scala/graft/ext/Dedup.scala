@@ -678,8 +678,6 @@ object Dedup {
       changed = next.filter(col("lbl") =!= col("old")).count()
       labels = next.drop("old")
       iters += 1
-      if (sys.env.contains("GRAFT_DEBUG_CLUSTERS"))
-        System.err.println(s"[clusters] iter $iters changed=$changed t=${System.nanoTime() / 1000000}")
     }
     val connected = labels.select(col("id").as(idCol), col("lbl").as("cluster_id"))
     val singletons = docs.select(col(idCol))

@@ -38,14 +38,20 @@ class Pipeline(spark: SparkSession, store: TableStore,
 
   /** [[run]] given the previous run's (status, start, load key):
     * CHECK_FOR_INTERFACE_EXISTENCE + GET_ETL_PREV_RUN_DATE_TIME — one
-    * metadata lookup serves the Success gate, the watermark and, in
-    * [[runWithRetry]], the rollback snapshot.
+    * metadata lookup serves the Success gate, the watermark and the load
+    * key, which [[runWithRetry]] hands unchanged to every attempt.
     *
     * The run reads its batch from the tree once, into a cached delta that
     * feeds landing, INT and the SCD2 merge; it never reads landing or INT
     * back. The empty branch is a one-row probe. The merge checkpoints the
     * batch on entry and observes the batch's buckets and its touched ones
     * on its two checkpoints; nothing is collected.
+    *
+    * Every write is idempotent per (interface, load key), so a second run
+    * under the same key replays over the first: the control and hist-load
+    * entries are replaced by key, landing re-lands the device's partition,
+    * INT overwrites the (deviceid, load_key) partition, and the SCD2 merge
+    * absorbs the replayed rows as 'NC'.
     *
     * Everything runs in sequence on the calling thread. Each control-table
     * stamp is written right after the data write it reports, and the
@@ -56,14 +62,14 @@ class Pipeline(spark: SparkSession, store: TableStore,
     require(prev.forall(_._1 == "Success"),
       s"previous run for $interfaceCd did not finish with status Success")
     val prevStart = prev.map(_._2).getOrElse(Schemas.epoch)
-    val loadKey = prev.map(_._3).getOrElse(0L) + 1L  // F14
+    val loadKey = nextKey(prev)
     // PRINT_VARIABLES_AND_GENERATE_NEW_LOAD_KEY
     stamp("APP SPECIFIC LOADING")(
       ctl.addCurrentRunEntry(interfaceName, interfaceCd, loadKey, now))
 
     // GET_FIREBASE_DELTA_DHT_DATA: distributed read + flatten + threshold.
     // The one read of the tree: the cached delta feeds the empty-branch
-    // probe, the landing write, the INT append and the SCD2 merge.
+    // probe, the landing write, the INT write and the SCD2 merge.
     val delta = ingestDelta(treePath, deviceId, prevStart)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -91,9 +97,11 @@ class Pipeline(spark: SparkSession, store: TableStore,
       // device's landing partition was just re-landed from `delta`, so INT
       // is staged from the cache, not from a read-back of landing.
       // StageToInt keeps Schemas.intermediate's column order, which sets
-      // the delta hash's column order.
+      // the delta hash's column order. INT is partitioned by (deviceid,
+      // load_key), the last two columns of that order, so a replay of the
+      // key replaces its own partition and no other.
       val batch = StageToInt(delta, loadKey, deviceId)
-      store.append(intName, batch)
+      store.overwritePartitionsDynamic(intName, batch, Seq("deviceid", "load_key"))
       fault("int appended")
       stamp("hist-load in progress")(
         ctl.addHistLoadEntry(loadKey, interfaceName, "in progress", now, now, now))
@@ -143,68 +151,49 @@ class Pipeline(spark: SparkSession, store: TableStore,
       TreeIngest.flatten(TreeIngest.readTree(spark, treePath)), deviceId, prevStart)
 
   /** Test seam for crash injection at the run's later task boundaries:
-    * after the landing write ("landed"), after the INT append ("int
+    * after the landing write ("landed"), after the INT write ("int
     * appended"), after the SCD2 write ("scd2 written"), and inside each
     * control-table stamp before its write ("stamp <status or entry>").
     * A no-op here. */
   protected def fault(point: String): Unit = ()
 
+  /** The load key a run after `prev` mints (F14). */
+  private def nextKey(prev: Option[(String, Timestamp, Long)]): Long =
+    prev.map(_._3).getOrElse(0L) + 1L
+
   /** D7 retry policy: the reference retries every Airflow task once after
     * a 30 s delay (`Airflow-DAG.py:467-474`, `historization_module.py:
     * 26-33`). The engine's unit of recovery is the whole run (its "task
-    * boundaries" are the control-table status transitions, ST5), so a
-    * failed attempt is ROLLED BACK — control rows, hist-load entry and
-    * the INT append for the attempt's load key and device are removed;
-    * the landing re-land is idempotent (partition delete + append) and the
-    * SCD2 target swap is atomic, replaying the same batch as 'NC' — and
-    * the run replays after `retryDelayMs`. On exhaustion the attempt's
-    * control entry is marked Failed, which blocks the next run at the
-    * Success gate exactly as in the reference (main.py:15-20). `sleep`
-    * is injectable for tests. Stamps run synchronously (see `runFrom`), so
-    * when an attempt throws, every row it wrote is on disk for the
-    * rollback. */
+    * boundaries" are the control-table status transitions, ST5). The
+    * previous run's details are read once, before the first attempt, so
+    * every attempt mints the same load key, and a retry after
+    * `retryDelayMs` is a plain replay of that key over whatever the failed
+    * attempt wrote (see `runFrom`), as `StreamingIngest.scd2Sink` replays
+    * a batch id. On exhaustion the key's control entry is marked Failed,
+    * which blocks the next run at the Success gate exactly as in the
+    * reference (main.py:15-20); if that entry never landed, nothing is
+    * written. A pre-existing Failed entry is never touched: the gate
+    * refuses, and the key the attempts mint is the one after it. This
+    * assumes one writer per interface, as the Success gate does. `sleep`
+    * is injectable for tests. */
   def runWithRetry(treePath: String, deviceId: String, now: Timestamp,
       retries: Int = 1, retryDelayMs: Long = 30000L,
       sleep: Long => Unit = Thread.sleep): RunResult = {
+    val prev = ctl.prevRunDetails(interfaceCd)
     var attempt = 0
     while (true) {
-      // snapshot the latest load key BEFORE the attempt: rollback (and the
-      // Failed stamp) may only touch an entry THIS attempt minted — a
-      // pre-existing Failed entry from an earlier exhausted run must keep
-      // blocking the gate until a human intervenes, and a gate refusal
-      // creates nothing to roll back. An attempt whose current-run entry
-      // never landed wrote no data either (runFrom writes that entry
-      // before its first data write), so it too has nothing to roll back.
-      val prev = ctl.prevRunDetails(interfaceCd)
-      val before = prev.map(_._3)
       try return runFrom(prev, treePath, deviceId, now)
       catch {
         case scala.util.control.NonFatal(e) =>
-          val minted = ctl.prevRunDetails(interfaceCd)
-            .filter(d => d._1 != "Success" && !before.contains(d._3))
           if (attempt >= retries) {
-            minted.foreach { case (_, _, key) =>
-              ctl.updateStatus(interfaceCd, key, "Failed", now)
-            }
+            ctl.updateStatus(interfaceCd, nextKey(prev), "Failed", now)
             throw e
           }
           attempt += 1
-          minted.foreach { case (_, _, key) => rollbackAttempt(key, deviceId) }
           sleep(retryDelayMs)
       }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** Remove a failed attempt's side effects so the retry replays from a
-    * clean slate: its control and hist-load entries, and its INT rows by
-    * the load_key it minted and its device. Load keys are minted per
-    * interface, so another interface sharing the store holds INT rows
-    * under the same key; the device scopes the delete to this attempt's. */
-  private def rollbackAttempt(loadKey: Long, deviceId: String): Unit = {
-    ctl.deleteRun(interfaceName, interfaceCd, loadKey)
-    store.deleteWhere(intName, Schemas.intermediate,
-      col("load_key") === loadKey && col("deviceid") === deviceId)
   }
 }
 

@@ -136,13 +136,6 @@ class TableStore(spark: SparkSession, baseDir: String) {
   def deletePartition(name: String, partitionCol: String, value: String): Unit =
     deleteRecursively(Paths.get(path(name), s"$partitionCol=$value"))
 
-  /** Predicate delete fallback for non-partition predicates: rewrite
-    * without the matching rows (parquet is immutable). Prefer
-    * [[deletePartition]] when the predicate is a partition-column
-    * equality. */
-  def deleteWhere(name: String, schema: StructType, cond: org.apache.spark.sql.Column): Unit =
-    if (exists(name)) overwrite(name, readOrEmpty(name, schema).filter(!cond || cond.isNull))
-
   /** Small-file compaction: rewrite the table into ~`targetBytes` output
     * files (computed from the current on-disk size — a directory listing,
     * not a data scan). Streaming sinks and partition-scoped SCD2 rewrites

@@ -10,8 +10,8 @@ class BenchSpec extends SparkSpec {
 
   test("a registry query that throws is a failure, not a sample") {
     val empty = Files.createTempDirectory("graft-bench-empty").toString
-    assert(Bench.runOne(spark, "q1_agg", empty, explain = false).isEmpty)
-    assert(Bench.runOne(spark, "q1_agg", sf(), explain = false).exists(_ > 0))
+    assert(Bench.runOne(spark, "q1_agg", empty).isEmpty)
+    assert(Bench.runOne(spark, "q1_agg", sf()).exists(_ > 0))
   }
 
   test("failed queries are listed apart, left out of the total, and fail the run") {

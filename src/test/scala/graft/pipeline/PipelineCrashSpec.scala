@@ -187,6 +187,35 @@ class PipelineCrashSpec extends SparkSpec {
     assert(dht01.ctl.prevRunDetails("DHT01").map(_._1).contains("Success"))
   }
 
+  test("a retry replays its load key without scanning INT or touching another device's INT files") {
+    import org.apache.spark.sql.functions.input_file_name
+    val store = freshStore()
+    val dht00 = new Pipeline(spark, store, interfaceName = "ESP_DHT11_DATA_DHT00",
+      interfaceCd = "DHT00")
+    assert(dht00.run(fixture, "DHT00", now).loadKey == 1L)
+    // every file that holds DHT00's INT rows, with its size and mtime
+    val files = store.read(dht00.intName).filter($"deviceid" === "DHT00")
+      .select(input_file_name()).distinct().as[String].collect()
+      .map(u => Paths.get(new java.net.URI(u).getPath)).toSeq
+    assert(files.nonEmpty)
+    def stats = files.map(f =>
+      if (!Files.exists(f)) None
+      else Some((Files.size(f), Files.getLastModifiedTime(f).toMillis)))
+    val before = stats
+
+    // interface "001" mints load key 1 too, for device DHT01
+    val dht01 = new Crashing(store, crashAt = "int appended")
+    var slept = 0
+    val (r, executions) = executionsOf(dht01.runWithRetry(fixture, "DHT01", now,
+      retries = 1, retryDelayMs = 1L, sleep = _ => slept += 1))
+    assert(slept == 1, "the first attempt did not crash")
+    assert(!r.skipped && r.loadKey == 1L && r.ingested == 6)
+    val tables = executions.flatMap(_._2).map(Paths.get(_).getFileName.toString).toSet
+    assert(tables.contains(dht00.targetName), s"the listener saw no target scan: $tables")
+    assert(!tables.contains(dht00.intName), tables)
+    assert(stats == before, "another device's INT files were rewritten")
+  }
+
   test("a failed attempt unpersists its delta") {
     // cached DataFrames only: the SCD2 merge's eager localCheckpoint is a
     // persistent RDD too, released by the context cleaner, not by the run

@@ -243,13 +243,11 @@ class PipelineSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       assert(jobsOf(ctl.markHistLoadProcessed(1L, "S")) == 1)
-      assert(jobsOf(store.deleteWhere(ctl.controlName,
-        org.apache.spark.sql.Encoders.product[graft.model.ControlEntry].schema,
-        $"load_key" === 1L)) == 1)
+      assert(jobsOf(ctl.updateStatus("001", 1L, "Success", t)) == 1)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(store.read(ctl.histLoadName).select("status").as[String].collect().toSeq ==
       Seq("processed"))
-    assert(ctl.control.isEmpty)
+    assert(ctl.control.select("load_status").as[String].collect().toSeq == Seq("Success"))
   }
 
   test("control-table writes run one Spark job, the read, and write one parquet file on the driver") {
@@ -271,8 +269,8 @@ class PipelineSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // a rollback with nothing to remove writes nothing
-      assert(jobsOf(ctl.deleteRun("I", "001", 1L)) == 0)
+      // a status change with no entry to change writes nothing
+      assert(jobsOf(ctl.updateStatus("001", 1L, "Failed", t1)) == 0)
       assert(!store.exists(ctl.controlName) && !store.exists(ctl.histLoadName))
       // the first write to an absent table reads nothing
       assert(jobsOf(ctl.addCurrentRunEntry("I", "001", 1L, t1)) == 0)
@@ -282,8 +280,6 @@ class PipelineSpec extends SparkSpec {
       assert(jobsOf(ctl.addCurrentRunEntry("I", "001", 2L, t2)) == 1)
       assert(jobsOf(ctl.addHistLoadEntry(2L, "I", "in progress", t2, t2, t2)) == 1)
       assert(jobsOf(ctl.addCurrentRunEntry("I", "001", 3L, t2)) == 1)
-      // one read per table
-      assert(jobsOf(ctl.deleteRun("I", "001", 2L)) == 2)
     } finally spark.sparkContext.removeSparkListener(listener)
 
     // Spark reads the driver-written files back, with inferred column types
@@ -294,15 +290,40 @@ class PipelineSpec extends SparkSpec {
     assert(types(control.schema) == types(Encoders.product[ControlEntry].schema))
     assert(control.as[ControlEntry].collect().sortBy(_.load_key).toSeq == Seq(
       ControlEntry("I", "001", "Success", t1, t2, 1L),
+      ControlEntry("I", "001", "APP SPECIFIC LOADING", t2, null, 2L),
       ControlEntry("I", "001", "APP SPECIFIC LOADING", t2, null, 3L)))
     val hist = store.read(ctl.histLoadName)
     assert(types(hist.schema) == types(Encoders.product[HistLoadControlEntry].schema))
-    assert(hist.as[HistLoadControlEntry].collect().toSeq ==
-      Seq(HistLoadControlEntry(1L, "I", "processed", t1, t1, t1)))
+    assert(hist.as[HistLoadControlEntry].collect().sortBy(_.load_key).toSeq == Seq(
+      HistLoadControlEntry(1L, "I", "processed", t1, t1, t1),
+      HistLoadControlEntry(2L, "I", "in progress", t2, t2, t2)))
     assert(ctl.prevRunDetails("001").contains(("APP SPECIFIC LOADING", t2, 3L)))
     Seq(ctl.controlName, ctl.histLoadName).foreach { table =>
       val files = Files.list(java.nio.file.Paths.get(store.path(table))).toArray.toSeq
       assert(files.size == 1 && files.head.toString.endsWith(".parquet"), files)
     }
+  }
+
+  test("adding a control or hist-load entry again under its key replaces it") {
+    val store = freshStore()
+    val ctl = new ControlTable(spark, store)
+    val t1 = Timestamp.valueOf("2024-03-02 11:00:00")
+    val t2 = Timestamp.valueOf("2024-03-03 11:00:00")
+    // the same load key under another interface or subject area is kept
+    ctl.addCurrentRunEntry("I", "001", 1L, t1)
+    ctl.addCurrentRunEntry("J", "002", 1L, t1)
+    ctl.addHistLoadEntry(1L, "I", "in progress", t1, t1, t1)
+    ctl.addHistLoadEntry(1L, "J", "in progress", t1, t1, t1)
+    ctl.updateStatus("001", 1L, "INTEGRATION LOAD COMPLETED", t1)
+    ctl.markHistLoadProcessed(1L, "I")
+
+    ctl.addCurrentRunEntry("I", "001", 1L, t2)
+    ctl.addHistLoadEntry(1L, "I", "in progress", t2, t2, t2)
+    assert(store.rows[ControlEntry](ctl.controlName).sortBy(_.interface_cd) == Seq(
+      ControlEntry("I", "001", "APP SPECIFIC LOADING", t2, null, 1L),
+      ControlEntry("J", "002", "APP SPECIFIC LOADING", t1, null, 1L)))
+    assert(store.rows[HistLoadControlEntry](ctl.histLoadName).sortBy(_.subject_area) == Seq(
+      HistLoadControlEntry(1L, "I", "in progress", t2, t2, t2),
+      HistLoadControlEntry(1L, "J", "in progress", t1, t1, t1)))
   }
 }

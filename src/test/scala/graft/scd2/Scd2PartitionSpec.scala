@@ -163,32 +163,6 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(tgt.filter($"da_inserted_datetime" === now2).count() === 72)
   }
 
-  /** `f`'s result and the SQL executions it starts, in order: each one's
-    * action name and the table directories its leaf file scans read. */
-  private def executionsOf[T](f: => T): (T, Seq[(String, Seq[String])]) = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]
-    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
-      private def record(funcName: String, qe: QueryExecution): Unit =
-        seen.add(funcName -> collectWithSubqueries(qe.executedPlan) {
-          case s: FileSourceScanExec => s
-        }.flatMap(_.relation.location.rootPaths).map(_.toUri.getPath.stripSuffix("/")))
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        record(funcName, qe)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        record(funcName, qe)
-    }
-    org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val result = f
-      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-      (result, seen.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("the partitioned apply runs no collect; both bucket sets are observed") {
     val store = freshStore()
     applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
