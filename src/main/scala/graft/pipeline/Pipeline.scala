@@ -33,19 +33,28 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * DAG task chain (Airflow-DAG.py:574-577) incl. the empty-delta branch
     * (D2) and the prev-run Success gate. `now` is injected for
     * deterministic tests (reference uses statement-time SYSDATE, F11). */
-  def run(treePath: String, deviceId: String, now: Timestamp): RunResult =
-    runFrom(ctl.prevRunDetails(interfaceCd), treePath, deviceId, now)
+  def run(treePath: String, deviceId: String, now: Timestamp): RunResult = {
+    val (prevStart, loadKey) = gate()
+    runFrom(prevStart, loadKey, treePath, deviceId, now)
+  }
 
-  /** [[run]] given the previous run's (status, start, load key):
-    * CHECK_FOR_INTERFACE_EXISTENCE + GET_ETL_PREV_RUN_DATE_TIME — one
+  /** CHECK_FOR_INTERFACE_EXISTENCE + GET_ETL_PREV_RUN_DATE_TIME: one
     * metadata lookup serves the Success gate, the watermark and the load
-    * key, which [[runWithRetry]] hands unchanged to every attempt.
-    *
-    * The run reads its batch from the tree once, into a cached delta that
+    * key (F14). Refuses unless the previous run finished with Success;
+    * otherwise yields (previous run's start, the key this run mints). */
+  private def gate(): (Timestamp, Long) = {
+    val prev = ctl.prevRunDetails(interfaceCd)
+    require(prev.forall(_._1 == "Success"),
+      s"previous run for $interfaceCd did not finish with status Success")
+    (prev.map(_._2).getOrElse(Schemas.epoch), prev.map(_._3).getOrElse(0L) + 1L)
+  }
+
+  /** One attempt of a run past the [[gate]], from watermark `prevStart`.
+    * It reads its batch from the tree once, into a cached delta that
     * feeds landing, INT and the SCD2 merge; it never reads landing or INT
-    * back. The empty branch is a one-row probe. The merge checkpoints the
-    * batch on entry and observes the batch's buckets and its touched ones
-    * on its two checkpoints; nothing is collected.
+    * back. The empty branch is a one-row probe. The merge is
+    * `Historizer.mergeInto`, as in `StreamingIngest.scd2Sink`; nothing is
+    * collected.
     *
     * Every write is idempotent per (interface, load key), so a second run
     * under the same key replays over the first: the control and hist-load
@@ -57,12 +66,8 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * stamp is written right after the data write it reports, and the
     * current-run entry before the first data write: should the process die
     * mid-run, that non-Success entry makes the next run's gate refuse. */
-  private def runFrom(prev: Option[(String, Timestamp, Long)], treePath: String,
+  private def runFrom(prevStart: Timestamp, loadKey: Long, treePath: String,
       deviceId: String, now: Timestamp): RunResult = {
-    require(prev.forall(_._1 == "Success"),
-      s"previous run for $interfaceCd did not finish with status Success")
-    val prevStart = prev.map(_._2).getOrElse(Schemas.epoch)
-    val loadKey = nextKey(prev)
     // PRINT_VARIABLES_AND_GENERATE_NEW_LOAD_KEY
     stamp("APP SPECIFIC LOADING")(
       ctl.addCurrentRunEntry(interfaceName, interfaceCd, loadKey, now))
@@ -109,24 +114,9 @@ class Pipeline(spark: SparkSession, store: TableStore,
         ctl.updateStatus(interfaceCd, loadKey, "INTEGRATION LOAD COMPLETED", now))
 
       // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call), fed
-      // the same cached batch. Partition-scoped MERGE: only the natural-key
-      // buckets this batch touches (observed on the merge's delta
-      // checkpoint) are rewritten (dynamic partition overwrite), exactly as
-      // in StreamingIngest.scd2Sink. The new bucket content streams straight
-      // into the write, which lazily reads the old files of those buckets:
-      // safe, because dynamic partition overwrite replaces partitions only
-      // at job commit, after every task has finished reading. `inserted` is
-      // counted by an Observation on that same write — no extra job, no
-      // re-scan of the target.
-      val tgtStored = store.readOrEmpty(targetName, Schemas.scd2TargetStored)
-      val observed = Observation()
-      val touched = Historizer.applyScd2Partitioned(
-          batch, tgtStored, conf.copy(loadKey = loadKey), now)
-        .observe(observed, count(when(
-          col("da_inserted_datetime") === lit(now) && col("da_current_flag") === "Y",
-          1)).as("inserted"))
-      store.overwritePartitionsDynamic(targetName, touched, Seq("nk_bucket"))
-      val inserted = observed.get("inserted").asInstanceOf[Long]
+      // the same cached batch; rewrites only the target buckets it touches
+      val inserted = Historizer.mergeInto(
+        store, targetName, batch, conf.copy(loadKey = loadKey), now)
       fault("scd2 written")
 
       // UPDATE_STATUS_AND_FINISH_WORKFLOW: Success is written last
@@ -157,36 +147,31 @@ class Pipeline(spark: SparkSession, store: TableStore,
     * A no-op here. */
   protected def fault(point: String): Unit = ()
 
-  /** The load key a run after `prev` mints (F14). */
-  private def nextKey(prev: Option[(String, Timestamp, Long)]): Long =
-    prev.map(_._3).getOrElse(0L) + 1L
-
   /** D7 retry policy: the reference retries every Airflow task once after
     * a 30 s delay (`Airflow-DAG.py:467-474`, `historization_module.py:
     * 26-33`). The engine's unit of recovery is the whole run (its "task
     * boundaries" are the control-table status transitions, ST5). The
-    * previous run's details are read once, before the first attempt, so
-    * every attempt mints the same load key, and a retry after
-    * `retryDelayMs` is a plain replay of that key over whatever the failed
-    * attempt wrote (see `runFrom`), as `StreamingIngest.scd2Sink` replays
-    * a batch id. On exhaustion the key's control entry is marked Failed,
-    * which blocks the next run at the Success gate exactly as in the
-    * reference (main.py:15-20); if that entry never landed, nothing is
-    * written. A pre-existing Failed entry is never touched: the gate
-    * refuses, and the key the attempts mint is the one after it. This
+    * [[gate]] runs once, before the first attempt: a refusal is thrown at
+    * once, with no retry and no control-table write, and every attempt
+    * mints the same load key, so a retry after `retryDelayMs` is a plain
+    * replay of that key over whatever the failed attempt wrote (see
+    * `runFrom`), as `StreamingIngest.scd2Sink` replays a batch id. On
+    * exhaustion the key's control entry is marked Failed, which blocks the
+    * next run at the Success gate exactly as in the reference
+    * (main.py:15-20); if that entry never landed, nothing is written. This
     * assumes one writer per interface, as the Success gate does. `sleep`
     * is injectable for tests. */
   def runWithRetry(treePath: String, deviceId: String, now: Timestamp,
       retries: Int = 1, retryDelayMs: Long = 30000L,
       sleep: Long => Unit = Thread.sleep): RunResult = {
-    val prev = ctl.prevRunDetails(interfaceCd)
+    val (prevStart, loadKey) = gate()
     var attempt = 0
     while (true) {
-      try return runFrom(prev, treePath, deviceId, now)
+      try return runFrom(prevStart, loadKey, treePath, deviceId, now)
       catch {
         case scala.util.control.NonFatal(e) =>
           if (attempt >= retries) {
-            ctl.updateStatus(interfaceCd, nextKey(prev), "Failed", now)
+            ctl.updateStatus(interfaceCd, loadKey, "Failed", now)
             throw e
           }
           attempt += 1

@@ -67,11 +67,13 @@ object StreamingIngest {
     TreeIngest.toLanding(flat, deviceId, Schemas.epoch)
   }
 
-  /** Continuous SCD2 historization: every micro-batch runs the same
-    * Historizer as the batch pipeline, with load_key = batchId + 1
-    * (monotone, checkpoint-stable — a replayed batch reuses its id and
-    * absorbs as 'NC', giving effectively-once semantics on top of the
-    * file source's exactly-once offsets).
+  /** Continuous SCD2 historization: every micro-batch runs
+    * `Historizer.mergeInto`, the same merge and target writer as the batch
+    * pipeline, with load_key = batchId + 1 (monotone, checkpoint-stable —
+    * a replayed batch reuses its id and absorbs as 'NC', giving
+    * effectively-once semantics on top of the file source's exactly-once
+    * offsets). Per-trigger write cost is O(buckets the micro-batch
+    * touches), not O(target).
     *
     * The micro-batch is read once per trigger: `foreachBatch` hands over a
     * plan that every action re-runs (listing and parsing the batch's
@@ -86,14 +88,9 @@ object StreamingIngest {
       .trigger(trigger)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val src = batch.withColumn("load_key", lit(batchId + 1L))
-        val tgtStored = store.readOrEmpty(targetName, Schemas.scd2TargetStored)
-        // partition-scoped MERGE: per-trigger write cost is O(buckets the
-        // micro-batch touches), not O(target) — the streaming twin of the
-        // batch pipeline's dynamic partition overwrite
-        val touched = Historizer.applyScd2Partitioned(
-          src, tgtStored, conf.copy(loadKey = batchId + 1L), clock())
-        store.overwritePartitionsDynamic(targetName, touched, Seq("nk_bucket"))
+        Historizer.mergeInto(store, targetName,
+          batch.withColumn("load_key", lit(batchId + 1L)),
+          conf.copy(loadKey = batchId + 1L), clock())
         ()
       }
       .start()

@@ -155,7 +155,7 @@ class PipelineCrashSpec extends SparkSpec {
     }
   }
 
-  test("a retried attempt's rollback leaves another interface's INT rows of the same load key") {
+  test("a retried attempt's replay leaves another interface's INT rows of the same load key") {
     // per-device interfaces share one store and each mints load keys 1, 2, …
     val store = freshStore()
     def intRows(device: String, loadKey: Long): Seq[String] =
@@ -181,7 +181,7 @@ class PipelineCrashSpec extends SparkSpec {
     assert(dht01.crashes == 0, "the first attempt did not crash")
     assert(!r.skipped && r.loadKey == 1L && r.ingested == 6)
     assert(intRows("DHT00", 1L) == before)
-    // the crashed attempt's own rows were rolled back: one copy, not two
+    // the replay replaced the crashed attempt's own rows: one copy, not two
     assert(intRows("DHT01", 1L) == before.map(_.replace("DHT00", "DHT01")))
     assert(dht00.ctl.prevRunDetails("DHT00").map(_._1).contains("Success"))
     assert(dht01.ctl.prevRunDetails("DHT01").map(_._1).contains("Success"))

@@ -69,7 +69,7 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("D7 retry: transient failure rolls back and replays to Success; exhaustion marks Failed") {
+  test("D7 retry: a transient failure replays its load key to Success; exhaustion marks Failed") {
     val store = freshStore()
     var failuresLeft = 1
     val pipe = new Pipeline(spark, store) {
@@ -87,7 +87,7 @@ class PipelineSpec extends SparkSpec {
       retryDelayMs = 30000L, sleep = slept += _)
     assert(!r.skipped && r.inserted == 5 && slept == 30000L)
     assert(ctl.prevRunDetails("001").get._1 == "Success")
-    // rollback left exactly one control entry (the successful attempt)
+    // the replay left exactly one control entry (the successful attempt)
     assert(ctl.control.filter($"interface_cd" === "001").count() == 1)
     assert(store.read(pipe.targetName).count() == 5)
 
@@ -104,14 +104,17 @@ class PipelineSpec extends SparkSpec {
     }
 
     // a LATER runWithRetry against the exhausted state must NOT erase the
-    // Failed entry to sneak past the gate — it refuses identically
+    // Failed entry to sneak past the gate — it refuses identically, at
+    // once: a gate refusal is not retried
     failuresLeft = 0
     val failedKey = ctl.prevRunDetails("001").get._3
+    var laterSleeps = 0
     intercept[IllegalArgumentException] {
       pipe.runWithRetry(fixture, dev,
         Timestamp.valueOf("2024-03-05 11:00:00"), retries = 1,
-        retryDelayMs = 1L, sleep = _ => ())
+        retryDelayMs = 1L, sleep = _ => laterSleeps += 1)
     }
+    assert(laterSleeps == 0)
     assert(ctl.prevRunDetails("001").get._1 == "Failed")
     assert(ctl.prevRunDetails("001").get._3 == failedKey)
   }

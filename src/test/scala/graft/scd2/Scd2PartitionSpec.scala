@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.model.{Scd2Config, Schemas}
@@ -38,14 +39,10 @@ class Scd2PartitionSpec extends SparkSpec {
   private def freshStore(): TableStore =
     new TableStore(spark, Files.createTempDirectory("graft-scd2-part").toString)
 
-  /** One partition-scoped SCD2 apply + dynamic overwrite into `name`. */
+  /** One SCD2 merge of `src` into the stored target `name`. */
   private def applyTo(store: TableStore, src: DataFrame, now: Timestamp,
-      loadKey: Long): Unit = {
-    val tgtStored = store.readOrEmpty(name, Schemas.scd2TargetStored)
-    val touched = Historizer.applyScd2Partitioned(
-      src, tgtStored, conf.copy(loadKey = loadKey), now)
-    store.overwritePartitionsDynamic(name, touched, Seq("nk_bucket"))
-  }
+      loadKey: Long): Unit =
+    Historizer.mergeInto(store, name, src, conf.copy(loadKey = loadKey), now)
 
   /** A day of `dev`'s readings (every 20 minutes) from UTC midnight of
     * `day` — one device-day, the shape of one date subtree of an export. */
@@ -55,6 +52,10 @@ class Scd2PartitionSpec extends SparkSpec {
       ("IST", "60.0", "29.4", Timestamp.from(midnight.plusSeconds(i * 1200L)), dev, loadKey)
     }.toDF("timezone", "humidity", "temperature", "timestamp", "deviceid", "load_key")
   }
+
+  /** `df`'s rows over `schema`'s columns, as sorted strings. */
+  private def sortedRows(df: DataFrame, schema: StructType): Seq[String] =
+    df.select(schema.fieldNames.map(col).toSeq: _*).collect().map(_.toString).toSeq.sorted
 
   /** The `nk_bucket=<b>` directory of a target-relative file path. */
   private def bucketDir(rel: String): String = rel.takeWhile(_ != '/')
@@ -109,17 +110,29 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(dev7.count() === 2)
     assert(dev7.filter($"da_current_flag" === "Y")
       .select("humidity").first().getString(0) === "99.9")
-    // pruned-join equivalence: the partitioned apply (join side pruned to
-    // the batch's buckets) must produce exactly the full apply's rows for
-    // the touched buckets
-    val full = Historizer.applyScd2(
-        batch(2L, i => if (i == 7) "99.9" else "60.0"),
-        tgt1.drop("nk_bucket"), conf.copy(loadKey = 2L), now2)
-      .withColumn("nk_bucket", bucketOf)
-      .filter($"nk_bucket" === changedBucket)
+    // the touched bucket's exact content: DEV7's old version closed at
+    // now2, its new version (key 41, durable AK, the new payload and hash)
+    // open from now2, and every other row as batch 1 wrote it
+    val bucket1 = tgt1.filter($"nk_bucket" === changedBucket)
+    val old7 = bucket1.filter($"deviceid" === "DEV7")
+    assert(old7.count() === 1)
+    val expected = bucket1.filter($"deviceid" =!= "DEV7")
+      .unionByName(old7
+        .withColumn("da_current_flag", lit("N"))
+        .withColumn("da_valid_to_date", lit(now2))
+        .withColumn("da_updated_datetime", lit(now2)))
+      .unionByName(old7
+        .withColumn("dht11_key", lit(41L))
+        .withColumn("humidity", lit("99.9"))
+        .withColumn("delta_hash", sha2(concat(lit("99.9"), $"temperature"), 256))
+        .withColumn("da_updated_datetime", lit(now2))
+        .withColumn("da_inserted_datetime", lit(now2))
+        .withColumn("da_valid_from_date", lit(now2))
+        .withColumn("da_valid_to_date", lit(Schemas.openEndedValidTo))
+        .withColumn("da_current_flag", lit("Y")))
     val partitioned = tgt2.filter($"nk_bucket" === changedBucket)
-    assert(full.collect().map(_.toString).sorted
-      .sameElements(partitioned.collect().map(_.toString).sorted))
+    assert(sortedRows(partitioned, Schemas.scd2TargetStored) ===
+      sortedRows(expected, Schemas.scd2TargetStored))
 
     // NC-only batch: the merge returns no row, so no bucket is touched and
     // every file stays byte-identical
@@ -178,6 +191,36 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(merged.select("nk_bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(dev7))
   }
 
+  test("the in-memory apply runs the production merge: mergeInto's rows, two checkpoints, no collect") {
+    val store = freshStore()
+    applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
+    val tgt1 = store.read(name).localCheckpoint(true)
+    // DEV0-29 re-sent (DEV7, 13, 21 changed: 'U'; the rest 'NC'), DEV30-39
+    // target-only, DEV40-44 new ('I')
+    val changed = Set(7, 13, 21)
+    val batch2 = ((0 until 30) ++ (40 until 45)).map { i =>
+      ("IST", if (changed(i)) "99.9" else "60.0", "29.4",
+        Timestamp.valueOf(f"2024-03-01 09:${i % 60}%02d:00"), s"DEV$i", 2L)
+    }.toDF("timezone", "humidity", "temperature", "timestamp", "deviceid", "load_key")
+    val (applied, executions) = executionsOf(Historizer.applyScd2(
+      batch2, tgt1.drop("nk_bucket"), conf.copy(loadKey = 2L), now2))
+    val names = executions.map(_._1)
+    assert(names.count(_ == "collect") == 0, names)
+    assert(names.count(_ == "localCheckpoint") == 2, names)
+    // the wrapper adds no execution of its own to the merge's
+    val (_, merge) = executionsOf(Historizer.applyScd2Partitioned(
+      batch2, tgt1, conf.copy(loadKey = 2L), now2))
+    assert(names == merge.map(_._1))
+
+    val inMemory = sortedRows(applied, Schemas.scd2Target)
+    assert(inMemory.size == 40 + 3 + 5)
+    assert(applied.filter($"da_current_flag" === "N").count() == 3)
+    assert(applied.filter($"deviceid".isin("DEV7", "DEV13", "DEV21", "DEV40"))
+      .select(bucketOf).distinct().count() > 1, "the touched rows must span several buckets")
+    applyTo(store, batch2, now2, 2L)
+    assert(sortedRows(store.read(name), Schemas.scd2Target) == inMemory)
+  }
+
   test("a parquet source is scanned by one execution across the merge and its write") {
     val store = freshStore()
     applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
@@ -199,9 +242,10 @@ class Scd2PartitionSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.intermediate)
     val merged = Future {
       val tgtStored = store.readOrEmpty(name, Schemas.scd2TargetStored)
-      Historizer.applyScd2Partitioned(empty, tgtStored, conf, now1).count()
+      (Historizer.applyScd2Partitioned(empty, tgtStored, conf, now1).count(),
+        Historizer.mergeInto(store, name, empty, conf, now1))
     }
-    assert(Await.result(merged, 120.seconds) == 0L)
+    assert(Await.result(merged, 120.seconds) == ((0L, 0L)))
   }
 
   test("a timestamp key's bucket is its UTC day's, under any session time zone") {

@@ -156,11 +156,8 @@ class Scd2PropertiesSpec extends SparkSpec {
 
         nonEmpty.zipWithIndex.foreach { case (b, i) =>
           val before = dataFiles(root)
-          val tgtStored = store.readOrEmpty("hist", Schemas.scd2TargetStored)
-          val touched = Historizer.applyScd2Partitioned(
-            toDf(b, i + 1L), tgtStored, conf.copy(loadKey = i + 1L), now)
-          store.overwritePartitionsDynamic(
-            "hist", touched, Seq("nk_bucket"))
+          Historizer.mergeInto(store, "hist", toDf(b, i + 1L),
+            conf.copy(loadKey = i + 1L), now)
           now = new Timestamp(now.getTime + 86400000L)
 
           // buckets legitimately rewritable this increment: those of the
