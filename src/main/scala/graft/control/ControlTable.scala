@@ -51,8 +51,9 @@ class ControlTable(spark: SparkSession, store: TableStore) {
       _.filterNot(e => e.interface_cd == interfaceCd && e.load_key == loadKey) :+
         ControlEntry(interfaceName, interfaceCd, status, now, null, loadKey))
 
-  /** Status transition for the current (max-load_key) entry
-    * (Airflow-DAG.py:370-402). Completing stamps load_complete_dt_tm. */
+  /** Status transition for the entry keyed by (interface, load key)
+    * (Airflow-DAG.py:370-402); with no such entry it writes nothing.
+    * Completing stamps load_complete_dt_tm. */
   def updateStatus(interfaceCd: String, loadKey: Long, status: String,
       now: Timestamp): Unit =
     rewrite[ControlEntry](controlName)(_.map(e =>

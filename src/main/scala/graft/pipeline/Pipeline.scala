@@ -1,8 +1,7 @@
 package graft.pipeline
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.control.ControlTable
 import graft.ingest.TreeIngest
@@ -50,17 +49,17 @@ class Pipeline(spark: SparkSession, store: TableStore,
   }
 
   /** One attempt of a run past the [[gate]], from watermark `prevStart`.
-    * It reads its batch from the tree once, into a cached delta that
-    * feeds landing, INT and the SCD2 merge; it never reads landing or INT
-    * back. The empty branch is a one-row probe. The merge is
-    * `Historizer.mergeInto`, as in `StreamingIngest.scd2Sink`; nothing is
-    * collected.
+    * Its batch, the tree's delta staged with the load key, is one
+    * `Historizer.Batch`: read once and held once, by its checkpoint, whose
+    * observed row count picks the empty branch. Landing, INT and the merge
+    * (`Historizer.mergeInto`, as in `StreamingIngest.scd2Sink`) all read
+    * that checkpoint; nothing reads landing or INT back.
     *
     * Every write is idempotent per (interface, load key), so a second run
     * under the same key replays over the first: the control and hist-load
-    * entries are replaced by key, landing re-lands the device's partition,
-    * INT overwrites the (deviceid, load_key) partition, and the SCD2 merge
-    * absorbs the replayed rows as 'NC'.
+    * entries are replaced by key, landing, INT and the target replace the
+    * partitions the batch writes (dynamic partition overwrite), and the
+    * merge absorbs the replayed rows as 'NC'.
     *
     * Everything runs in sequence on the calling thread. Each control-table
     * stamp is written right after the data write it reports, and the
@@ -72,58 +71,47 @@ class Pipeline(spark: SparkSession, store: TableStore,
     stamp("APP SPECIFIC LOADING")(
       ctl.addCurrentRunEntry(interfaceName, interfaceCd, loadKey, now))
 
-    // GET_FIREBASE_DELTA_DHT_DATA: distributed read + flatten + threshold.
-    // The one read of the tree: the cached delta feeds the empty-branch
-    // probe, the landing write, the INT write and the SCD2 merge.
-    val delta = ingestDelta(treePath, deviceId, prevStart)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // check_data_list_task branch (D2 / ST6): a one-row probe, not a count
-      if (delta.isEmpty) {
-        stamp("Success")(ctl.updateStatus(interfaceCd, loadKey, "Success", now))
-        return RunResult(loadKey, ingested = 0, inserted = 0, skipped = true)
-      }
+    // GET_FIREBASE_DELTA_DHT_DATA (distributed read + flatten + threshold),
+    // staged with the run's load key (S6, STG_to_INT.py:16-20). StageToInt
+    // keeps Schemas.intermediate's column order, which sets the delta
+    // hash's column order.
+    val batch = Historizer.batch(
+      StageToInt(ingestDelta(treePath, deviceId, prevStart), loadKey, deviceId),
+      conf.copy(loadKey = loadKey))
 
-      // TRUNCATE_EXISTING_LANDING_DATA + LANDING load (S7 + S5): landing is
-      // partitioned by deviceid, so the device re-land is a partition-level
-      // delete + append — no rewrite of other devices' data. `ingested`
-      // (reference parity: len(data_list), STG_Firebase2Oracle.py:73) is
-      // counted by an Observation on that write.
-      val landed = Observation()
-      store.deletePartition(landingName, "deviceid", deviceId)
-      store.appendPartitioned(landingName,
-        delta.observe(landed, count(lit(1)).as("ingested")), Seq("deviceid"))
-      val ingested = landed.get("ingested").asInstanceOf[Long]
-      fault("landed")
-      stamp("APP SPECIFIC LOADING COMPLETED")(
-        ctl.updateStatus(interfaceCd, loadKey, "APP SPECIFIC LOADING COMPLETED", now))
-
-      // LANDING_TO_INTERMEDIATE_TABLE (S6) + HIST_LOAD_CONTROL entry. The
-      // device's landing partition was just re-landed from `delta`, so INT
-      // is staged from the cache, not from a read-back of landing.
-      // StageToInt keeps Schemas.intermediate's column order, which sets
-      // the delta hash's column order. INT is partitioned by (deviceid,
-      // load_key), the last two columns of that order, so a replay of the
-      // key replaces its own partition and no other.
-      val batch = StageToInt(delta, loadKey, deviceId)
-      store.overwritePartitionsDynamic(intName, batch, Seq("deviceid", "load_key"))
-      fault("int appended")
-      stamp("hist-load in progress")(
-        ctl.addHistLoadEntry(loadKey, interfaceName, "in progress", now, now, now))
-      stamp("INTEGRATION LOAD COMPLETED")(
-        ctl.updateStatus(interfaceCd, loadKey, "INTEGRATION LOAD COMPLETED", now))
-
-      // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call), fed
-      // the same cached batch; rewrites only the target buckets it touches
-      val inserted = Historizer.mergeInto(
-        store, targetName, batch, conf.copy(loadKey = loadKey), now)
-      fault("scd2 written")
-
-      // UPDATE_STATUS_AND_FINISH_WORKFLOW: Success is written last
-      stamp("hist-load processed")(ctl.markHistLoadProcessed(loadKey, interfaceName))
+    // check_data_list_task branch (D2 / ST6)
+    if (batch.count == 0) {
       stamp("Success")(ctl.updateStatus(interfaceCd, loadKey, "Success", now))
-      RunResult(loadKey, ingested, inserted, skipped = false)
-    } finally delta.unpersist()
+      return RunResult(loadKey, ingested = 0, inserted = 0, skipped = true)
+    }
+
+    // TRUNCATE_EXISTING_LANDING_DATA + LANDING load (S7 + S5): replaces the
+    // device's deviceid partition and no other.
+    store.overwritePartitionsDynamic(landingName, batch.rows.drop("load_key"), Seq("deviceid"))
+    fault("landed")
+    stamp("APP SPECIFIC LOADING COMPLETED")(
+      ctl.updateStatus(interfaceCd, loadKey, "APP SPECIFIC LOADING COMPLETED", now))
+
+    // LANDING_TO_INTERMEDIATE_TABLE (S6) + HIST_LOAD_CONTROL entry. INT is
+    // partitioned by (deviceid, load_key), the last two columns of its
+    // order, so a replay of the key replaces its own partition and no other.
+    store.overwritePartitionsDynamic(intName, batch.rows, Seq("deviceid", "load_key"))
+    fault("int appended")
+    stamp("hist-load in progress")(
+      ctl.addHistLoadEntry(loadKey, interfaceName, "in progress", now, now, now))
+    stamp("INTEGRATION LOAD COMPLETED")(
+      ctl.updateStatus(interfaceCd, loadKey, "INTEGRATION LOAD COMPLETED", now))
+
+    // trigger_DAG_WF_EXT_SCD2_HISTORIZATION_LOAD (D3 → direct call), fed
+    // the same batch; rewrites only the target buckets it touches
+    val inserted = Historizer.mergeInto(store, targetName, batch, now)
+    fault("scd2 written")
+
+    // UPDATE_STATUS_AND_FINISH_WORKFLOW: Success is written last
+    stamp("hist-load processed")(ctl.markHistLoadProcessed(loadKey, interfaceName))
+    stamp("Success")(ctl.updateStatus(interfaceCd, loadKey, "Success", now))
+    // reference parity: len(data_list), STG_Firebase2Oracle.py:73
+    RunResult(loadKey, batch.count, inserted, skipped = false)
   }
 
   /** A control-table stamp: its fault point, then its write. */

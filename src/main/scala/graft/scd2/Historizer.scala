@@ -18,8 +18,9 @@ import graft.store.TableStore
   * step is a DataFrame transform; the "temp table" is a local checkpoint
   * of the delta, and the MERGE+INSERT become a rewrite of the natural-key
   * buckets the batch touches (close-out ∪ inserts), since Parquet has no
-  * in-place update (SURVEY §7.2). One merge body serves every caller, and
-  * [[mergeInto]] is the one writer of the stored target's layout.
+  * in-place update (SURVEY §7.2). One merge body serves every caller, over
+  * a [[Batch]], the one materialization of a batch's rows (a nightly run
+  * lands from it too); [[mergeInto]] is the one writer of the target.
   *
   * Faithful quirks preserved (SURVEY §7.2):
   *  - delta hash = sha256 over a SEPARATOR-LESS concat of
@@ -214,13 +215,14 @@ object Historizer {
 
   /** In-memory SCD2 apply: the whole new content of `tgt` (payload layout,
     * no `nk_bucket`). It runs the merge `Pipeline` and `scd2Sink` write
-    * with over `tgt`, its [[nkBucket]] attached, and returns the untouched
-    * buckets ∪ the merge's touched content, running no job beyond the
-    * merge's. The oracle-checked registry queries run it. */
+    * with over `src`'s [[Batch]] and `tgt`, its [[nkBucket]] attached, and
+    * returns the untouched buckets ∪ the merge's touched content, running
+    * no job beyond the batch's and the merge's. The oracle-checked
+    * registry queries run it. */
   def applyScd2(src: DataFrame, tgt: DataFrame, conf: Scd2Config,
       now: Timestamp): DataFrame = {
     val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, tgt.schema)
-    val (merged, touched) = merge(src, tgt.withColumn("nk_bucket", bucketOf), conf, now)
+    val (merged, touched) = merge(batch(src, conf), tgt.withColumn("nk_bucket", bucketOf), now)
     tgt.filter(!bucketOf.isin(touched: _*)).unionByName(merged.drop("nk_bucket"))
   }
 
@@ -268,7 +270,32 @@ object Historizer {
     pmod(xxhash64(hashed: _*), lit(buckets.toLong)).cast("int")
   }
 
-  /** The SCD2 MERGE of `src`'s `conf.loadKey` batch into `tgtStored`
+  /** One SCD2 batch: a `load_key` slice, `localCheckpoint`ed once, with
+    * its row count and its natural keys' [[nkBucket]]s observed on that
+    * job. Every consumer reads the checkpoint (a nightly run's landing and
+    * INT writes, the merge's delta detection and insert join), so a lazy
+    * source is parsed by one job and held once. Not persist: that entry
+    * stays cached until unpersisted, one per micro-batch of `scd2Sink`;
+    * checkpointed blocks are GC-reclaimed with the batch's plans
+    * (trade-off: SCALE.md "SCD2 batch read"). */
+  final class Batch private[scd2] (val rows: DataFrame, val conf: Scd2Config,
+      private[scd2] val bucketOf: Column, observed: Observation) {
+    lazy val count: Long = observed.get("rows").asInstanceOf[Long]
+    lazy val buckets: Seq[Int] =
+      observed.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSeq
+  }
+
+  /** `src`'s `conf.loadKey` [[Batch]], its keys bucketed by `src`'s types. */
+  def batch(src: DataFrame, conf: Scd2Config): Batch = {
+    val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, src.schema)
+    val observed = Observation()
+    val rows = src.filter(col("load_key") === lit(conf.loadKey))
+      .observe(observed, count(lit(1)).as("rows"), collect_set(bucketOf).as("buckets"))
+      .localCheckpoint(true)
+    new Batch(rows, conf, bucketOf, observed)
+  }
+
+  /** The SCD2 MERGE of `batch` into `tgtStored`
     * (Schemas.scd2TargetStored: payload + nk_bucket), returning ONLY the
     * new content of the buckets the batch's delta touches, with
     * `nk_bucket`. Written by dynamic partition overwrite ([[mergeInto]]),
@@ -276,28 +303,23 @@ object Historizer {
     * #6): one bucket per device-day the batch changes; an all-'NC' batch
     * touches none. High-water marks see the FULL target; the join side
     * and the close-out scan prune to the batch's and the touched buckets
-    * (a 'U' row's current version shares its natural key's bucket).
-    *
-    * `src` is read once: the batch slice is checkpointed on entry, and
-    * delta detection and the insert join read that checkpoint, so a lazy
-    * source (a `foreachBatch` micro-batch, a file scan) is parsed by one
-    * job. The batch's and the touched buckets are observed on the two
-    * checkpoints' jobs; nothing is collected. */
-  def applyScd2Partitioned(src: DataFrame, tgtStored: DataFrame,
-      conf: Scd2Config, now: Timestamp): DataFrame =
-    merge(src, tgtStored, conf, now)._1
+    * (a 'U' row's current version shares its natural key's bucket). */
+  def applyScd2Partitioned(batch: Batch, tgtStored: DataFrame,
+      now: Timestamp): DataFrame =
+    merge(batch, tgtStored, now)._1
 
-  /** Merge `src`'s `conf.loadKey` batch into the stored target
-    * `targetName` (hive-partitioned by [[nkBucket]] as `nk_bucket`) and
-    * return the versions it inserted, counted by an Observation on the
-    * write. The one writer of that layout: it rewrites only the touched
-    * buckets, reading their old files lazily — safe, because dynamic
-    * partition overwrite replaces partitions only at job commit. */
-  def mergeInto(store: TableStore, targetName: String, src: DataFrame,
-      conf: Scd2Config, now: Timestamp): Long = {
+  /** Merge `batch` into the stored target `targetName` (hive-partitioned
+    * by [[nkBucket]] as `nk_bucket`) and return the versions it inserted,
+    * counted by an Observation on the write. The one writer of that
+    * layout, for `Pipeline` and `StreamingIngest.scd2Sink` alike: it
+    * rewrites only the touched buckets, reading their old files lazily —
+    * safe, because dynamic partition overwrite replaces partitions only at
+    * job commit. */
+  def mergeInto(store: TableStore, targetName: String, batch: Batch,
+      now: Timestamp): Long = {
     val observed = Observation()
     val touched = applyScd2Partitioned(
-        src, store.readOrEmpty(targetName, Schemas.scd2TargetStored), conf, now)
+        batch, store.readOrEmpty(targetName, Schemas.scd2TargetStored), now)
       .observe(observed, count(when(
         col("da_inserted_datetime") === lit(now) && col("da_current_flag") === "Y",
         1)).as("inserted"))
@@ -308,19 +330,13 @@ object Historizer {
   /** The one merge body, with the reference's column-set contract check
     * (Delta_detection_query_gen.py:308-330, SURVEY D8): the touched
     * buckets' new content and those buckets, as the delta's job observed. */
-  private def merge(src: DataFrame, tgtStored: DataFrame,
-      conf: Scd2Config, now: Timestamp): (DataFrame, Seq[Int]) = {
+  private def merge(batch: Batch, tgtStored: DataFrame,
+      now: Timestamp): (DataFrame, Seq[Int]) = {
+    val conf = batch.conf
     val tgt = tgtStored.drop("nk_bucket")
     val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, tgt.schema)
-    // The batch slice, read once by delta detection and the insert join.
-    // localCheckpoint, not persist: a persist() entry stays cached until
-    // unpersisted, one per micro-batch of StreamingIngest.scd2Sink;
-    // checkpointed blocks are GC-reclaimed with the batch's plans. The
-    // batch's buckets (≤ targetBuckets values) are observed on its job.
-    val srcObserved = Observation()
-    val batch = src.filter(col("load_key") === lit(conf.loadKey))
-      .observe(srcObserved, collect_set(bucketOf).as("buckets"))
-      .localCheckpoint(true)
+    require(batch.bucketOf == bucketOf,
+      "the batch's natural keys must bucket as the target's: a key is a timestamp in one only")
     // Prune the delta-detect JOIN side to the buckets the batch's natural
     // keys hash into (equal keys hash to equal buckets, so no match is
     // lost; target-only rows classify NC, which nothing downstream
@@ -328,28 +344,24 @@ object Historizer {
     // O(current target slice) into O(batch-touched bucket slice) — at
     // 100 TB the difference between scanning the table and scanning a
     // few buckets. Marks still aggregate over the FULL target.
-    val tgtPruned = tgtStored.filter(col("nk_bucket").isin(buckets(srcObserved): _*))
+    val tgtPruned = tgtStored.filter(col("nk_bucket").isin(batch.buckets: _*))
       .drop("nk_bucket")
-    // The delta feeds two branches (close-out, inserts): checkpointed too.
+    // The delta feeds two branches (close-out, inserts): checkpointed.
     // Its I/U rows' buckets, observed on its job, prune the parquet scan.
     val observed = Observation()
-    val delta = deltaDetect(batch, tgtPruned, conf, marksFrom = Some(tgt))
+    val delta = deltaDetect(batch.rows, tgtPruned, conf, marksFrom = Some(tgt))
       .observe(observed, collect_set(
         when(col("upsert_cd").isin("I", "U"), bucketOf)).as("buckets"))
       .localCheckpoint(true)
-    val touched = buckets(observed)
+    val touched = observed.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSeq
     val tgtTouched = tgtStored
       .filter(col("nk_bucket").isin(touched: _*)).drop("nk_bucket")
     val closed = closeOut(tgtTouched, delta, now)
-    val ins = insertRows(batch, delta, tgt.columns.toSeq, conf, now)
+    val ins = insertRows(batch.rows, delta, tgt.columns.toSeq, conf, now)
     require(ins.columns.sorted.sameElements(tgt.columns.sorted),
       s"Columns returned by select query and columns in target table are not same: " +
         s"${ins.columns.sorted.mkString(",")} vs ${tgt.columns.sorted.mkString(",")}")
     (closed.unionByName(ins.select(tgt.columns.map(col).toSeq: _*))
       .withColumn("nk_bucket", bucketOf), touched)
   }
-
-  /** The bucket set a [[merge]] observation recorded. */
-  private def buckets(observed: Observation): Seq[Int] =
-    observed.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSeq
 }

@@ -128,14 +128,6 @@ class TableStore(spark: SparkSession, baseDir: String) {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*).parquet(path(name))
 
-  /** Partition-level delete on a hive-partitioned table: removes the
-    * `col=value` subtree — O(partition), no rewrite of other partitions.
-    * This is the scale path for the reference's device-scoped DELETE (S7,
-    * STG_Firebase2Oracle.py:99-119); with no such partition the delete is
-    * a no-op, like the SQL original. */
-  def deletePartition(name: String, partitionCol: String, value: String): Unit =
-    deleteRecursively(Paths.get(path(name), s"$partitionCol=$value"))
-
   /** Small-file compaction: rewrite the table into ~`targetBytes` output
     * files (computed from the current on-disk size — a directory listing,
     * not a data scan). Streaming sinks and partition-scoped SCD2 rewrites

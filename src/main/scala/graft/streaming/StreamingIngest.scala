@@ -67,18 +67,18 @@ object StreamingIngest {
     TreeIngest.toLanding(flat, deviceId, Schemas.epoch)
   }
 
-  /** Continuous SCD2 historization: every micro-batch runs
-    * `Historizer.mergeInto`, the same merge and target writer as the batch
-    * pipeline, with load_key = batchId + 1 (monotone, checkpoint-stable —
-    * a replayed batch reuses its id and absorbs as 'NC', giving
-    * effectively-once semantics on top of the file source's exactly-once
-    * offsets). Per-trigger write cost is O(buckets the micro-batch
-    * touches), not O(target).
+  /** Continuous SCD2 historization: every micro-batch becomes a
+    * `Historizer.Batch` under load_key = batchId + 1 (monotone,
+    * checkpoint-stable — a replayed batch reuses its id and absorbs as
+    * 'NC', giving effectively-once semantics on top of the file source's
+    * exactly-once offsets) and runs `Historizer.mergeInto`, the same merge
+    * and target writer as the batch pipeline. Per-trigger write cost is
+    * O(buckets the micro-batch touches), not O(target).
     *
     * The micro-batch is read once per trigger: `foreachBatch` hands over a
     * plan that every action re-runs (listing and parsing the batch's
-    * files again), and the merge checkpoints it on entry, before its
-    * consumers read it. */
+    * files again), and the batch checkpoints it before the merge reads
+    * it. */
   def scd2Sink(landing: DataFrame, store: TableStore, targetName: String,
       checkpointDir: String, conf: Scd2Config = Scd2Config(),
       clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
@@ -88,9 +88,9 @@ object StreamingIngest {
       .trigger(trigger)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Historizer.mergeInto(store, targetName,
-          batch.withColumn("load_key", lit(batchId + 1L)),
-          conf.copy(loadKey = batchId + 1L), clock())
+        val loadKey = batchId + 1L
+        Historizer.mergeInto(store, targetName, Historizer.batch(
+          batch.withColumn("load_key", lit(loadKey)), conf.copy(loadKey = loadKey)), clock())
         ()
       }
       .start()

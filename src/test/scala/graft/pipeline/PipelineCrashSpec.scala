@@ -193,15 +193,22 @@ class PipelineCrashSpec extends SparkSpec {
     val dht00 = new Pipeline(spark, store, interfaceName = "ESP_DHT11_DATA_DHT00",
       interfaceCd = "DHT00")
     assert(dht00.run(fixture, "DHT00", now).loadKey == 1L)
-    // every file that holds DHT00's INT rows, with its size and mtime
-    val files = store.read(dht00.intName).filter($"deviceid" === "DHT00")
-      .select(input_file_name()).distinct().as[String].collect()
-      .map(u => Paths.get(new java.net.URI(u).getPath)).toSeq
-    assert(files.nonEmpty)
+    // every file that holds DHT00's INT or landing rows, with its size and mtime
+    val files = Seq(dht00.intName, dht00.landingName).flatMap(table =>
+      store.read(table).filter($"deviceid" === "DHT00")
+        .select(input_file_name()).distinct().as[String].collect()
+        .map(u => Paths.get(new java.net.URI(u).getPath)))
+    assert(files.exists(_.toString.contains(s"/${dht00.intName}/")) &&
+      files.exists(_.toString.contains(s"/${dht00.landingName}/")), files)
     def stats = files.map(f =>
       if (!Files.exists(f)) None
       else Some((Files.size(f), Files.getLastModifiedTime(f).toMillis)))
     val before = stats
+    def landed(device: String): Seq[String] =
+      store.read(dht00.landingName).filter($"deviceid" === device)
+        .collect().map(_.toString).toSeq.sorted
+    val landed00 = landed("DHT00")
+    assert(landed00.size == 6)
 
     // interface "001" mints load key 1 too, for device DHT01
     val dht01 = new Crashing(store, crashAt = "int appended")
@@ -213,10 +220,12 @@ class PipelineCrashSpec extends SparkSpec {
     val tables = executions.flatMap(_._2).map(Paths.get(_).getFileName.toString).toSet
     assert(tables.contains(dht00.targetName), s"the listener saw no target scan: $tables")
     assert(!tables.contains(dht00.intName), tables)
-    assert(stats == before, "another device's INT files were rewritten")
+    assert(stats == before, "another device's INT or landing files were rewritten")
+    // both attempts landed DHT01: the replay replaced the first, one copy
+    assert(landed("DHT01") == landed00.map(_.replace("DHT00", "DHT01")))
   }
 
-  test("a failed attempt unpersists its delta") {
+  test("a failed attempt leaves no cached DataFrame") {
     // cached DataFrames only: the SCD2 merge's eager localCheckpoint is a
     // persistent RDD too, released by the context cleaner, not by the run
     def cached = spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)

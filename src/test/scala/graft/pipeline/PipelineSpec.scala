@@ -135,7 +135,7 @@ class PipelineSpec extends SparkSpec {
     assert(tgt.filter($"da_current_flag" === "Y").count() == 5)
   }
 
-  test("a run computes its batch once: every stage reads the cached delta") {
+  test("a run computes its batch once: every stage reads the batch's checkpoint") {
     val store = freshStore()
     val computed = spark.sparkContext.longAccumulator("delta rows")
     val pipe = new Pipeline(spark, store) {
@@ -148,6 +148,25 @@ class PipelineSpec extends SparkSpec {
     val r = pipe.run(fixture, dev, Schemas.epoch)
     assert(!r.skipped && r.ingested == 6)
     assert(computed.value == r.ingested)
+  }
+
+  test("a run materializes its batch once") {
+    // cached DataFrames only: the batch's and the delta's localCheckpoints
+    // are persistent RDDs too, released by the context cleaner
+    def cached = spark.sparkContext.getPersistentRDDs.values.count(!_.isCheckpointed)
+    val before = cached
+    @volatile var atLanded = -1
+    val pipe = new Pipeline(spark, freshStore()) {
+      override protected def fault(point: String): Unit =
+        if (point == "landed") atLanded = cached
+    }
+    val (r, executions) = executionsOf(pipe.run(fixture, dev, Schemas.epoch))
+    assert(!r.skipped && r.ingested == 6)
+    assert(atLanded == before, "a cached DataFrame was live at the landing write")
+    // the batch's checkpoint and the merge's delta checkpoint; no probe
+    val names = executions.map(_._1)
+    assert(names.count(_ == "localCheckpoint") == 2, names)
+    assert(!names.exists(Set("isEmpty", "head")), names)
   }
 
   test("after the landing write, no plan of the run scans landing or INT") {

@@ -42,7 +42,7 @@ class Scd2PartitionSpec extends SparkSpec {
   /** One SCD2 merge of `src` into the stored target `name`. */
   private def applyTo(store: TableStore, src: DataFrame, now: Timestamp,
       loadKey: Long): Unit =
-    Historizer.mergeInto(store, name, src, conf.copy(loadKey = loadKey), now)
+    Historizer.mergeInto(store, name, Historizer.batch(src, conf.copy(loadKey = loadKey)), now)
 
   /** A day of `dev`'s readings (every 20 minutes) from UTC midnight of
     * `day` — one device-day, the shape of one date subtree of an export. */
@@ -136,8 +136,9 @@ class Scd2PartitionSpec extends SparkSpec {
 
     // NC-only batch: the merge returns no row, so no bucket is touched and
     // every file stays byte-identical
-    val nc = Historizer.applyScd2Partitioned(batch(3L, i => if (i == 7) "99.9" else "60.0"),
-      store.read(name), conf.copy(loadKey = 3L), Timestamp.valueOf("2024-03-05 00:00:00"))
+    val nc = Historizer.applyScd2Partitioned(Historizer.batch(
+        batch(3L, i => if (i == 7) "99.9" else "60.0"), conf.copy(loadKey = 3L)),
+      store.read(name), Timestamp.valueOf("2024-03-05 00:00:00"))
     assert(nc.isEmpty)
     store.overwritePartitionsDynamic(name, nc, Seq("nk_bucket"))
     val after3 = dataFiles(root)
@@ -180,8 +181,8 @@ class Scd2PartitionSpec extends SparkSpec {
     val store = freshStore()
     applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
     val tgtStored = store.read(name)
-    val (merged, executions) = executionsOf(Historizer.applyScd2Partitioned(
-      batch(2L, i => if (i == 7) "99.9" else "60.0"), tgtStored, conf.copy(loadKey = 2L), now2))
+    val (merged, executions) = executionsOf(Historizer.applyScd2Partitioned(Historizer.batch(
+      batch(2L, i => if (i == 7) "99.9" else "60.0"), conf.copy(loadKey = 2L)), tgtStored, now2))
     val names = executions.map(_._1)
     assert(names.count(_ == "collect") == 0, names)
     // one checkpoint of the source batch, one of the delta
@@ -209,7 +210,7 @@ class Scd2PartitionSpec extends SparkSpec {
     assert(names.count(_ == "localCheckpoint") == 2, names)
     // the wrapper adds no execution of its own to the merge's
     val (_, merge) = executionsOf(Historizer.applyScd2Partitioned(
-      batch2, tgt1, conf.copy(loadKey = 2L), now2))
+      Historizer.batch(batch2, conf.copy(loadKey = 2L)), tgt1, now2))
     assert(names == merge.map(_._1))
 
     val inMemory = sortedRows(applied, Schemas.scd2Target)
@@ -242,10 +243,22 @@ class Scd2PartitionSpec extends SparkSpec {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.intermediate)
     val merged = Future {
       val tgtStored = store.readOrEmpty(name, Schemas.scd2TargetStored)
-      (Historizer.applyScd2Partitioned(empty, tgtStored, conf, now1).count(),
-        Historizer.mergeInto(store, name, empty, conf, now1))
+      val b = Historizer.batch(empty, conf)
+      (b.count, Historizer.applyScd2Partitioned(b, tgtStored, now1).count(),
+        Historizer.mergeInto(store, name, Historizer.batch(empty, conf), now1))
     }
-    assert(Await.result(merged, 120.seconds) == ((0L, 0L)))
+    assert(Await.result(merged, 120.seconds) == ((0L, 0L, 0L)))
+  }
+
+  test("a batch whose keys bucket unlike the target's is refused, not merged") {
+    // a string timestamp key hashes by value, the target's by UTC day: the
+    // pruned join would miss the key's current version
+    val store = freshStore()
+    val stringKeys = batch(1L, _ => "60.0").withColumn("timestamp", $"timestamp".cast("string"))
+    val e = intercept[IllegalArgumentException](Historizer.mergeInto(
+      store, name, Historizer.batch(stringKeys, conf), now1))
+    assert(e.getMessage.contains("bucket as the target's"))
+    assert(!store.exists(name))
   }
 
   test("a timestamp key's bucket is its UTC day's, under any session time zone") {

@@ -156,8 +156,8 @@ class Scd2PropertiesSpec extends SparkSpec {
 
         nonEmpty.zipWithIndex.foreach { case (b, i) =>
           val before = dataFiles(root)
-          Historizer.mergeInto(store, "hist", toDf(b, i + 1L),
-            conf.copy(loadKey = i + 1L), now)
+          Historizer.mergeInto(store, "hist",
+            Historizer.batch(toDf(b, i + 1L), conf.copy(loadKey = i + 1L)), now)
           now = new Timestamp(now.getTime + 86400000L)
 
           // buckets legitimately rewritable this increment: those of the
