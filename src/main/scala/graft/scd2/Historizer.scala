@@ -74,26 +74,26 @@ object Historizer {
 
   /** The delta-detection query (reference :87-102): hashed staging slice
     * FULL OUTER JOIN hashed current target slice on natural keys,
-    * classified I/U/NC, cross-joined with the surrogate high-water marks.
+    * classified I/U/NC, with the surrogate high-water marks `marks`
+    * (max KEY, max AK) as columns `max_key`, `max_ak` (:37-40, :89-90).
+    * Each row also carries the staging row's columns other than the
+    * natural keys and its `delta_hash`, all null on target-only rows, so
+    * the merge inserts straight from its I/U rows.
     *
-    * Scale notes: the 1-row max aggregate broadcasts
-    * (BroadcastNestedLoopJoin); the full-outer join shuffles both sides
-    * by the natural keys — at 100 TB the target side is pre-filtered to
-    * `da_current_flag='Y'` before the shuffle, and AQE handles skew.
-    */
-  /** `marksFrom`: where the surrogate high-water marks aggregate from.
-    * Defaults to `tgt`; the partitioned apply passes the FULL target here
-    * while pruning `tgt` itself to the buckets the batch can touch —
-    * marks must be global even when the join side is pruned. */
+    * Scale notes: the marks are two scalars, no join; the full-outer join
+    * shuffles both sides by the natural keys (AQE broadcasts a small
+    * side). The merge filters the output on the staging `delta_hash`,
+    * which lets Catalyst's `EliminateOuterJoin` plan a left outer join,
+    * and prunes the target side to the batch's buckets. */
   def deltaDetect(src: DataFrame, tgt: DataFrame, conf: Scd2Config,
-      marksFrom: Option[DataFrame] = None): DataFrame = {
+      marks: (Column, Column)): DataFrame = {
     val (akCol, keyCol) = discoverAkKeyCols(tgt.columns.toSeq)
     val dCols = deltaColumns(src.columns.toSeq, conf)
     val nk = conf.naturalKeys
 
-    // staging clause (:72-81): natural keys + recomputed hash, batch slice
+    // staging clause (:72-81): the batch slice + recomputed hash
     val stg = src.filter(col("load_key") === lit(conf.loadKey))
-      .select(nk.map(col) :+ deltaHash(dCols).as("delta_hash"): _*)
+      .select(src.columns.map(col).toSeq :+ deltaHash(dCols).as("delta_hash"): _*)
     // target clause (:61-70): current slice, hash recomputed from payload
     val tgtH = tgt.filter(col("da_current_flag") === "Y")
       .select(Seq(col(keyCol), col(akCol)) ++ nk.map(col)
@@ -103,18 +103,31 @@ object Historizer {
     val insertCond = nk.map(k => tgtH(k).isNull).reduce(_ || _)
     val updateCond = nk.map(k => tgtH(k) === stg(k)).reduce(_ && _) &&
       stg("delta_hash") =!= tgtH("delta_hash")
+    val payload = src.columns.toSeq.filterNot(c => nk.exists(_.equalsIgnoreCase(c)))
 
-    val classified = stg.join(tgtH, joinCond, "full_outer")
+    stg.join(tgtH, joinCond, "full_outer")
       .select(
         Seq(tgtH(akCol).as(akCol), tgtH(keyCol).as(keyCol)) ++
-        nk.map(k => coalesce(stg(k), tgtH(k)).as(k)) :+
-        when(insertCond, "I").when(updateCond, "U").otherwise("NC").as("upsert_cd"): _*)
+        nk.map(k => coalesce(stg(k), tgtH(k)).as(k)) ++
+        Seq(when(insertCond, "I").when(updateCond, "U").otherwise("NC").as("upsert_cd")) ++
+        payload.map(c => stg(c).as(c)) ++
+        Seq(stg("delta_hash").as("delta_hash"),
+          marks._1.cast("long").as("max_key"), marks._2.cast("long").as("max_ak")): _*)
+  }
 
-    // cross-join high-water marks (:37-40, :89-90): 1-row side → broadcast
-    val maxVals = marksFrom.getOrElse(tgt).agg(
-      coalesce(max(col(keyCol)), lit(0L)).cast("long").as("max_key"),
-      coalesce(max(col(akCol)), lit(0L)).cast("long").as("max_ak"))
-    classified.crossJoin(broadcast(maxVals))
+  /** [[deltaDetect]] with `tgt`'s own marks, one scalar subquery. */
+  def deltaDetect(src: DataFrame, tgt: DataFrame, conf: Scd2Config): DataFrame =
+    deltaDetect(src, tgt, conf, marksOf(tgt))
+
+  /** `tgt`'s surrogate high-water marks (max KEY, max AK; 0 when empty) as
+    * the two fields of one scalar subquery over `tgt`: the marks of the
+    * DataFrame entry points. [[mergeInto]] reads them from footers. */
+  private def marksOf(tgt: DataFrame): (Column, Column) = {
+    val (akCol, keyCol) = discoverAkKeyCols(tgt.columns.toSeq)
+    val marks = tgt.agg(struct(
+      coalesce(max(col(keyCol)), lit(0L)).cast("long").as("key"),
+      coalesce(max(col(akCol)), lit(0L)).cast("long").as("ak"))).scalar()
+    (marks.getField("key"), marks.getField("ak"))
   }
 
   /** Close-out (reference MERGE :187-213): target rows whose surrogate KEY
@@ -145,62 +158,52 @@ object Historizer {
       }.toSeq: _*)
   }
 
-  /** New-version insert rows (reference :215-330): source batch joined to
-    * 'I'/'U' delta rows on natural keys, with minted surrogate keys and
-    * da_* system columns.
+  /** New-version insert rows (reference :215-330): a projection of the
+    * merge's I/U delta, which carries each batch row's columns (`srcCols`,
+    * the batch's) and its number `__rn`, with minted surrogate keys and
+    * da_* system columns. One version per I/U batch row: a batch that
+    * repeats a natural key inserts one version for each of its rows.
     *
     * Surrogate minting: the reference's `ROW_NUMBER() OVER (ORDER BY 'JP')`
     * (:266-270) funnels to one task; its constant sort key makes the
     * assignment ARBITRARY-but-gapless, so any total order is equally
-    * faithful. Minting orders by the natural keys (deterministic for
-    * tests and oracle checks) through the distributed gapless index
-    * (SURVEY §7.5 #3).
-    */
-  def insertRows(src: DataFrame, delta: DataFrame, tgtCols: Seq[String],
+    * faithful. The merge numbers its delta in natural-key order
+    * (deterministic for tests and oracle checks) through the distributed
+    * gapless index (SURVEY §7.5 #3) before checkpointing it. */
+  def insertRows(delta: DataFrame, srcCols: Seq[String], tgtCols: Seq[String],
       conf: Scd2Config, now: Timestamp): DataFrame = {
     val (akCol, keyCol) = discoverAkKeyCols(tgtCols)
-    val nk = conf.naturalKeys
     // :232-243 — NOT IN (exclLoad + exclLoad): only load-excluded dropped
-    val srcCols = src.columns.toSeq
+    val insCols = srcCols
       .filterNot(c => conf.colsToExcludeFromLoad.map(_.toLowerCase).contains(c.toLowerCase))
       .sorted
-    val ext = delta.filter(col("upsert_cd").isin("I", "U"))
-      .select(nk.map(c => col(c).as(s"__nk_$c")) ++
-        Seq(col(akCol).as("__ext_ak"), col("max_ak"), col("max_key")): _*)
-    val batch = src.filter(col("load_key") === lit(conf.loadKey))
-    val joined = batch.join(ext,
-      nk.map(k => batch(k) === ext(s"__nk_$k")).reduce(_ && _), "inner")
-
-    val dCols = deltaColumns(src.columns.toSeq, conf)
     // delta_hash is stored only when the target schema carries it (the
     // DHT target does, FIXTURES.md A4); always recomputed on read anyway.
     val hashCols =
-      if (tgtCols.map(_.toLowerCase).contains("delta_hash"))
-        Seq(deltaHash(dCols).as("delta_hash"))
+      if (tgtCols.map(_.toLowerCase).contains("delta_hash")) Seq(col("delta_hash"))
       else Seq.empty
-    // distributed sort + gapless zipWithIndex, value-identical to
-    // row_number ordered by nk — the faithful `ROW_NUMBER() OVER (ORDER
-    // BY ...)` form funnels the whole batch through one task at scale
-    withGaplessIndex(joined.orderBy(nk.map(col): _*), "__rn")
-      .select(
-        Seq(
-          // AK: keep durable key for U rows, mint for I (:250-270)
-          coalesce(col("__ext_ak"), col("max_ak") + col("__rn")).as(akCol),
-          // KEY: always a fresh version key (:271-283)
-          (col("max_key") + col("__rn")).as(keyCol)) ++
-        srcCols.map(col) ++ hashCols ++
-        Seq(
-          lit(now).as("da_updated_datetime"),
-          lit(now).as("da_inserted_datetime"),
-          lit(Schemas.openEndedValidTo).as("da_valid_to_date"),
-          lit(now).as("da_valid_from_date"),
-          lit("N").as("da_deleted_flag"),
-          lit("Y").as("da_current_flag")): _*)
+    delta.select(
+      Seq(
+        // AK: keep durable key for U rows, mint for I (:250-270)
+        coalesce(col(akCol), col("max_ak") + col("__rn")).as(akCol),
+        // KEY: always a fresh version key (:271-283)
+        (col("max_key") + col("__rn")).as(keyCol)) ++
+      insCols.map(col) ++ hashCols ++
+      Seq(
+        lit(now).as("da_updated_datetime"),
+        lit(now).as("da_inserted_datetime"),
+        lit(Schemas.openEndedValidTo).as("da_valid_to_date"),
+        lit(now).as("da_valid_from_date"),
+        lit("N").as("da_deleted_flag"),
+        lit("Y").as("da_current_flag")): _*)
   }
 
   /** Gapless 1..N row index without a single-task window: RDD
     * `zipWithIndex` computes per-partition counts, then offsets each
-    * partition — two narrow passes, fully parallel. This is the one
+    * partition — two narrow passes, fully parallel; the count pass is a
+    * job of its own only when `df` has more than one partition. `df`'s
+    * plan runs when this is called, not at the caller's action. This is
+    * the one
     * sanctioned RDD drop-down in the engine (genuine per-partition
     * imperative logic; `monotonically_increasing_id` is NOT gapless and
     * the reference's minted keys must be). */
@@ -217,12 +220,13 @@ object Historizer {
     * no `nk_bucket`). It runs the merge `Pipeline` and `scd2Sink` write
     * with over `src`'s [[Batch]] and `tgt`, its [[nkBucket]] attached, and
     * returns the untouched buckets ∪ the merge's touched content, running
-    * no job beyond the batch's and the merge's. The oracle-checked
-    * registry queries run it. */
+    * no job beyond the batch's and the merge's. The marks are `tgt`'s, one
+    * scalar subquery. The oracle-checked registry queries run it. */
   def applyScd2(src: DataFrame, tgt: DataFrame, conf: Scd2Config,
       now: Timestamp): DataFrame = {
     val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, tgt.schema)
-    val (merged, touched) = merge(batch(src, conf), tgt.withColumn("nk_bucket", bucketOf), now)
+    val (merged, touched, _) = merge(batch(src, conf), tgt.withColumn("nk_bucket", bucketOf),
+      marksOf(tgt), now)
     tgt.filter(!bucketOf.isin(touched: _*)).unionByName(merged.drop("nk_bucket"))
   }
 
@@ -273,7 +277,7 @@ object Historizer {
   /** One SCD2 batch: a `load_key` slice, `localCheckpoint`ed once, with
     * its row count and its natural keys' [[nkBucket]]s observed on that
     * job. Every consumer reads the checkpoint (a nightly run's landing and
-    * INT writes, the merge's delta detection and insert join), so a lazy
+    * INT writes, the merge's delta detection), so a lazy
     * source is parsed by one job and held once. Not persist: that entry
     * stays cached until unpersisted, one per micro-batch of `scd2Sink`;
     * checkpointed blocks are GC-reclaimed with the batch's plans
@@ -301,67 +305,79 @@ object Historizer {
     * `nk_bucket`. Written by dynamic partition overwrite ([[mergeInto]]),
     * per-batch write cost is O(touched buckets), not O(target) (VERDICT r1
     * #6): one bucket per device-day the batch changes; an all-'NC' batch
-    * touches none. High-water marks see the FULL target; the join side
-    * and the close-out scan prune to the batch's and the touched buckets
-    * (a 'U' row's current version shares its natural key's bucket). */
+    * touches none. The marks are the FULL target's, one scalar subquery;
+    * the join side and the close-out scan prune to the batch's and the
+    * touched buckets (a 'U' row's current version shares its natural
+    * key's bucket). */
   def applyScd2Partitioned(batch: Batch, tgtStored: DataFrame,
       now: Timestamp): DataFrame =
-    merge(batch, tgtStored, now)._1
+    merge(batch, tgtStored, marksOf(tgtStored), now)._1
 
   /** Merge `batch` into the stored target `targetName` (hive-partitioned
     * by [[nkBucket]] as `nk_bucket`) and return the versions it inserted,
-    * counted by an Observation on the write. The one writer of that
+    * the delta's rows as its job observed them. The one writer of that
     * layout, for `Pipeline` and `StreamingIngest.scd2Sink` alike: it
     * rewrites only the touched buckets, reading their old files lazily —
     * safe, because dynamic partition overwrite replaces partitions only at
-    * job commit. */
+    * job commit. The marks come from the target files' parquet footers
+    * (`TableStore.maxFromFooters`), on the driver: no job scans the whole
+    * target. A footer commits with its data, so after a crash the marks
+    * are the committed target's. */
   def mergeInto(store: TableStore, targetName: String, batch: Batch,
       now: Timestamp): Long = {
-    val observed = Observation()
-    val touched = applyScd2Partitioned(
-        batch, store.readOrEmpty(targetName, Schemas.scd2TargetStored), now)
-      .observe(observed, count(when(
-        col("da_inserted_datetime") === lit(now) && col("da_current_flag") === "Y",
-        1)).as("inserted"))
+    val (akCol, keyCol) = discoverAkKeyCols(Schemas.scd2Target.fieldNames.toSeq)
+    val Seq(maxKey, maxAk) = store.maxFromFooters(targetName, Seq(keyCol, akCol))
+    val (touched, _, inserted) = merge(batch,
+      store.readOrEmpty(targetName, Schemas.scd2TargetStored), (lit(maxKey), lit(maxAk)), now)
     store.overwritePartitionsDynamic(targetName, touched, Seq("nk_bucket"))
-    observed.get("inserted").asInstanceOf[Long]
+    inserted
   }
 
   /** The one merge body, with the reference's column-set contract check
     * (Delta_detection_query_gen.py:308-330, SURVEY D8): the touched
-    * buckets' new content and those buckets, as the delta's job observed. */
-  private def merge(batch: Batch, tgtStored: DataFrame,
-      now: Timestamp): (DataFrame, Seq[Int]) = {
+    * buckets' new content, those buckets and the count of versions it
+    * inserts, as the delta's job observed them. `marks` are the target's
+    * (max KEY, max AK). */
+  private def merge(batch: Batch, tgtStored: DataFrame, marks: (Column, Column),
+      now: Timestamp): (DataFrame, Seq[Int], Long) = {
     val conf = batch.conf
+    val nk = conf.naturalKeys
     val tgt = tgtStored.drop("nk_bucket")
-    val bucketOf = nkBucket(conf.naturalKeys, conf.targetBuckets, tgt.schema)
+    val bucketOf = nkBucket(nk, conf.targetBuckets, tgt.schema)
     require(batch.bucketOf == bucketOf,
       "the batch's natural keys must bucket as the target's: a key is a timestamp in one only")
     // Prune the delta-detect JOIN side to the buckets the batch's natural
     // keys hash into (equal keys hash to equal buckets, so no match is
     // lost; target-only rows classify NC, which nothing downstream
-    // consumes). This turns the per-batch full-outer shuffle from
+    // consumes). This turns the per-batch outer-join shuffle from
     // O(current target slice) into O(batch-touched bucket slice) — at
     // 100 TB the difference between scanning the table and scanning a
-    // few buckets. Marks still aggregate over the FULL target.
+    // few buckets.
     val tgtPruned = tgtStored.filter(col("nk_bucket").isin(batch.buckets: _*))
       .drop("nk_bucket")
-    // The delta feeds two branches (close-out, inserts): checkpointed.
-    // Its I/U rows' buckets, observed on its job, prune the parquet scan.
+    // The delta keeps its I/U rows with a natural key (a null key matches
+    // no version, Oracle `=`, and is never inserted); the staging-side
+    // hash filter turns the full outer join into a left outer join. It is
+    // numbered in natural-key order (the minted keys) and checkpointed:
+    // the close-out takes its 'U' keys and the inserts project its rows.
+    // Its buckets, observed on its job, prune the close-out's scan; its
+    // rows are the versions inserted.
     val observed = Observation()
-    val delta = deltaDetect(batch.rows, tgtPruned, conf, marksFrom = Some(tgt))
-      .observe(observed, collect_set(
-        when(col("upsert_cd").isin("I", "U"), bucketOf)).as("buckets"))
+    val iu = deltaDetect(batch.rows, tgtPruned, conf, marks).filter(
+      col("delta_hash").isNotNull && col("upsert_cd").isin("I", "U") &&
+        nk.map(col(_).isNotNull).reduce(_ && _))
+    val delta = withGaplessIndex(iu.orderBy(nk.map(col): _*), "__rn")
+      .observe(observed, collect_set(bucketOf).as("buckets"), count(lit(1)).as("rows"))
       .localCheckpoint(true)
     val touched = observed.get("buckets").asInstanceOf[scala.collection.Seq[Int]].toSeq
     val tgtTouched = tgtStored
       .filter(col("nk_bucket").isin(touched: _*)).drop("nk_bucket")
     val closed = closeOut(tgtTouched, delta, now)
-    val ins = insertRows(batch.rows, delta, tgt.columns.toSeq, conf, now)
+    val ins = insertRows(delta, batch.rows.columns.toSeq, tgt.columns.toSeq, conf, now)
     require(ins.columns.sorted.sameElements(tgt.columns.sorted),
       s"Columns returned by select query and columns in target table are not same: " +
         s"${ins.columns.sorted.mkString(",")} vs ${tgt.columns.sorted.mkString(",")}")
     (closed.unionByName(ins.select(tgt.columns.map(col).toSeq: _*))
-      .withColumn("nk_bucket", bucketOf), touched)
+      .withColumn("nk_bucket", bucketOf), touched, observed.get("rows").asInstanceOf[Long])
   }
 }

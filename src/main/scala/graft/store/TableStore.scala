@@ -2,11 +2,14 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
 import org.apache.spark.sql.{DataFrame, Encoder, Row, SaveMode, SparkSession}
@@ -68,6 +71,45 @@ class TableStore(spark: SparkSession, baseDir: String) {
         writer.write(g)
       } finally writer.close()
     }
+
+  /** The largest value of each of the integer columns `cols` over table
+    * `name`'s data files, 0 when none holds one (an absent or empty table),
+    * read on the driver from the parquet footers' column statistics:
+    * O(files), no Spark job and no data page read. Files are listed as
+    * Spark's reader lists them: a path component starting with `.` or `_`
+    * (a `.spark-staging-*` directory, `_SUCCESS`) is skipped. A footer
+    * commits with its file, so the figure is the committed table's. A
+    * column chunk that holds non-null values but no statistics fails the
+    * read, rather than return a low figure. */
+  def maxFromFooters(name: String, cols: Seq[String]): Seq[Long] = {
+    val root = Paths.get(path(name))
+    if (!Files.exists(root)) return cols.map(_ => 0L)
+    val walk = Files.walk(root)
+    val files = try walk.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+        root.relativize(p).iterator().asScala.forall { c =>
+          val n = c.toString
+          !n.startsWith(".") && !n.startsWith("_")
+        }).toList
+      finally walk.close()
+    val maxima = files.flatMap { f =>
+      val reader = ParquetFileReader.open(new LocalInputFile(f),
+        ParquetReadOptions.builder(new PlainParquetConfiguration).build())
+      try reader.getRowGroups.asScala.flatMap(_.getColumns.asScala)
+        .filter(c => cols.contains(c.getPath.toDotString)).flatMap { chunk =>
+          import scala.language.existentials // Statistics[T <: Comparable[T]]
+          val stats = chunk.getStatistics
+          val column = chunk.getPath.toDotString
+          if (stats != null && stats.hasNonNullValue)
+            Some(column -> stats.genericGetMax.asInstanceOf[Number].longValue)
+          else if (stats != null && stats.isNumNullsSet && stats.getNumNulls == chunk.getValueCount)
+            None
+          else throw new IllegalStateException(
+            s"$f: no footer statistics for column $column, so its maximum is unknown")
+        }.toList
+      finally reader.close()
+    }.groupMapReduce(_._1)(_._2)(math.max)
+    cols.map(maxima.getOrElse(_, 0L))
+  }
 
   /** A column's parquet type and how to add a row's non-null value to a
     * record; the types are the ones Spark writes and reads back. */

@@ -3,6 +3,8 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session: one per suite (lazy), UTC, small shuffle
@@ -12,21 +14,16 @@ trait SparkSpec extends AnyFunSuite {
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
   /** `f`'s result and the SQL executions it starts, in order: each one's
-    * action name and the table directories its leaf file scans read. */
-  def executionsOf[T](f: => T): (T, Seq[(String, Seq[String])]) = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    * action name and its executed plan (for AQE, the final plan). */
+  def plansOf[T](f: => T): (T, Seq[(String, SparkPlan)]) = {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]
-    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
-      private def record(funcName: String, qe: QueryExecution): Unit =
-        seen.add(funcName -> collectWithSubqueries(qe.executedPlan) {
-          case s: FileSourceScanExec => s
-        }.flatMap(_.relation.location.rootPaths).map(_.toUri.getPath.stripSuffix("/")))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        record(funcName, qe)
+        seen.add(funcName -> qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        record(funcName, qe)
+        seen.add(funcName -> qe.executedPlan)
     }
     org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
@@ -36,7 +33,25 @@ trait SparkSpec extends AnyFunSuite {
       (result, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** The leaf file scans of `plan`, its subqueries' included. */
+  def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    AdaptivePlans.collectWithSubqueries(plan) { case s: FileSourceScanExec => s }
+
+  /** `f`'s result and the SQL executions it starts, in order: each one's
+    * action name and the table directories its leaf file scans read. */
+  def executionsOf[T](f: => T): (T, Seq[(String, Seq[String])]) = {
+    val (result, plans) = plansOf(f)
+    (result, plans.map { case (name, plan) =>
+      name -> fileScans(plan).flatMap(_.relation.location.rootPaths)
+        .map(_.toUri.getPath.stripSuffix("/"))
+    })
+  }
 }
+
+/** AQE-aware plan traversal: it walks into each adaptive plan's current
+  * plan and into subqueries. */
+object AdaptivePlans extends AdaptiveSparkPlanHelper
 
 object SparkSpec {
   lazy val session: SparkSession = {

@@ -209,6 +209,11 @@ class PipelineCrashSpec extends SparkSpec {
         .collect().map(_.toString).toSeq.sorted
     val landed00 = landed("DHT00")
     assert(landed00.size == 6)
+    // an earlier load of DHT01 under its own interface, one reading of
+    // which the fixture revises: the retry's merge closes that version, so
+    // it reads DHT01's buckets of the target
+    assert(new Pipeline(spark, store, interfaceName = "ESP_DHT11_DATA_DHT01",
+      interfaceCd = "DHT01").run(PipelineSpec.revised(fixture), "DHT01", now).inserted == 5)
 
     // interface "001" mints load key 1 too, for device DHT01
     val dht01 = new Crashing(store, crashAt = "int appended")
@@ -216,7 +221,7 @@ class PipelineCrashSpec extends SparkSpec {
     val (r, executions) = executionsOf(dht01.runWithRetry(fixture, "DHT01", now,
       retries = 1, retryDelayMs = 1L, sleep = _ => slept += 1))
     assert(slept == 1, "the first attempt did not crash")
-    assert(!r.skipped && r.loadKey == 1L && r.ingested == 6)
+    assert(!r.skipped && r.loadKey == 1L && r.ingested == 6 && r.inserted == 1)
     val tables = executions.flatMap(_._2).map(Paths.get(_).getFileName.toString).toSet
     assert(tables.contains(dht00.targetName), s"the listener saw no target scan: $tables")
     assert(!tables.contains(dht00.intName), tables)

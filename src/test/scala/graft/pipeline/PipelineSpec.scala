@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
@@ -45,8 +45,8 @@ class PipelineSpec extends SparkSpec {
     val now1 = Timestamp.valueOf("2024-03-02 11:00:00")
     val r1 = pipe.run(fixture, dev, now1)
     assert(!r1.skipped && r1.loadKey == 1L)
-    // 6 land; the null-Timestamp row classifies 'I' but never matches the
-    // insert join (null natural key, Oracle `=` semantics) ⇒ 5 inserted
+    // 6 land; the null-Timestamp row classifies 'I' but the merge never
+    // inserts it (null natural key, Oracle `=` semantics) ⇒ 5 inserted
     assert(r1.ingested == 6 && r1.inserted == 5)
     assert(ctl.prevRunDetails("001").get._1 == "Success")
 
@@ -124,7 +124,7 @@ class PipelineSpec extends SparkSpec {
     val pipe = new Pipeline(spark, store)
     val now1 = Timestamp.valueOf("1970-01-01 00:00:00") // epoch start ⇒ re-runs see all
     val r1 = pipe.run(fixture, dev, now1)
-    assert(r1.inserted == 5) // null-nk row dropped at insert join
+    assert(r1.inserted == 5) // null-nk row dropped from the merge's delta
     val r2 = pipe.run(fixture, dev, Timestamp.valueOf("1970-01-01 00:00:01"))
     // threshold = prev start = epoch ⇒ all 6 re-ingest; 5 absorb as NC,
     // the null-nk row re-classifies 'I' and is re-dropped — stable
@@ -170,19 +170,18 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("after the landing write, no plan of the run scans landing or INT") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val store = freshStore()
-    // the table directories each execution's leaf file scans read, once the
-    // current run's landing write has returned
-    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    // each leaf file scan of an execution started once the current run's
+    // landing write has returned: its table directory, and whether it
+    // prunes partitions
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]
     @volatile var landed = false
-    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+    val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (landed) collectWithSubqueries(qe.executedPlan) { case s: FileSourceScanExec => s }
-          .flatMap(_.relation.location.rootPaths).foreach(p => scanned.add(p.getName))
+        if (landed) fileScans(qe.executedPlan).foreach(s => s.relation.location.rootPaths
+          .foreach(p => scanned.add(p.getName -> s.partitionFilters.nonEmpty)))
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val pipe = new Pipeline(spark, store) {
@@ -193,17 +192,21 @@ class PipelineSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      // epoch threshold: the second run re-ingests the fixture into a
-      // non-empty target, so its merge scans the target
-      Seq(0L, 1000L).foreach { ms =>
+      // epoch threshold: the second run re-ingests the tree, one reading
+      // revised, into the non-empty target, so its merge reads the
+      // target's buckets of that device-day
+      Seq(fixture -> 0L, PipelineSpec.revised(fixture) -> 1000L).foreach { case (tree, ms) =>
         landed = false
-        assert(!pipe.run(fixture, dev, new Timestamp(Schemas.epoch.getTime + ms)).skipped)
+        assert(!pipe.run(tree, dev, new Timestamp(Schemas.epoch.getTime + ms)).skipped)
         org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
       }
     } finally spark.listenerManager.unregister(listener)
-    val tables = scanned.toArray.toSet
+    val scans = scanned.toArray(Array.empty[(String, Boolean)]).toSeq
+    val tables = scans.map(_._1).toSet
     assert(tables.contains(pipe.targetName), s"the listener saw no target scan: $tables")
+    assert(scans.filter(_._1 == pipe.targetName).forall(_._2), s"a target scan is not pruned: $scans")
     assert(!tables.contains(pipe.landingName) && !tables.contains(pipe.intName), tables)
+    assert(store.read(pipe.targetName).count() == 6)
   }
 
   test("INT holds the device's landing rows plus the load key (S6), in the intermediate schema") {
@@ -347,5 +350,15 @@ class PipelineSpec extends SparkSpec {
     assert(store.rows[HistLoadControlEntry](ctl.histLoadName).sortBy(_.subject_area) == Seq(
       HistLoadControlEntry(1L, "I", "in progress", t2, t2, t2),
       HistLoadControlEntry(1L, "J", "in progress", t1, t1, t1)))
+  }
+}
+
+object PipelineSpec {
+  /** A copy of the fixture tree `fixture` with its 2024-03-01 09:00
+    * reading's humidity revised. */
+  def revised(fixture: String): String = {
+    val tree = Files.createTempDirectory("graft-tree").resolve("firebase_tree.json")
+    Files.writeString(tree, Files.readString(Paths.get(fixture)).replace("\"62.0\"", "\"99.9\""))
+    tree.toString
   }
 }

@@ -143,6 +143,21 @@ class HistorizerSpec extends SparkSpec {
     assert(all.filter($"count" =!= 1).count() == 0)
   }
 
+  test("a batch that repeats a natural key inserts one version per batch row") {
+    val batch = intRows(
+      ("IST", "62.0", "29.4", t0, "DEV01", 1L),
+      ("IST", "70.0", "29.4", t0, "DEV01", 1L),
+      ("IST", "63.1", "29.6", t1, "DEV01", 1L))
+    val tgt1 = Historizer.applyScd2(batch, emptyTarget, conf, now)
+    assert(tgt1.count() == 3)
+    assert(tgt1.select("dht11_key").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(tgt1.filter($"timestamp" === t0).select("humidity").as[String]
+      .collect().sorted.toSeq == Seq("62.0", "70.0"))
+    // both stay current: the reference's MERGE refuses such a batch
+    // (ORA-30926), this merge does not
+    assert(tgt1.filter($"timestamp" === t0 && $"da_current_flag" === "Y").count() == 2)
+  }
+
   test("applyScd2 re-run of identical batch is a no-op (all NC)") {
     val batch = intRows(("IST", "62.0", "29.4", t0, "DEV01", 1L))
     val tgt1 = Historizer.applyScd2(batch, emptyTarget, conf, now)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.SparkSpec
+import graft.{AdaptivePlans, SparkSpec}
 import graft.model.{Scd2Config, Schemas}
 import graft.store.TableStore
 
@@ -220,6 +220,71 @@ class Scd2PartitionSpec extends SparkSpec {
       .select(bucketOf).distinct().count() > 1, "the touched rows must span several buckets")
     applyTo(store, batch2, now2, 2L)
     assert(sortedRows(store.read(name), Schemas.scd2Target) == inMemory)
+  }
+
+  test("mergeInto reads only the batch's buckets of a multi-bucket target, with no nested-loop or full outer join") {
+    import org.apache.spark.sql.catalyst.plans.FullOuter
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    val store = freshStore()
+    val days = Seq("2024-03-01", "2024-03-02", "2024-03-03")
+    applyTo(store, (for (dev <- Seq("DEVA", "DEVB"); day <- days)
+      yield deviceDay(dev, day, 1L)).reduce(_ union _), now1, 1L)
+    val root = Paths.get(store.path(name))
+    assert(dataFiles(root).keySet.map(bucketDir).size > 2, "fixture must spread over multiple buckets")
+    // the next night: a new device-day, and one reading of the day before revised
+    val revised = deviceDay("DEVA", "2024-03-03", 2L)
+      .filter($"timestamp" === Timestamp.from(Instant.parse("2024-03-03T00:00:00Z")))
+      .withColumn("humidity", lit("99.9"))
+    val night = deviceDay("DEVA", "2024-03-04", 2L).unionByName(revised)
+    val nightBuckets = night.select(bucketOf).distinct().count()
+    val (_, plans) = plansOf(applyTo(store, night, now2, 2L))
+    val names = plans.map(_._1)
+    assert(names.count(_ == "localCheckpoint") == 2 && names.count(_ == "collect") == 0, names)
+    val targetScans = plans.flatMap(p => fileScans(p._2)).filter(_.relation.location.rootPaths
+      .exists(_.toUri.getPath.stripSuffix("/") == root.toUri.getPath.stripSuffix("/")))
+    assert(targetScans.nonEmpty, s"no execution read the target: $names")
+    val read = targetScans.map(s => s.partitionFilters.nonEmpty -> s.metrics("numPartitions").value)
+    assert(read.forall { case (pruned, n) => pruned && n <= nightBuckets } && read.exists(_._2 > 0),
+      s"a target scan reads other buckets (pruned, buckets read): $read")
+    plans.foreach { case (n, plan) =>
+      assert(AdaptivePlans.collectWithSubqueries(plan) {
+        case j: BroadcastNestedLoopJoinExec => j
+        case j: BaseJoinExec if j.joinType == FullOuter => j
+      }.isEmpty, s"$n plans a nested-loop or full outer join:\n$plan")
+    }
+    val tgt = store.read(name)
+    assert(tgt.count() === 6 * 72 + 72 + 1)
+    assert(tgt.filter($"da_current_flag" === "N").count() === 1)
+    // the minted keys continue the footers' marks, gapless
+    assert(tgt.filter($"da_inserted_datetime" === now2).select("dht11_key").as[Long]
+      .collect().sorted.toSeq === (6 * 72 + 1L to 6 * 72 + 73L))
+  }
+
+  test("a target file whose footer lacks a key's statistics fails mergeInto before it writes") {
+    import org.apache.parquet.conf.PlainParquetConfiguration
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.LocalOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val store = freshStore()
+    applyTo(store, batch(1L, _ => "60.0"), now1, 1L)
+    val root = Paths.get(store.path(name))
+    // a data file holding a key above every other, written without statistics
+    val schema = MessageTypeParser.parseMessageType(
+      "message spark_schema { optional int64 dht11_key; optional int64 dht11_ak; }")
+    val file = root.resolve(bucketDir(dataFiles(root).keys.head)).resolve("part-nostats.parquet")
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(file)).withType(schema)
+      .withConf(new PlainParquetConfiguration).withStatisticsEnabled(false).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("dht11_key", 1000L).append("dht11_ak", 1000L))
+    finally writer.close()
+    val before = dataFiles(root)
+    val e = intercept[IllegalStateException](
+      applyTo(store, batch(2L, i => if (i == 7) "99.9" else "60.0"), now2, 2L))
+    assert(e.getMessage.contains("no footer statistics for column dht11_key"), e.getMessage)
+    val after = dataFiles(root)
+    assert(after.keySet == before.keySet && after.forall { case (rel, bytes) =>
+      java.util.Arrays.equals(before(rel), bytes) })
   }
 
   test("a parquet source is scanned by one execution across the merge and its write") {

@@ -84,4 +84,34 @@ class TableStoreSpec extends SparkSpec {
     assert(store.read("c").count() === 10000)
     assert(!Files.exists(Paths.get(store.path("c.tmp"))))
   }
+
+  test("footer marks equal max() over the table's rows, skip staging leftovers, and are 0 when empty") {
+    import org.apache.spark.sql.functions.{col, lit, max, when}
+    val store = new TableStore(spark, Files.createTempDirectory("graft-store").toString)
+    val cols = Seq("dht11_key", "dht11_ak")
+    assert(store.maxFromFooters("absent", cols) === Seq(0L, 0L))
+    // several buckets, several files each; the AK is null on some rows and
+    // on every row of one bucket
+    val rows = (1L to 300L).map(k => (k * 7 % 1009, k, (k % 5).toInt)).toDF("dht11_key", "ak", "nk_bucket")
+      .withColumn("dht11_ak", when(col("nk_bucket") =!= 4 && col("ak") % 3 =!= 0, col("ak")))
+      .drop("ak").repartition(3)
+    store.overwritePartitionsDynamic("t", rows, Seq("nk_bucket"))
+    val root = Paths.get(store.path("t"))
+    assert(Files.list(root).iterator().asScala.count(_.getFileName.toString.startsWith("nk_bucket=")) == 5)
+    // a dynamic overwrite's leftover staging directory, holding larger
+    // keys, and marker files: Spark's reader lists none of them
+    val staged = Files.createTempDirectory("graft-staged").resolve("t").toString
+    rows.withColumn("dht11_key", col("dht11_key") + 100000L)
+      .withColumn("dht11_ak", lit(100000L)).write.partitionBy("nk_bucket").parquet(staged)
+    Files.move(Paths.get(staged), root.resolve(".spark-staging-0b1c"))
+    Seq(root, root.resolve("nk_bucket=1"))
+      .foreach(d => Files.writeString(d.resolve("_SUCCESS"), "not parquet"))
+    val expected = store.read("t").agg(max("dht11_key"), max("dht11_ak")).first()
+    assert(store.maxFromFooters("t", cols) === Seq(expected.getLong(0), expected.getLong(1)))
+    assert(expected.getLong(0) < 100000L && expected.getLong(1) < 100000L)
+    // an empty table: one Spark-written file with no row group
+    store.overwrite("e", rows.limit(0))
+    assert(parquetFiles(store.path("e")).nonEmpty)
+    assert(store.maxFromFooters("e", cols) === Seq(0L, 0L))
+  }
 }

@@ -2,7 +2,7 @@
 """Parent/change A/B of one perfbench workload.
 
   tools/perfab.py PARENT_DIR CHANGE_DIR --workload W --seeds 411-420
-                  [--raw runs.jsonl]
+                  [--raw runs.jsonl] [--layers SEED]
 
 PARENT_DIR and CHANGE_DIR are two checkouts of the repository (say, a
 `git clone` of the parent commit and the working tree). For each seed the
@@ -25,6 +25,12 @@ count for neither side), and two verdicts:
           more than the metric's bound (a fraction of the parent's median),
           "unresolved" when the parent's own IQR exceeds that bound (unless
           every change run beats every parent run), else "within".
+
+With --layers SEED it then runs `perfbench/run.py --trace 1` once per
+checkout for that seed and prints each per-layer metric BENCHMARK.json
+declares whose value differs between the two runs (parent, change,
+ratio): the layer that moved. A traced run that is not correct or has
+failed ops makes the exit code 1.
 """
 import argparse
 import json
@@ -42,10 +48,10 @@ def seed_list(spec):
     return seeds
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     """One benchmark run; its result JSON, or None with the reason."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
     try:
@@ -87,6 +93,30 @@ def fmt(values):
     return f"{med:.3f} [{q1:.3f}, {q3:.3f}]"
 
 
+def layers(per_layer, sides, workload, seed, seconds):
+    """Print the per-layer metrics that differ between one traced run of
+    each side; False when a traced run is refused."""
+    results = {}
+    for side, checkout in sides.items():
+        result, reason = run_once(checkout, workload, seed, seconds, trace=1)
+        if reason:
+            print(f"\nlayers, seed {seed}: {side} REFUSED {reason}")
+            return False
+        results[side] = result["metrics"]
+    print(f"\n{workload} layers, seed {seed} (--trace 1), metrics that differ:")
+    print(f"{'metric':<28} {'parent':>12} {'change':>12} {'ratio':>7}")
+    for m in per_layer:
+        name = m["name"]
+        p, c = (results[side].get(name, {}).get("value") for side in ("parent", "change"))
+        if p == c:
+            continue
+        numbers = isinstance(p, (int, float)) and isinstance(c, (int, float))
+        ratio = f"{c / p:.2f}x" if numbers and p else "-"
+        show = (lambda v: f"{v:.4g}") if numbers else str
+        print(f"{name:<28} {show(p):>12} {show(c):>12} {ratio:>7}")
+    return True
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -94,6 +124,8 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 411-420 or 1,3,5-7")
     ap.add_argument("--raw", help="append every run's result line here (JSON lines)")
+    ap.add_argument("--layers", type=int, metavar="SEED",
+                    help="after the A/B, one --trace 1 run per checkout; print the layers that moved")
     args = ap.parse_args()
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
@@ -131,7 +163,9 @@ def main():
             ratio = f"{cmed / pmed:.2f}x" if pmed else "-"
             print(f"{name:<10} {fmt(parent):<26} {fmt(change):<26} {ratio:>6}"
                   f" {wins:>2}/{len(pairs):<3}  {'yes' if gain else 'no ':<4}  {bound}")
-    return 1 if refused or not pairs else 0
+    traced = args.layers is None or layers(
+        bench["per_layer"], sides, args.workload, args.layers, seconds)
+    return 1 if refused or not pairs or not traced else 0
 
 
 if __name__ == "__main__":
