@@ -259,27 +259,21 @@ object Classifier {
     * .assignStream's sibling for vocabulary-sized models): profiles are
     * too big to bake as plan literals, so each micro-batch runs the
     * batch [[predict]] (stream-static join + per-doc argmax) inside
-    * foreachBatch and appends verdicts. A doc's verdict is identical
-    * whether it arrived by stream or backfill (spec-asserted); replays
-    * append duplicate rows — route through an id-keyed dedup or
-    * appendStaged-style idempotence if the source replays. */
+    * foreachBatch ([[graft.streaming.MicroBatch.sink]]) and stages each
+    * batch's verdicts into `name` with [[graft.store.TableStore
+    * .appendStaged]], which also creates the table. A doc's verdict is
+    * identical whether it arrived by stream or backfill (spec-asserted);
+    * replays append duplicate rows — route through an id-keyed dedup if
+    * the source replays. */
   def classifySink(docs: DataFrame, profiles: DataFrame,
       store: graft.store.TableStore, name: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (store.exists(name))
-          store.appendStaged(name, predict(batch, profiles, idCol, textCol))
-        else store.overwrite(name, predict(batch, profiles, idCol, textCol))
-        ()
-      }
-      .start()
+    graft.streaming.MicroBatch.sink(docs, checkpointDir, trigger) { (batch, _) =>
+      store.appendStaged(name, predict(batch, profiles, idCol, textCol))
+    }
 
   // ------------------------------------------------------------ oracle
   /** DuckDB twin of the full train→predict chain over `documents`,

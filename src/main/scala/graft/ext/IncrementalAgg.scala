@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Incremental rollup via mergeable aggregate state — the pattern that
   * lets a 100 TB warehouse keep `GROUP BY` summaries current without
@@ -70,6 +71,39 @@ object IncrementalAgg {
 
   private def histName(name: String) = s"${name}_hist"
   private def docsName(name: String) = s"${name}_docs"
+  private def histSchema(groupCol: String) = StructType(Seq(
+    StructField(groupCol, StringType), StructField("bin", LongType),
+    StructField("n", LongType)))
+  /** Re-reduce (group, bin, n) count slices to one row per bin. */
+  private def histSums(hist: DataFrame, groupCol: String): DataFrame =
+    hist.groupBy(col(groupCol), col("bin")).agg(sum(col("n")).as("n"))
+
+  /** The increment's documents that the first-write-wins ledger `ledger`
+    * (one `idCol` column) does not hold yet, each once, projected to
+    * `idCol +: cols` and checkpointed. The ledger is corpus-sized and
+    * NEVER shuffles: the increment's ids broadcast into a semi-join that
+    * extracts the hits, and the increment anti-joins those (the
+    * [[IncrementalDedup]] shape). The ledger only dedups against PRIOR
+    * increments, and an at-least-once source can re-deliver a doc inside
+    * one micro-batch, so the increment also drops its own duplicate ids:
+    * without that, the copies all count and permanently shift the
+    * standing state (ADVICE r17). The caller appends the fresh ids to the
+    * ledger after it has emitted its output. */
+  private[ext] def freshDocs(newDocs: DataFrame,
+      store: graft.store.TableStore, ledger: String, idCol: String,
+      cols: Seq[String]): DataFrame = {
+    val ledgered = store.readOrEmpty(ledger,
+      StructType(Seq(StructField(idCol, LongType))))
+    // incIds feeds exactly ONE consumer (the broadcast below builds it
+    // once on the driver) — a checkpoint here was a pure barrier, ~0.5 s
+    // per increment at sf0.1 (r19 decomposition)
+    val incIds = newDocs.select(col(idCol)).distinct()
+    val seen = ledgered.join(broadcast(incIds), Seq(idCol), "left_semi")
+    newDocs.join(broadcast(seen), Seq(idCol), "left_anti")
+      .dropDuplicates(idCol)
+      .select((idCol +: cols).map(col): _*)
+      .localCheckpoint(true)
+  }
 
   /** Fold one increment into the standing per-group quality histogram
     * and return the ACCUMULATED histogram's TVD against a FROZEN
@@ -97,34 +131,16 @@ object IncrementalAgg {
       groupCol: String = "source", idCol: String = "doc_id",
       textCol: String = "text",
       emit: DataFrame => Unit = _ => ()): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val histSchema = StructType(Seq(StructField(groupCol, StringType),
-      StructField("bin", LongType), StructField("n", LongType)))
-    val ledger = store.readOrEmpty(docsName(name),
-      StructType(Seq(StructField(idCol, LongType))))
-    // first-write-wins: increment ids broadcast, the ledger streams
-    // map-side (the IncrementalDedup shape — the ledger never shuffles)
-    // incIds feeds exactly ONE consumer (the broadcast below builds it
-    // once on the driver) — a checkpoint here was a pure barrier, ~0.5 s
-    // per increment at sf0.1 (r19 decomposition)
-    val incIds = newDocs.select(col(idCol)).distinct()
-    val seen = ledger.join(broadcast(incIds), Seq(idCol), "left_semi")
-    // dropDuplicates WITHIN the increment too (ADVICE r17): the ledger
-    // only dedups against PRIOR increments, but an at-least-once source
-    // can re-deliver a doc inside one micro-batch — without this, those
-    // copies all bin and permanently shift the standing histogram
-    val fresh = newDocs.join(broadcast(seen), Seq(idCol), "left_anti")
-      .dropDuplicates(idCol)
-      .select(col(idCol), col(groupCol), col(textCol))
-      .localCheckpoint(true) // feeds the histogram AND the ledger append
+    // feeds the histogram AND the ledger append
+    val fresh = freshDocs(newDocs, store, docsName(name), idCol,
+      Seq(groupCol, textCol))
     val q4 = TextAnalysis.qualityScoreQ4(col(textCol))
     val bCounts = fresh.select(col(groupCol),
         ((q4 - pmod(q4, lit(1000L))) / 1000L).cast("long").as("bin"))
       .groupBy(col(groupCol), col("bin")).agg(count(lit(1)).as("n"))
       .localCheckpoint(true) // feeds the accumulated view AND the append
-    val acc = store.readOrEmpty(histName(name), histSchema)
-      .unionByName(bCounts)
-      .groupBy(col(groupCol), col("bin")).agg(sum(col("n")).as("n"))
+    val acc = histSums(store.readOrEmpty(histName(name), histSchema(groupCol))
+      .unionByName(bCounts), groupCol)
     val drift = Stats
       .histogramDriftFromCounts(acc, ref, groupCol, "bin", "n")
       .localCheckpoint(true) // pin the output BEFORE the state mutates
@@ -137,6 +153,17 @@ object IncrementalAgg {
   // ------------------- incremental tokenizer-fertility/OOV monitor (r18)
 
   private def fertName(name: String) = s"${name}_fert"
+  private def fertSchema(langCol: String) = StructType(Seq(
+    StructField(langCol, StringType), StructField("n_docs", LongType),
+    StructField("n_words", LongType), StructField("n_tokens", LongType),
+    StructField("n_unk_words", LongType)))
+  /** Re-reduce per-language count slices to one row per language. */
+  private def fertSums(fert: DataFrame, langCol: String): DataFrame =
+    fert.groupBy(col(langCol))
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("n_words")).as("n_words"),
+        sum(col("n_tokens")).as("n_tokens"),
+        sum(col("n_unk_words")).as("n_unk_words"))
 
   /** Fold one increment into the standing per-language token/word/[UNK]
     * sums under a FROZEN WordPiece vocabulary and return the ACCUMULATED
@@ -169,21 +196,9 @@ object IncrementalAgg {
       vocab: Seq[(String, Long)], langCol: String = "lang",
       idCol: String = "doc_id", textCol: String = "text",
       emit: DataFrame => Unit = _ => ()): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val fertSchema = StructType(Seq(StructField(langCol, StringType),
-      StructField("n_docs", LongType), StructField("n_words", LongType),
-      StructField("n_tokens", LongType), StructField("n_unk_words", LongType)))
-    val ledger = store.readOrEmpty(docsName(name),
-      StructType(Seq(StructField(idCol, LongType))))
-    // incIds feeds exactly ONE consumer (the broadcast below builds it
-    // once on the driver) — a checkpoint here was a pure barrier, ~0.5 s
-    // per increment at sf0.1 (r19 decomposition)
-    val incIds = newDocs.select(col(idCol)).distinct()
-    val seen = ledger.join(broadcast(incIds), Seq(idCol), "left_semi")
-    val fresh = newDocs.join(broadcast(seen), Seq(idCol), "left_anti")
-      .dropDuplicates(idCol)
-      .select(col(idCol), col(langCol), col(textCol))
-      .localCheckpoint(true) // feeds the slice AND the ledger append
+    // feeds the slice AND the ledger append
+    val fresh = freshDocs(newDocs, store, docsName(name), idCol,
+      Seq(langCol, textCol))
     val tb = WordPiece.tokenizeBert(fresh, vocab, idCol, textCol)
       .select(col(idCol), col("n_tokens"), col("n_unk_words"))
     val slice = fresh
@@ -194,13 +209,8 @@ object IncrementalAgg {
         sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_unk_words")).as("n_unk_words"))
       .localCheckpoint(true) // feeds the accumulated view AND the append
-    val acc = store.readOrEmpty(fertName(name), fertSchema)
-      .unionByName(slice)
-      .groupBy(col(langCol))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_words")).as("n_words"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_unk_words")).as("n_unk_words"))
+    val acc = fertSums(store.readOrEmpty(fertName(name), fertSchema(langCol))
+      .unionByName(slice), langCol)
     def frac4(num: Column, den: Column): Column = {
       val scaled = num * lit(10000L)
       when(den > 0,
@@ -221,28 +231,12 @@ object IncrementalAgg {
   /** The standing per-language sums (re-reduced) — equals the batch
     * sums over everything ingested, under any slicing. */
   def fertilityState(store: graft.store.TableStore, name: String,
-      langCol: String = "lang"): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    store.readOrEmpty(fertName(name),
-        StructType(Seq(StructField(langCol, StringType),
-          StructField("n_docs", LongType), StructField("n_words", LongType),
-          StructField("n_tokens", LongType),
-          StructField("n_unk_words", LongType))))
-      .groupBy(col(langCol))
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_words")).as("n_words"),
-        sum(col("n_tokens")).as("n_tokens"),
-        sum(col("n_unk_words")).as("n_unk_words"))
-  }
+      langCol: String = "lang"): DataFrame =
+    fertSums(store.readOrEmpty(fertName(name), fertSchema(langCol)), langCol)
 
   /** The standing histogram (group, bin, n), re-reduced — equals the
     * batch histogram over everything ingested, under any slicing. */
   def driftState(store: graft.store.TableStore, name: String,
-      groupCol: String = "source"): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    store.readOrEmpty(histName(name),
-        StructType(Seq(StructField(groupCol, StringType),
-          StructField("bin", LongType), StructField("n", LongType))))
-      .groupBy(col(groupCol), col("bin")).agg(sum(col("n")).as("n"))
-  }
+      groupCol: String = "source"): DataFrame =
+    histSums(store.readOrEmpty(histName(name), histSchema(groupCol)), groupCol)
 }

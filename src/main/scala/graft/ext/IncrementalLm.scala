@@ -66,8 +66,6 @@ object IncrementalLm {
   private val bgSchema = StructType(Seq(
     StructField("g", StringType),
     StructField("c", LongType)))
-  private def docsSchema(idCol: String) = StructType(Seq(
-    StructField(idCol, LongType)))
 
   /** Score one increment against the accumulated BIGRAM model
     * (prequential-inclusive: the increment's own counts fold in first),
@@ -98,26 +96,17 @@ object IncrementalLm {
       "n_trigrams", "kn3_ppm", idCol, textCol, emit)
 
   /** The shared prequential mechanics around a pluggable count-table →
-    * (g, ppm) model — ledger first-write-wins, one increment
-    * tokenization, model-sized count merge, score, pin, emit, then
-    * commit state in the crash-safe order (ledger before counts). */
+    * (g, ppm) model — ledger first-write-wins
+    * ([[IncrementalAgg.freshDocs]]: a doc counts once, even when one
+    * increment carries it twice), one increment tokenization,
+    * model-sized count merge, score, pin, emit, then commit state in the
+    * crash-safe order (ledger before counts). */
   private def scoreWith(newDocs: DataFrame, store: TableStore, name: String,
       n: Int, ppmOf: DataFrame => DataFrame, nOut: String, ppmOut: String,
       idCol: String, textCol: String, emit: DataFrame => Unit): DataFrame = {
-    val ledger = store.readOrEmpty(docsName(name), docsSchema(idCol))
-    // first-write-wins: the ledger is corpus-sized and NEVER shuffles —
-    // increment ids broadcast into a semi-join that extracts the hits,
-    // and the increment anti-joins those (the IncrementalDedup shape)
-    // incIds feeds exactly ONE consumer (the broadcast below builds it
-    // once on the driver) — a checkpoint here was a pure barrier, ~0.5 s
-    // per increment at sf0.1 (r19 decomposition)
-    val incIds = newDocs.select(col(idCol)).distinct()
-    val seen = ledger.join(broadcast(incIds), Seq(idCol), "left_semi")
-    val fresh = newDocs
-      .join(broadcast(seen), Seq(idCol), "left_anti")
-      .select(col(idCol), col(textCol))
-      .localCheckpoint(true) // feeds occurrences, the output left join,
-                             // and the ledger append
+    // feeds occurrences, the output left join, and the ledger append
+    val fresh = IncrementalAgg.freshDocs(newDocs, store, docsName(name),
+      idCol, Seq(textCol))
     // one increment tokenization: feeds the increment counts AND the
     // scoring join (the lmScore checkpoint discipline)
     val b = fresh.select(col(idCol),

@@ -17,21 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    the DuckDB oracle can verify, and that StreamingSpec cross-checks
   *    against the streaming form on finite input.
   *
-  * ==State-table / checkpoint pairing contract (all stamped sinks)==
-  * The rollup/resample/KMV/HLL sinks guard against REPLAYED micro-batches
-  * with a `__folded_batch` stamp riding inside the state table:
-  * `max(stamp) >= batchId` means "this batch is already folded, skip".
-  * That stamp is only meaningful against the checkpoint that produced
-  * it — batchIds are per-checkpoint counters. A state table paired with
-  * a FRESH checkpoint dir (new stream, batchId restarts at 0 under a
-  * stale stamp) would silently skip genuinely new batches (ADVICE r12).
-  * Contract: a state table and its checkpoint dir live and die
-  * TOGETHER — resume with both, or start over with neither (drop the
-  * state table when re-pointing a new stream at it). The sinks whose
-  * merge law is idempotent (HLL register-max, KMV set-union) survive
-  * misuse with only missed increments; the counting sinks would
-  * double-fold without the stamp, so the pairing contract is the
-  * correctness boundary, not a style note.
+  * Every sink here starts through [[MicroBatch.sink]]. The state-table
+  * sinks (rollup, resample, KMV, HLL, CMS) fold through
+  * [[MicroBatch.foldOnce]], whose Scaladoc holds the state-table /
+  * checkpoint pairing contract; the batch-stamped output sinks append
+  * through [[MicroBatch.emit]].
   */
 object EventStreams {
 
@@ -72,54 +62,20 @@ object EventStreams {
     * that), and readers get `finalizeState(store.read(name))` at any
     * point without touching event history — the aggregate analog of the
     * reference's "process only the delta" control-table discipline
-    * (`STG_Firebase2Oracle.py:52-59`). */
+    * (`STG_Firebase2Oracle.py:52-59`). The counting fold is not
+    * idempotent, so it folds through [[MicroBatch.foldOnce]]: a replayed
+    * batch is skipped, and adopting an unstamped (batch-built) state
+    * table logs a warning. */
   def rollupSink(events: DataFrame, store: graft.store.TableStore,
       name: String, keys: Seq[String], valCol: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // effectively-once on top of replayed micro-batches: the highest
-        // folded batchId rides INSIDE the state table (every row carries
-        // it), so "state + fold watermark" commit in ONE atomic
-        // tmp-then-swap — a replayed batch sees itself already folded and
-        // no-ops. A side meta-file can't give this: state-then-meta
-        // double-counts on a crash between the writes, meta-then-state
-        // loses the batch.
-        // a state table first written by the BATCH IncrementalAgg path has
-        // no __folded_batch column — treat that as "nothing folded yet"
-        // (batch −1) instead of throwing on the first micro-batch. This
-        // adoption is only safe when the stream's source does NOT replay
-        // events the batch path already folded; since an unstamped table
-        // can't prove that, log the adoption loudly so an accidental
-        // re-fold over the same history is detectable (ADVICE r6)
-        val already = store.exists(name) && {
-          val st = store.read(name)
-          val stamped = st.columns.contains("__folded_batch")
-          if (!stamped && st.limit(1).count() > 0)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"rollupSink adopting batch-built state table '$name' with no " +
-                "__folded_batch stamp: assuming its rows are NOT in this " +
-                "stream's history — events folded by both paths would " +
-                "double-count")
-          stamped && st.limit(1).count() > 0 &&
-            st.agg(max(col("__folded_batch"))).head().getLong(0) >= batchId
-        }
-        if (!already) {
-          val inc = graft.ext.IncrementalAgg.buildState(batch, keys, valCol)
-          val merged =
-            if (store.exists(name))
-              graft.ext.IncrementalAgg.mergeStates(
-                Seq(store.read(name).drop("__folded_batch"), inc), keys)
-            else inc
-          store.overwrite(name, merged.withColumn("__folded_batch", lit(batchId)))
-        }
-        ()
+    MicroBatch.sink(events, checkpointDir, trigger) { (batch, batchId) =>
+      MicroBatch.foldOnce(store, name, batchId) { state =>
+        val inc = graft.ext.IncrementalAgg.buildState(batch, keys, valCol)
+        state.fold(inc)(s => graft.ext.IncrementalAgg.mergeStates(Seq(s, inc), keys))
       }
-      .start()
+    }
 
   /** Streaming time-series resample: the streaming face of
     * [[graft.ext.TimeSeries.resample]] (SURVEY §2.9 — the reference's
@@ -162,42 +118,23 @@ object EventStreams {
     * smallest per group — the sketch's merge law (k-min of union = k-min
     * of union of k-mins) makes the fold associative and idempotent for
     * re-delivered values, so state stays ≤ k rows per group FOREVER while
-    * counting distincts over the unbounded stream. Same atomic
-    * `__folded_batch` stamp as [[rollupSink]] for effectively-once under
-    * micro-batch replay. Read the live estimate at any point via
+    * counting distincts over the unbounded stream. Folds through
+    * [[MicroBatch.foldOnce]] like [[rollupSink]]; the idempotent fold
+    * makes adopting an unstamped (batch-built) state table safe. Read
+    * the live estimate at any point via
     * [[graft.ext.Sketches.kmvProfile]] over the state table. */
   def kmvSink(values: DataFrame, store: graft.store.TableStore,
       name: String, groupCol: String, valueCol: String, k: Int,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.sink(values, checkpointDir, trigger) { (batch, batchId) =>
+      MicroBatch.foldOnce(store, name, batchId) { state =>
         import graft.ext.Sketches
-        // unlike rollupSink, adopting an UNSTAMPED (batch-built) state
-        // table is unconditionally safe here: the fold is idempotent —
-        // re-folding values already in the keep-set cannot change the
-        // k-min of the union — so "no stamp" simply means "fold"
-        val already = store.exists(name) && {
-          val st = store.read(name)
-          st.columns.contains("__folded_batch") && st.limit(1).count() > 0 &&
-            st.agg(max(col("__folded_batch"))).head().getLong(0) >= batchId
-        }
-        if (!already) {
-          val inc = Sketches.kmvHashes(batch, groupCol, valueCol)
-          val merged =
-            if (store.exists(name))
-              store.read(name).select(col(groupCol), col("h")).union(inc)
-            else inc
-          store.overwrite(name,
-            Sketches.kmvKeep(merged, groupCol, k)
-              .withColumn("__folded_batch", lit(batchId)))
-        }
-        ()
+        val inc = Sketches.kmvHashes(batch, groupCol, valueCol)
+        Sketches.kmvKeep(state.fold(inc)(
+          _.select(col(groupCol), col("h")).union(inc)), groupCol, k)
       }
-      .start()
+    }
 
   /** Streaming HyperLogLog: the streaming face of
     * [[graft.ext.Sketches.hllRegisters]]. Each micro-batch builds its
@@ -214,30 +151,13 @@ object EventStreams {
       name: String, groupCol: String, valueCol: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.sink(values, checkpointDir, trigger) { (batch, batchId) =>
+      MicroBatch.foldOnce(store, name, batchId) { state =>
         import graft.ext.Sketches
-        val already = store.exists(name) && {
-          val st = store.read(name)
-          st.columns.contains("__folded_batch") && st.limit(1).count() > 0 &&
-            st.agg(max(col("__folded_batch"))).head().getLong(0) >= batchId
-        }
-        if (!already) {
-          val inc = Sketches.hllRegisters(batch, groupCol, valueCol)
-          val merged =
-            if (store.exists(name))
-              Sketches.hllMerge(Seq(
-                store.read(name).drop("__folded_batch"), inc), groupCol)
-            else inc
-          store.overwrite(name,
-            merged.withColumn("__folded_batch", lit(batchId)))
-        }
-        ()
+        val inc = Sketches.hllRegisters(batch, groupCol, valueCol)
+        state.fold(inc)(s => Sketches.hllMerge(Seq(s, inc), groupCol))
       }
-      .start()
+    }
 
   /** Streaming count-min sketch: the streaming face of
     * [[graft.ext.Sketches.cmsBuild]]. Each micro-batch builds its own
@@ -246,38 +166,22 @@ object EventStreams {
     * table by [[graft.ext.Sketches.cmsMerge]] — counts are a commutative
     * monoid, so late values fold whenever they arrive and per-trigger
     * work is O(batch) + O(depth·width). Unlike the KMV fold this is NOT
-    * idempotent (re-folded counts double), so the fold watermark rides
-    * inside the atomic state swap exactly as [[rollupSink]]: a replayed
-    * batch sees itself folded and no-ops. */
+    * idempotent (re-folded counts double), so it folds through
+    * [[MicroBatch.foldOnce]] exactly as [[rollupSink]]: a replayed batch
+    * sees itself folded and no-ops, and adopting an unstamped table logs
+    * a warning. */
   def cmsSink(values: DataFrame, store: graft.store.TableStore,
       name: String, valueCol: String, checkpointDir: String,
       depth: Int = graft.ext.Sketches.cmsDepth,
       width: Int = graft.ext.Sketches.cmsWidth,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.sink(values, checkpointDir, trigger) { (batch, batchId) =>
+      MicroBatch.foldOnce(store, name, batchId) { state =>
         import graft.ext.Sketches
-        val already = store.exists(name) && {
-          val st = store.read(name)
-          st.columns.contains("__folded_batch") && st.limit(1).count() > 0 &&
-            st.agg(max(col("__folded_batch"))).head().getLong(0) >= batchId
-        }
-        if (!already) {
-          val inc = Sketches.cmsBuild(batch, valueCol, depth, width)
-          val merged =
-            if (store.exists(name))
-              Sketches.cmsMerge(Seq(
-                store.read(name).drop("__folded_batch"), inc))
-            else inc
-          store.overwrite(name,
-            merged.withColumn("__folded_batch", lit(batchId)))
-        }
-        ()
+        val inc = Sketches.cmsBuild(batch, valueCol, depth, width)
+        state.fold(inc)(s => Sketches.cmsMerge(Seq(s, inc)))
       }
-      .start()
+    }
 
   /** Streaming sessionization: per-user sessions closed after `gapMs` of
     * event-time silence, via flatMapGroupsWithState with event-time
@@ -455,33 +359,18 @@ object EventStreams {
     * drops to empty and appends nothing — re-delivery cannot corrupt the
     * index or duplicate pairs.
     *
-    * Crash safety (ADVICE r15, the [[lmScoreSink]] contract): the pairs
-    * land in `pairsName` through indexIncrement's `emit` hook — BEFORE
-    * the index ingests the batch. A crash after the pairs append but
-    * before the index commit makes the retry recompute against the
-    * unchanged index (bit-identical pairs, same batch stamp — the
-    * (__batch, id_a, id_b) dedup read absorbs them); a crash after the
-    * index commit finds the pairs already durable. The old order (index
-    * inside, pairs after) permanently lost a crashed batch's pairs: the
-    * replay anti-joined to empty and emitted nothing. */
+    * Crash safety: the pairs land in `pairsName` through
+    * indexIncrement's `emit` hook, [[MicroBatch.emit]], BEFORE the index
+    * ingests the batch, so a retry re-emits bit-identical pairs that the
+    * (__batch, id_a, id_b) dedup read absorbs. */
   def minhashIndexSink(docs: DataFrame, store: graft.store.TableStore,
       name: String, pairsName: String, checkpointDir: String,
       threshold: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalDedup.indexIncrement(batch, store, name,
-          threshold,
-          emit = pairs =>
-            if (!pairs.isEmpty)
-              store.append(pairsName,
-                pairs.withColumn("__batch", lit(batchId))))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ext.IncrementalDedup.indexIncrement(batch, store, name,
+        threshold, emit = MicroBatch.emit(store, pairsName, batchId))
+    }
 
   /** Streaming excerpt/quote detection (VERDICT r13 #5): each
     * micro-batch runs through the SAME standing MinHash-LSH index as
@@ -500,22 +389,10 @@ object EventStreams {
       name: String, pairsName: String, checkpointDir: String,
       threshold: Double = 0.8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // pairs land via the emit hook BEFORE the index ingests — the
-        // minhashIndexSink crash contract, inherited verbatim
-        graft.ext.IncrementalDedup.containmentEstIncrement(batch, store,
-          name, threshold,
-          emit = pairs =>
-            if (!pairs.isEmpty)
-              store.append(pairsName,
-                pairs.withColumn("__batch", lit(batchId))))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ext.IncrementalDedup.containmentEstIncrement(batch, store,
+        name, threshold, emit = MicroBatch.emit(store, pairsName, batchId))
+    }
 
   /** Continuous quality-distribution drift monitor — the streaming twin
     * of q_quality_drift ([[graft.ext.Stats.histogramDrift]]): each
@@ -535,20 +412,10 @@ object EventStreams {
       name: String, outName: String, checkpointDir: String,
       ref: DataFrame, groupCol: String = "source",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalAgg.qualityDriftIncrement(batch, store, name,
-          ref, groupCol,
-          emit = drift =>
-            if (!drift.isEmpty)
-              store.append(outName,
-                drift.withColumn("__batch", lit(batchId))))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ext.IncrementalAgg.qualityDriftIncrement(batch, store, name,
+        ref, groupCol, emit = MicroBatch.emit(store, outName, batchId))
+    }
 
   /** Streaming span-level decontamination — the continuous face of
     * q_decontam_spans (r18): each micro-batch of ingest docs is cut
@@ -566,18 +433,10 @@ object EventStreams {
   def spanExciseSink(docs: DataFrame, store: graft.store.TableStore,
       name: String, outName: String, checkpointDir: String, k: Int = 20,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Decontamination.exciseSpansIncrement(store, name, batch,
-          k, emit = out =>
-            if (!out.isEmpty)
-              store.append(outName, out.withColumn("__batch", lit(batchId))))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ext.Decontamination.exciseSpansIncrement(store, name, batch,
+        k, emit = MicroBatch.emit(store, outName, batchId))
+    }
 
   /** Continuous tokenizer-fertility/OOV drift monitor — the streaming
     * twin of q_tok_oov (VERDICT r17 #6): each micro-batch tokenizes
@@ -596,20 +455,10 @@ object EventStreams {
       name: String, outName: String, checkpointDir: String,
       vocab: Seq[(String, Long)], langCol: String = "lang",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalAgg.tokFertilityIncrement(batch, store, name,
-          vocab, langCol,
-          emit = sheet =>
-            if (!sheet.isEmpty)
-              store.append(outName,
-                sheet.withColumn("__batch", lit(batchId))))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ext.IncrementalAgg.tokFertilityIncrement(batch, store, name,
+        vocab, langCol, emit = MicroBatch.emit(store, outName, batchId))
+    }
 
   /** Streaming memoized tokenization (VERDICT r14 #3): each micro-batch
     * of documents tokenizes against the standing word→tokens memo
@@ -626,25 +475,17 @@ object EventStreams {
     * StreamingSpec. Replay safety: a re-delivered batch's words are all
     * memo hits (word-keyed first-write-wins), so the memo never
     * accretes duplicates; the OUTPUT table is append-only and
-    * batch-stamped, so downstream reads dedup replays on (__batch, id)
-    * like the other counting sinks. */
+    * batch-stamped by [[MicroBatch.emit]], so downstream reads dedup
+    * replays on (__batch, id) like the other counting sinks. */
   def tokenizeSink(docs: DataFrame, store: graft.store.TableStore,
       name: String, outName: String, checkpointDir: String,
       vocab: Seq[(String, Long)] = graft.ext.Unigram.pieces,
       idCol: String = "doc_id", textCol: String = "text",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = graft.ext.IncrementalTokens
-          .tokenizeIncrement(batch, store, name, vocab, idCol, textCol)
-        if (!out.isEmpty)
-          store.append(outName, out.withColumn("__batch", lit(batchId)))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      MicroBatch.emit(store, outName, batchId)(graft.ext.IncrementalTokens
+        .tokenizeIncrement(batch, store, name, vocab, idCol, textCol))
+    }
 
   /** Prequential LM scoring on the stream (the continuous CCNet-filter
     * shape): each micro-batch of documents is Kneser–Ney-scored against
@@ -657,33 +498,19 @@ object EventStreams {
     * Finite-input outputs obey the prefix law vs the batch
     * [[graft.ext.TextAnalysis.lmScoreKn]] — asserted in StreamingSpec.
     *
-    * Crash safety (ADVICE r15): the scores land in `outName` through
-    * scoreIncrement's `emit` hook — i.e. BEFORE the doc ledger or the
-    * model counts commit. A crash after the output append but before
-    * the state commit makes the foreachBatch retry re-score the batch
-    * against the unchanged standing model (bit-identical rows, same
-    * batch stamp — the (__batch, id) dedup read absorbs them); a crash
-    * after the state commit finds the scores already durable. The old
-    * order (state inside, output after) could permanently lose a
-    * batch's scores: the retry saw every doc ledgered and emitted
-    * nothing — at-most-once output under at-least-once delivery. */
+    * Crash safety: the scores land in `outName` through
+    * scoreIncrement's `emit` hook, [[MicroBatch.emit]], BEFORE the doc
+    * ledger or the model counts commit, so a retry re-scores the batch
+    * against the unchanged standing model and re-emits bit-identical
+    * rows that the (__batch, id) dedup read absorbs. */
   def lmScoreSink(docs: DataFrame, store: graft.store.TableStore,
       name: String, outName: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalLm.scoreIncrement(batch, store, name,
-          idCol, textCol,
-          emit = out =>
-            if (!out.isEmpty)
-              store.append(outName, out.withColumn("__batch", lit(batchId))))
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, batchId) =>
+      graft.ext.IncrementalLm.scoreIncrement(batch, store, name,
+        idCol, textCol, emit = MicroBatch.emit(store, outName, batchId))
+    }
 
   /** Streaming bounded weighted sample: fold each micro-batch into a
     * k-row priority-sample state table — the streaming face of
@@ -699,32 +526,26 @@ object EventStreams {
       name: String, k: Int, weightCol: String, checkpointDir: String,
       idCol: String = "doc_id", salt: String = "pri",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val inc = graft.ext.Curation
-          .prioritySample(batch, k, weightCol, idCol, salt)
-        val merged =
-          if (store.exists(name))
-            store.read(name).unionByName(inc)
-              // same-id resolution (ADVICE r14): a replay re-derives the
-              // identical (priority, weight) and folds to itself; a
-              // weight UPDATE re-delivers the id with a different
-              // priority — keep the min-(priority, weight) struct, so
-              // the pick is content-deterministic (never an arbitrary
-              // dropDuplicates row) and the monoid law stays exact
-              .groupBy(col(idCol))
-              .agg(min(struct(col("priority"), col("weight"))).as("pw"))
-              .select(col(idCol), col("pw.weight").as("weight"),
-                col("pw.priority").as("priority"))
-              .orderBy(col("priority"), col(idCol)).limit(k)
-          else inc
-        store.overwrite(name, merged)
-        ()
-      }
-      .start()
+    MicroBatch.sink(docs, checkpointDir, trigger) { (batch, _) =>
+      val inc = graft.ext.Curation
+        .prioritySample(batch, k, weightCol, idCol, salt)
+      val merged =
+        if (store.exists(name))
+          store.read(name).unionByName(inc)
+            // same-id resolution (ADVICE r14): a replay re-derives the
+            // identical (priority, weight) and folds to itself; a
+            // weight UPDATE re-delivers the id with a different
+            // priority — keep the min-(priority, weight) struct, so
+            // the pick is content-deterministic (never an arbitrary
+            // dropDuplicates row) and the monoid law stays exact
+            .groupBy(col(idCol))
+            .agg(min(struct(col("priority"), col("weight"))).as("pw"))
+            .select(col(idCol), col("pw.weight").as("weight"),
+              col("pw.priority").as("priority"))
+            .orderBy(col("priority"), col(idCol)).limit(k)
+        else inc
+      store.overwrite(name, merged)
+    }
 
   /** Streaming centroid assignment: embeddings arriving on a stream are
     * scored against a TRAINED centroid table ([[graft.ext.KMeans]] `fit`

@@ -72,8 +72,10 @@ object StreamingIngest {
     * checkpoint-stable — a replayed batch reuses its id and absorbs as
     * 'NC', giving effectively-once semantics on top of the file source's
     * exactly-once offsets) and runs `Historizer.mergeInto`, the same merge
-    * and target writer as the batch pipeline. Per-trigger write cost is
-    * O(buckets the micro-batch touches), not O(target).
+    * and target writer as the batch pipeline. It starts through
+    * [[MicroBatch.sink]]; the keyed merge absorbs a replay, so it needs
+    * no stamp. Per-trigger write cost is O(buckets the micro-batch
+    * touches), not O(target).
     *
     * The micro-batch is read once per trigger: `foreachBatch` hands over a
     * plan that every action re-runs (listing and parsing the batch's
@@ -83,15 +85,9 @@ object StreamingIngest {
       checkpointDir: String, conf: Scd2Config = Scd2Config(),
       clock: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    landing.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val loadKey = batchId + 1L
-        Historizer.mergeInto(store, targetName, Historizer.batch(
-          batch.withColumn("load_key", lit(loadKey)), conf.copy(loadKey = loadKey)), clock())
-        ()
-      }
-      .start()
+    MicroBatch.sink(landing, checkpointDir, trigger) { (batch, batchId) =>
+      val loadKey = batchId + 1L
+      Historizer.mergeInto(store, targetName, Historizer.batch(
+        batch.withColumn("load_key", lit(loadKey)), conf.copy(loadKey = loadKey)), clock())
+    }
 }

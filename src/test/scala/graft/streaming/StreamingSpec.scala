@@ -278,12 +278,15 @@ class StreamingSpec extends SparkSpec {
     try {
       docs.addData(rows.take(3): _*)
       q.processAllAvailable()
-      // batch 2 re-delivers doc 1 alongside new docs — ledgered away
-      docs.addData(rows.drop(3) :+ rows.head: _*)
+      // batch 2 re-delivers doc 1 alongside new docs — ledgered away —
+      // and carries doc 4 twice, which must count once
+      docs.addData(rows.drop(3) ++ Seq(rows.head, rows(3)): _*)
       q.processAllAvailable()
     } finally q.stop()
-    val got = store.read("scores")
+    val scored = store.read("scores")
       .select(col("doc_id"), col("n_bigrams"), col("kn_ppm")).collect()
+    assert(scored.length === 5) // one row per doc
+    val got = scored
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // prefix law: batch-1 docs score as batch KN over rows 1-3; batch-2
     // docs as batch KN over all rows, restricted to their ids
